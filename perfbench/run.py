@@ -32,6 +32,11 @@ ROW_COPIES = 4       # lineitem replicas in the etl_rows row-stream fixture
 HEAP = "2g"
 SETUPS = 3           # set-ups per run; setup_s is their median
 RUN_DEADLINE_S = 170  # the whole run, build excluded
+# Cold-pass and warm-pass seconds of each workload on a 4-core box. They turn
+# --seconds into a fixed number of warm passes. A count that followed the
+# clock would drop a warm pass whenever the cold pass ran slow, and as the
+# first warm passes still carry JIT work, the warm means would jump with it.
+PACE = {"analytics": (8.0, 3.5), "llm_pipeline": (16.5, 5.8), "etl_rows": (10.5, 3.6)}
 JDK17_OPENS = [f"--add-opens=java.base/{p}=ALL-UNNAMED" for p in (
     "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io", "java.net",
     "java.nio", "java.util", "java.util.concurrent", "java.util.concurrent.atomic",
@@ -133,7 +138,7 @@ def run_jvm(args, classes, jars, data, run_dir, cores, deadline):
     cmd = ["java", *JDK17_OPENS, "-XX:-UsePerfData", f"-Xms{HEAP}", f"-Xmx{HEAP}", f"-Djava.io.tmpdir={run_dir}/tmp",
            "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
            "-cp", f"{jars}/*:{classes}", "perfbench.PerfBench",
-           f"workload={args.workload}", f"seed={args.seed}", f"seconds={args.seconds}",
+           f"workload={args.workload}", f"seed={args.seed}", f"warm={warm_passes(args)}",
            f"trace={args.trace}", f"data={data}", f"out={run_dir}", f"cores={cores}",
            f"setups={SETUPS}"]
     proc = subprocess.Popen(cmd, cwd=run_dir, env=env, stdout=subprocess.PIPE,
@@ -165,6 +170,11 @@ def run_jvm(args, classes, jars, data, run_dir, cores, deadline):
         return json.load(f), sched_errors[0]
 
 
+def warm_passes(args):
+    cold, warm = PACE[args.workload]
+    return max(2, round((args.seconds - cold) / warm))
+
+
 def quantile(xs, q):
     return statistics.quantiles(xs, n=100, method="inclusive")[q - 1]
 
@@ -184,10 +194,13 @@ def main():
     jars = spark_jars()
     classes, commit = build(root, build_dir, jars)
     data = fixture(build_dir)
-    # One core stays free for the JIT, GC and driver threads: on a 4-core box
-    # local[3] ran faster than local[4] (see README.md).
+    # Spark's task threads get half the cores. The JIT compiler threads use
+    # more CPU than the tasks here (a warm llm_pipeline pass: tasks about
+    # 2 s, JIT 7-13 s, process 13-20 s), and with a core each they no longer
+    # queue behind the tasks: same times, about half the spread of local[3]
+    # on a 4-core box (see README.md).
     nproc = len(os.sched_getaffinity(0))
-    cores = max(1, nproc - 1)
+    cores = max(1, nproc // 2)
     run_dir = os.path.join(build_dir, f"run-{os.getpid()}")
     shutil.rmtree(run_dir, ignore_errors=True)
     ticks0, load0 = cpu_ticks(), os.getloadavg()[0]
@@ -204,18 +217,27 @@ def main():
     for o in sorted(res["ops"], key=lambda o: -o["cold_s"]):
         print(f"perfbench: op {o['name']} cold_s={o['cold_s']:.3f} warm_s={o['warm_s']:.3f} "
               f"compile_s={o['compile_s']:.3f}", file=sys.stderr)
+    # Per warm pass: the JIT compiler threads' share of the process CPU and
+    # the codegen compiles show how far the JVM still is from steady state.
+    print(f"perfbench: warm passes wall_s={[round(x, 3) for x in res['warm_s']]} "
+          f"cpu_s={[round(x, 2) for x in res['warm_cpu_s']]} jit_s={[round(x, 2) for x in res['warm_jit_s']]} "
+          f"codegen_compiles={res['warm_compiles']}", file=sys.stderr)
     for f in res["errors"]:
         print(f"perfbench: FAILED {f['op']}: {f['error']}", file=sys.stderr)
     for f in failures:
         print(f"perfbench: FAILED check {f}", file=sys.stderr)
 
     out_rows = sum(o["rows"] for o in res["outputs"])
-    warm_s = statistics.median(res["warm_s"])
-    op_ms = res["warm_op_ms"]
+    # Warm figures are means over the warm passes, not medians: the JIT
+    # compiler threads finish the cold pass's work during the first warm
+    # passes, and which pass their CPU lands on varies from run to run. The
+    # sum over all warm passes counts that work once however it falls.
+    warm_s = statistics.fmean(res["warm_s"])
+    op_ms = res["warm_op_ms"]  # per operation, its mean over the warm passes
     print(f"perfbench: workload={args.workload} seed={args.seed} trace={args.trace} "
           f"nproc={nproc} spark_cores={cores} heap={HEAP} jvm={res['jvm']} spark={res['spark']} "
           f"source={commit} sf={SF} warm_passes={len(res['warm_s'])} "
-          f"measured_s={res['measured_s']:.1f} op_samples={len(op_ms)} attempted={res['attempted']} "
+          f"measured_s={res['measured_s']:.1f} ops={len(op_ms)} attempted={res['attempted']} "
           f"failed={failed} failed_frac={failed / res['attempted']:.4f} "
           f"scheduler_errors={sched_errors} steal_frac={env['steal_frac']:.4f} load1={env['load1']:.2f} "
           f"wall_s={time.time() - started:.1f}")
@@ -226,7 +248,7 @@ def main():
             "warm_s": (warm_s, "s"),
             "op_p50_ms": (statistics.median(op_ms), "ms"),
             "op_p90_ms": (quantile(op_ms, 90), "ms"),
-            "cpu_s": (statistics.median(res["warm_cpu_s"]), "s"),
+            "cpu_s": (statistics.fmean(res["warm_cpu_s"]), "s"),
             "rows_per_s": ((out_rows + statistics.median(res["warm_stream_rows"])) / warm_s,
                            "rows/s"),
             "heap_peak_mb": (res["heap_peak_mb"], "MB"),

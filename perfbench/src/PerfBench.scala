@@ -27,7 +27,7 @@ import graft.sources.ParquetRowReader
   * the DuckDB comparison. Writes `result.json` into the run directory.
   *
   * Usage: perfbench.PerfBench key=value ... with the keys workload, seed,
-  * seconds, trace (0|1), data, out, cores, setups.
+  * warm (the number of warm passes), trace (0|1), data, out, cores, setups.
   */
 object PerfBench {
 
@@ -298,7 +298,7 @@ object PerfBench {
     val opt = args.map { a => val i = a.indexOf('='); a.take(i) -> a.drop(i + 1) }.toMap
     val workload = opt("workload")
     val seed = opt("seed").toLong
-    val seconds = opt("seconds").toDouble
+    val warmCount = opt("warm").toInt
     val traced = opt("trace") == "1"
     val data = opt("data")
     val out = opt("out")
@@ -374,16 +374,10 @@ object PerfBench {
 
     val start = System.nanoTime()
     val cold = pass("cold", traced)
-    val warm = Seq.newBuilder[Pass]
-    var nWarm = 0
-    val minWarm = if (traced) 4 else 2
-    while (nWarm < minWarm || ((System.nanoTime() - start) / 1e9 < seconds && nWarm < 200)) {
-      // The traced run alternates traced and untraced warm passes, so the
-      // tracing overhead is measured inside one JVM.
-      warm += pass(s"warm$nWarm", traced && nWarm % 2 == 0)
-      nWarm += 1
-    }
-    val warmPasses = warm.result()
+    // The traced run alternates traced and untraced warm passes, so the
+    // tracing overhead is measured inside one JVM.
+    val warmPasses = (0 until (if (traced) math.max(warmCount, 4) else warmCount))
+      .map(i => pass(s"warm$i", traced && i % 2 == 0))
     val measuredS = (System.nanoTime() - start) / 1e9
 
     // ---- traced extras: pivot cost and kernel microbench ----------------
@@ -446,7 +440,10 @@ object PerfBench {
       "cold_s" -> cold.wall,
       "warm_s" -> untracedWarm.map(_.wall),
       "warm_cpu_s" -> untracedWarm.map(_.layers("cpu_ns") / 1e9),
-      "warm_op_ms" -> untracedWarm.flatMap(_.timings.values.map(_.totalNs / 1e6)),
+      "warm_jit_s" -> untracedWarm.map(_.layers("jit_ms") / 1e3),
+      "warm_compiles" -> untracedWarm.map(_.layers("compiles")),
+      "warm_op_ms" -> ops.map(o => untracedWarm.map(_.timings(o.name).totalNs / 1e6).sum /
+        untracedWarm.size),
       "warm_stream_rows" -> untracedWarm.map(_.timings.values.map(_.rows).sum),
       "heap_peak_mb" -> heapPeakMb,
       "jvm" -> System.getProperty("java.vm.version"),
