@@ -1,22 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // the engine's own Catalyst extensions (as-of strategy + rules)
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Let AQE size reduce-side tasks by bytes, not by default parallelism:
-      // tiny shuffles coalesce to few full tasks (same knob that avoids
-      // 200-empty-task stages at 100 TB).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     // The "No Partition Defined for Window operation" warning is pinned
     // benign by PlanMetricsSpec (bounded-frame inventory; PLANS.md round 8)
     // and would otherwise dominate the bench tail — hundreds of lines that

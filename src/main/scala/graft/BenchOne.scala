@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local micro-bench: time ONE query N times in a single JVM/session.
   * Usage: graft.BenchOne <queryName> <sfDir> [n=3]. Complements Bench (the
   * driver's whole-suite run) for per-query plan iteration — run-to-run
@@ -12,23 +10,13 @@ object BenchOne {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val n = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SPARK_GRAFT_SHUFFLE_PARTITIONS: size reduce-side partitions to the
     // scale factor (the 100 TB sizing rule — a fixed 32 means per-task
     // hash-relation builds grow with the corpus; q36's shuffle_hash build
     // side exceeded task memory at the sf100x decade). Defaults to cpus,
     // the gate-SF contract.
-    val shufP = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // the engine's own Catalyst extensions (as-of strategy + rules)
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", shufP)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", LocalSession.cpus))
     val fn = SparkEntry.queries(name)
     // SPARK_GRAFT_WARMUP=<query>[,<query>...]: run DIFFERENT queries once,
     // untimed and in order, before timing the target. Suite-cold budgets

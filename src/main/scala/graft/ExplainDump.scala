@@ -1,14 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dump `.explain("formatted")` for named queries to files — the plan
   * evidence the optimization rounds commit under plans/rNN/. Usage:
   *   graft.ExplainDump <outDir> <suffix> <query>[,<query>...] [sfDir]
-  * Writes <outDir>/<query>_<suffix>.txt per query. Session config matches
-  * Bench (same master/shuffle width/extensions) so the dumped plan is the
-  * plan the bench actually runs.
+  * Writes <outDir>/<query>_<suffix>.txt per query. The session is Bench's
+  * ([[LocalSession]]), so the dumped plan is the plan the bench actually
+  * runs.
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
@@ -16,16 +15,7 @@ object ExplainDump {
     val suffix = args(1)
     val names = args(2).split(',').map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     // Warm any upstream memoized state first so the dumped plan is the
     // steady-state one (a layout query's first call plans the BUILD; its
     // standing plan reads the memo).

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Split one query's per-run cost into driver phases — construction
   * (imperative body + analysis), optimization, physical planning, and
   * execution — to tell plan-walk overhead from real work. Usage:
@@ -12,16 +10,7 @@ object PhaseProbe {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val n = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     val fn = SparkEntry.queries(name)
     for (ws <- sys.env.get("SPARK_GRAFT_WARMUP").toSeq;
          w <- ws.split(',').map(_.trim) if w.nonEmpty && w != name;

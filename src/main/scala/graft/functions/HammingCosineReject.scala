@@ -1,17 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftShims}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Fused per-bucket ingest DECISION kernel for the nightly media family
-  * (q221/q225/q226): scan ONE packed bucket (ids ascending; id-major
-  * `words`-long signatures; id-major fixed-`dim` embeddings) and return
-  * TRUE as soon as any entry with id < `idBound` sits within Hamming
+  * (q221/q225/q226): the [[HammingCosineScan]] of ONE packed bucket,
+  * returning TRUE as soon as any entry with id < `idBound` sits within Hamming
   * `slack` of the query signature AND at exact rounded cosine ≥
   * `threshold` of the query embedding — i.e. "does a neighbor that
   * rejects this arrival exist in this bucket?". FALSE when none does;
@@ -39,11 +36,8 @@ import org.apache.spark.sql.types._
   *
   * Numeric contract — identical to the join-row form it replaces
   * (mirrored by MediaIncrementalSpec/MediaIncrementalFamilySpec's
-  * single-node references): Hamming is bit_count over the XOR of the raw
-  * signature words; cosine accumulates dot and both norms in index order
-  * with double precision and combines as dot/(sqrt·sqrt) — exactly
-  * [[CosineSimilarity]]; the decision compares Spark's round(x, 4)
-  * (BigDecimal HALF_UP) against `threshold`. A cheap `raw ≥ threshold −
+  * single-node references): the scan's Hamming and cosine; the decision
+  * compares round4(cos) against `threshold`. A cheap `raw ≥ threshold −
   * 1e-4` guard skips the BigDecimal for candidates that cannot reach the
   * threshold after rounding (round4 moves a value by < 5e-5).
   */
@@ -51,131 +45,33 @@ case class HammingCosineReject(
     ids: Expression, sigs: Expression, embs: Expression,
     qsig: Expression, qemb: Expression, idBound: Expression,
     words: Int, slack: Int, dim: Int, threshold: Double)
-    extends Expression with ExpectsInputTypes {
+    extends HammingCosineScan {
+  import HammingCosineScan.{round4, round4Code, ScanStep}
 
   require(words > 0 && slack >= 0 && dim > 0, "words, slack, dim must be positive")
 
-  override def children: Seq[Expression] = Seq(ids, sigs, embs, qsig, qemb, idBound)
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(LongType), ArrayType(LongType), ArrayType(FloatType),
-      ArrayType(LongType), ArrayType(FloatType), LongType)
+  override protected def extra: Seq[Expression] = Seq(idBound)
+  override protected def extraTypes: Seq[DataType] = Seq(LongType)
   override def dataType: DataType = BooleanType
-  override def nullable: Boolean = true
   override def prettyName: String = "graft_hamming_cosine_reject"
 
-  private def round4(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
-
-  override def eval(input: InternalRow): Any = {
-    val a = ids.eval(input)
-    val b = sigs.eval(input)
-    val c = embs.eval(input)
-    val d = qsig.eval(input)
-    val e = qemb.eval(input)
-    val f = idBound.eval(input)
-    if (a == null || b == null || c == null || d == null || e == null || f == null)
-      return null
-    val idsA = a.asInstanceOf[ArrayData]
-    val sigsA = b.asInstanceOf[ArrayData]
-    val embsA = c.asInstanceOf[ArrayData]
-    val qsigA = d.asInstanceOf[ArrayData]
-    val qembA = e.asInstanceOf[ArrayData]
-    val bound = f.asInstanceOf[Long]
-    val n = math.min(idsA.numElements(),
-      math.min(sigsA.numElements() / words, embsA.numElements() / dim))
-    val qw = new Array[Long](words)
-    var w = 0
-    while (w < words) { qw(w) = qsigA.getLong(w); w += 1 }
-    val qd = new Array[Double](dim)
-    val qn = math.min(qembA.numElements(), dim)
-    var i = 0
-    while (i < qn) { qd(i) = qembA.getFloat(i).toDouble; i += 1 }
-    var eIdx = 0
-    while (eIdx < n && idsA.getLong(eIdx) < bound) {
-      var h = 0; var k = 0; val soff = eIdx * words
-      while (k < words) {
-        h += java.lang.Long.bitCount(sigsA.getLong(soff + k) ^ qw(k)); k += 1
-      }
-      if (h <= slack) {
-        var dot = 0.0; var nx = 0.0; var ny = 0.0
-        var j = 0; val eoff = eIdx * dim
-        while (j < qn) {
-          val xv = qd(j)
-          val yv = embsA.getFloat(eoff + j).toDouble
-          dot += xv * yv; nx += xv * xv; ny += yv * yv
-          j += 1
-        }
-        val raw = dot / (math.sqrt(nx) * math.sqrt(ny))
-        if (raw >= threshold - 1e-4 && round4(raw) >= threshold) return true
-      }
-      eIdx += 1
-    }
-    false
+  override protected def step(extraValues: Seq[Any]): Step = new Step {
+    private val bound = extraValues.head.asInstanceOf[Long]
+    private var hit = false
+    override def continue(ids: ArrayData, e: Int): Boolean = !hit && ids.getLong(e) < bound
+    def admit(ids: ArrayData, e: Int, raw: Double): Unit =
+      if (raw >= threshold - 1e-4 && round4(raw) >= threshold) hit = true
+    def result: Any = hit
   }
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val gens = children.map(_.genCode(ctx))
-    val Seq(idsG, sigsG, embsG, qsigG, qembG, boundG) = gens
-    val n = ctx.freshName("n"); val qw = ctx.freshName("qw")
-    val qd = ctx.freshName("qd"); val qn = ctx.freshName("qn")
-    val k = ctx.freshName("k"); val eIdx = ctx.freshName("e")
-    val h = ctx.freshName("h"); val soff = ctx.freshName("soff")
-    val eoff = ctx.freshName("eoff"); val j = ctx.freshName("j")
-    val dot = ctx.freshName("dot"); val nx = ctx.freshName("nx")
-    val ny = ctx.freshName("ny"); val raw = ctx.freshName("raw")
+  override protected def genStep(ctx: CodegenContext, ev: ExprCode, ids: String, e: String,
+      raw: String, extraValues: Seq[ExprCode]): ScanStep = {
     val hit = ctx.freshName("hit")
-    val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-    val thr = threshold
-    ev.copy(code =
-      code"""
-        ${idsG.code}
-        ${sigsG.code}
-        ${embsG.code}
-        ${qsigG.code}
-        ${qembG.code}
-        ${boundG.code}
-        boolean ${ev.isNull} = true;
-        boolean ${ev.value} = false;
-        if (!${idsG.isNull} && !${sigsG.isNull} && !${embsG.isNull} &&
-            !${qsigG.isNull} && !${qembG.isNull} && !${boundG.isNull}) {
-          ${ev.isNull} = false;
-          int $n = java.lang.Math.min(${idsG.value}.numElements(),
-            java.lang.Math.min(${sigsG.value}.numElements() / $words,
-              ${embsG.value}.numElements() / $dim));
-          long[] $qw = new long[$words];
-          for (int $k = 0; $k < $words; $k++) $qw[$k] = ${qsigG.value}.getLong($k);
-          int $qn = java.lang.Math.min(${qembG.value}.numElements(), $dim);
-          double[] $qd = new double[$dim];
-          for (int $k = 0; $k < $qn; $k++) $qd[$k] = (double) ${qembG.value}.getFloat($k);
-          boolean $hit = false;
-          for (int $eIdx = 0;
-               !$hit && $eIdx < $n && ${idsG.value}.getLong($eIdx) < ${boundG.value};
-               $eIdx++) {
-            int $h = 0; int $soff = $eIdx * $words;
-            for (int $k = 0; $k < $words; $k++) {
-              $h += java.lang.Long.bitCount(${sigsG.value}.getLong($soff + $k) ^ $qw[$k]);
-            }
-            if ($h <= $slack) {
-              double $dot = 0.0, $nx = 0.0, $ny = 0.0;
-              int $eoff = $eIdx * $dim;
-              for (int $j = 0; $j < $qn; $j++) {
-                double $xv = $qd[$j];
-                double $yv = (double) ${embsG.value}.getFloat($eoff + $j);
-                $dot += $xv * $yv; $nx += $xv * $xv; $ny += $yv * $yv;
-              }
-              double $raw = $dot / (java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny));
-              if ($raw >= $thr - 1e-4 &&
-                  java.math.BigDecimal.valueOf($raw)
-                    .setScale(4, java.math.RoundingMode.HALF_UP)
-                    .doubleValue() >= $thr) {
-                $hit = true;
-              }
-            }
-          }
-          ${ev.value} = $hit;
-        }
-      """)
+    ScanStep(
+      init = s"boolean $hit = false;",
+      guard = s"!$hit && $ids.getLong($e) < ${extraValues.head.value}",
+      admit = s"if ($raw >= $threshold - 1e-4 && ${round4Code(raw)} >= $threshold) $hit = true;",
+      finish = s"${ev.isNull} = false; ${ev.value} = $hit;")
   }
 
   override protected def withNewChildrenInternal(

@@ -1,21 +1,16 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftShims}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Fused per-bucket retrieval kernel for the cross-modal family
-  * (q220/q224/q231): scan ONE packed bucket (ids ascending; id-major
-  * 256-bit signatures; id-major fixed-`dim` embeddings), admit entries at
-  * Hamming ≤ `slack`, score the admitted entries with EXACT cosine against
-  * the query embedding, and return the running maximum by
-  * (round4(cos) desc, id asc) as a (img_id, cos) struct — null when no
-  * entry is admitted.
+  * (q220/q224/q231): the [[HammingCosineScan]] of ONE packed bucket
+  * (256-bit signatures), returning the running maximum of the admitted
+  * entries by (round4(cos) desc, id asc) as an (img_id, cos) struct —
+  * null when no entry is admitted.
   *
   * Why fused: the shortlist form of this kernel (round-14 intermediate)
   * made candidate FORMATION cheap — 3.04 G Hamming evals in 2.4 s at
@@ -29,155 +24,59 @@ import org.apache.spark.sql.types._
   * shortlist had to argue an eviction-loss tail; a running max has none.
   *
   * Numeric contract (mirrored by CrossModalSpec/CrossModalIncrementalSpec
-  * single-node references): cosine accumulates dot and both norms in index
-  * order with double precision and combines as dot/(sqrt·sqrt) — exactly
-  * [[CosineSimilarity]]; rounding is Spark's round(x, 4) on doubles
-  * (BigDecimal.valueOf → setScale(4, HALF_UP)); comparison is on the
-  * ROUNDED value with ascending-id scan order so the strict `>` update
-  * keeps the LOWEST id among rounded ties. A cheap `raw > best − 1e-4`
-  * guard skips the BigDecimal for candidates that cannot reach the current
-  * best after rounding (round4 moves a value by < 5e-5).
+  * single-node references): the scan's Hamming and cosine; comparison is
+  * on the ROUNDED value with ascending-id scan order, so the strict `>`
+  * update keeps the LOWEST id among rounded ties. A cheap `raw > best −
+  * 1e-4` guard skips the BigDecimal for candidates that cannot reach the
+  * current best after rounding (round4 moves a value by < 5e-5).
   */
 case class HammingCosineTop1(
     ids: Expression, sigs: Expression, embs: Expression,
     qsig: Expression, qemb: Expression,
     words: Int, slack: Int, dim: Int)
-    extends Expression with ExpectsInputTypes {
+    extends HammingCosineScan {
+  import HammingCosineScan.{round4, round4Code, ScanStep}
 
   require(words > 0 && slack >= 0 && dim > 0, "words, slack, dim must be positive")
 
-  override def children: Seq[Expression] = Seq(ids, sigs, embs, qsig, qemb)
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(LongType), ArrayType(LongType), ArrayType(FloatType),
-      ArrayType(LongType), ArrayType(FloatType))
+  override protected def extra: Seq[Expression] = Nil
+  override protected def extraTypes: Seq[DataType] = Nil
   override def dataType: DataType = StructType(Seq(
     StructField("img_id", LongType, nullable = false),
     StructField("cos", DoubleType, nullable = false)))
-  override def nullable: Boolean = true
   override def prettyName: String = "graft_hamming_cosine_top1"
 
-  private def round4(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
-
-  override def eval(input: InternalRow): Any = {
-    val a = ids.eval(input)
-    val b = sigs.eval(input)
-    val c = embs.eval(input)
-    val d = qsig.eval(input)
-    val e = qemb.eval(input)
-    if (a == null || b == null || c == null || d == null || e == null) return null
-    val idsA = a.asInstanceOf[ArrayData]
-    val sigsA = b.asInstanceOf[ArrayData]
-    val embsA = c.asInstanceOf[ArrayData]
-    val qsigA = d.asInstanceOf[ArrayData]
-    val qembA = e.asInstanceOf[ArrayData]
-    val n = math.min(idsA.numElements(),
-      math.min(sigsA.numElements() / words, embsA.numElements() / dim))
-    val qw = new Array[Long](words)
-    var w = 0
-    while (w < words) { qw(w) = qsigA.getLong(w); w += 1 }
-    val qd = new Array[Double](dim)
-    val qn = math.min(qembA.numElements(), dim)
-    var i = 0
-    while (i < qn) { qd(i) = qembA.getFloat(i).toDouble; i += 1 }
-    var found = false
-    var bestId = 0L
-    var bestCos = Double.NegativeInfinity
-    var eIdx = 0
-    while (eIdx < n) {
-      var h = 0; var k = 0; val soff = eIdx * words
-      while (k < words) {
-        h += java.lang.Long.bitCount(sigsA.getLong(soff + k) ^ qw(k)); k += 1
+  override protected def step(extraValues: Seq[Any]): Step = new Step {
+    private var found = false
+    private var bestId = 0L
+    private var bestCos = Double.NegativeInfinity
+    def admit(ids: ArrayData, e: Int, raw: Double): Unit =
+      if (!found || raw > bestCos - 1e-4) {
+        val r = round4(raw)
+        if (!found || r > bestCos) { found = true; bestCos = r; bestId = ids.getLong(e) }
       }
-      if (h <= slack) {
-        var dot = 0.0; var nx = 0.0; var ny = 0.0
-        var j = 0; val eoff = eIdx * dim
-        while (j < qn) {
-          val xv = qd(j)
-          val yv = embsA.getFloat(eoff + j).toDouble
-          dot += xv * yv; nx += xv * xv; ny += yv * yv
-          j += 1
-        }
-        val raw = dot / (math.sqrt(nx) * math.sqrt(ny))
-        if (!found || raw > bestCos - 1e-4) {
-          val r = round4(raw)
-          if (!found || r > bestCos) {
-            found = true; bestCos = r; bestId = idsA.getLong(eIdx)
-          }
-        }
-      }
-      eIdx += 1
-    }
-    if (!found) null
-    else new GenericInternalRow(Array[Any](bestId, bestCos))
+    def result: Any = if (found) new GenericInternalRow(Array[Any](bestId, bestCos)) else null
   }
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val gens = children.map(_.genCode(ctx))
-    val Seq(idsG, sigsG, embsG, qsigG, qembG) = gens
-    val n = ctx.freshName("n"); val qw = ctx.freshName("qw")
-    val qd = ctx.freshName("qd"); val qn = ctx.freshName("qn")
-    val k = ctx.freshName("k"); val eIdx = ctx.freshName("e")
-    val h = ctx.freshName("h"); val soff = ctx.freshName("soff")
-    val eoff = ctx.freshName("eoff"); val j = ctx.freshName("j")
-    val dot = ctx.freshName("dot"); val nx = ctx.freshName("nx")
-    val ny = ctx.freshName("ny"); val raw = ctx.freshName("raw")
-    val r = ctx.freshName("r"); val found = ctx.freshName("found")
+  override protected def genStep(ctx: CodegenContext, ev: ExprCode, ids: String, e: String,
+      raw: String, extraValues: Seq[ExprCode]): ScanStep = {
+    val found = ctx.freshName("found"); val r = ctx.freshName("r")
     val bestId = ctx.freshName("bestId"); val bestCos = ctx.freshName("bestCos")
-    val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-    val rowCls = classOf[GenericInternalRow].getName
-    ev.copy(code =
-      code"""
-        ${idsG.code}
-        ${sigsG.code}
-        ${embsG.code}
-        ${qsigG.code}
-        ${qembG.code}
-        boolean ${ev.isNull} = true;
-        InternalRow ${ev.value} = null;
-        if (!${idsG.isNull} && !${sigsG.isNull} && !${embsG.isNull} &&
-            !${qsigG.isNull} && !${qembG.isNull}) {
-          int $n = java.lang.Math.min(${idsG.value}.numElements(),
-            java.lang.Math.min(${sigsG.value}.numElements() / $words,
-              ${embsG.value}.numElements() / $dim));
-          long[] $qw = new long[$words];
-          for (int $k = 0; $k < $words; $k++) $qw[$k] = ${qsigG.value}.getLong($k);
-          int $qn = java.lang.Math.min(${qembG.value}.numElements(), $dim);
-          double[] $qd = new double[$dim];
-          for (int $k = 0; $k < $qn; $k++) $qd[$k] = (double) ${qembG.value}.getFloat($k);
-          boolean $found = false;
-          long $bestId = 0L;
-          double $bestCos = java.lang.Double.NEGATIVE_INFINITY;
-          for (int $eIdx = 0; $eIdx < $n; $eIdx++) {
-            int $h = 0; int $soff = $eIdx * $words;
-            for (int $k = 0; $k < $words; $k++) {
-              $h += java.lang.Long.bitCount(${sigsG.value}.getLong($soff + $k) ^ $qw[$k]);
-            }
-            if ($h <= $slack) {
-              double $dot = 0.0, $nx = 0.0, $ny = 0.0;
-              int $eoff = $eIdx * $dim;
-              for (int $j = 0; $j < $qn; $j++) {
-                double $xv = $qd[$j];
-                double $yv = (double) ${embsG.value}.getFloat($eoff + $j);
-                $dot += $xv * $yv; $nx += $xv * $xv; $ny += $yv * $yv;
-              }
-              double $raw = $dot / (java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny));
-              if (!$found || $raw > $bestCos - 1e-4) {
-                double $r = java.math.BigDecimal.valueOf($raw)
-                  .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue();
-                if (!$found || $r > $bestCos) {
-                  $found = true; $bestCos = $r; $bestId = ${idsG.value}.getLong($eIdx);
-                }
-              }
-            }
-          }
-          if ($found) {
-            ${ev.isNull} = false;
-            ${ev.value} = new $rowCls(new Object[]{$bestId, $bestCos});
-          }
-        }
-      """)
+    ScanStep(
+      init = s"""boolean $found = false;
+                |long $bestId = 0L;
+                |double $bestCos = java.lang.Double.NEGATIVE_INFINITY;""".stripMargin,
+      guard = "",
+      admit = s"""if (!$found || $raw > $bestCos - 1e-4) {
+                 |  double $r = ${round4Code(raw)};
+                 |  if (!$found || $r > $bestCos) {
+                 |    $found = true; $bestCos = $r; $bestId = $ids.getLong($e);
+                 |  }
+                 |}""".stripMargin,
+      finish = s"""if ($found) {
+                  |  ${ev.isNull} = false;
+                  |  ${ev.value} = new ${classOf[GenericInternalRow].getName}(new Object[]{$bestId, $bestCos});
+                  |}""".stripMargin)
   }
 
   override protected def withNewChildrenInternal(

@@ -203,44 +203,18 @@ object KMeansTrainer {
     Trained(cents, members, sumD2, iters)
   }
 
-  /** Squared L2 to every centroid as ONE literal-array expression: the
-    * k×dim model rides the plan as literals, so assignment is pure
-    * map-side compute — no centroid table, no crossJoin, no exchange.
-    * Shared by the trainer's per-superstep assignment and the serving
-    * side (q37/q127); same fixed fold order as [[d2]]. */
-  private def litD2s(emb: org.apache.spark.sql.Column,
-      cents: IndexedSeq[Array[Double]]): org.apache.spark.sql.Column =
-    array(cents.map { c =>
-      graft.dsl.foldSum(zip_with(emb, typedLit(c.toSeq),
-        (x, y) => (x.cast("double") - y) * (x.cast("double") - y)))
-    }: _*)
-
-  /** [[litD2s]] over a trained model — the serving-side entry point. */
-  def centroidD2s(emb: org.apache.spark.sql.Column, m: Trained): org.apache.spark.sql.Column =
-    litD2s(emb, m.centroids)
-
-  /** Nearest-centroid id — the vector's home IVF bucket, map-only.
-    * Ties break on the LOWEST centroid id, matching the trainer's
-    * min(struct(d2, cid)) contract. One fused codegen loop
-    * ([[graft.functions.NearestCentroid]]): the litD2s form built k
-    * interpreted `aggregate(zip_with(...))` columns per row (HOFs are
-    * CodegenFallback), which put an interpreted lambda walk in the hot
-    * path of every bucketed serving plan (q37/q127/q154/q185/q218). Same
-    * fold order and strict-`<` first-minimum rule, so assignments are
-    * bit-identical to the previous expression and to [[assignLocal]]. */
+  /** Nearest-centroid id — the vector's home IVF bucket, map-only. Ties
+    * break on the LOWEST centroid id, matching the trainer's
+    * min(struct(d2, cid)) contract: [[probeBuckets]] at nprobe = 1, so
+    * assignments are bit-identical to [[assignLocal]] (same fold order,
+    * strict-`<` first-minimum rule). */
   def coarseBucket(emb: org.apache.spark.sql.Column, m: Trained): org.apache.spark.sql.Column =
-    graft.functions.NearestCentroid(
-      emb, m.centroids.flatMap(_.toIndexedSeq), m.centroids.head.length)
+    probeBuckets(emb, m, 1).getItem(0)
 
   /** The `nprobe` nearest centroid ids ascending by (d2, cid) — the
     * multi-probe bucket list for query-side fan-out, map-only. One fused
-    * codegen loop ([[graft.functions.NearestCentroids]]): the previous
-    * litD2s → zip_with → array_sort → slice pipeline was interpreted end
-    * to end (HOFs are CodegenFallback) at k×dim lambda steps plus a
-    * k-struct sort per row — with k ∝ √N, an N^1.5 interpreted term that
-    * measured as the dominant cost of q220's sf1x warm pass at k = 224.
-    * Same d2 fold order and (d2, cid)-ascending tie rule: probe lists are
-    * identical to the previous expression (similarity suites unchanged). */
+    * codegen loop over the flat model as a one-cell two-level model
+    * ([[graft.functions.NearestCentroids]]). */
   def probeBuckets(emb: org.apache.spark.sql.Column, m: Trained, nprobe: Int): org.apache.spark.sql.Column =
     graft.functions.NearestCentroids(
       emb, m.centroids.flatMap(_.toIndexedSeq), m.centroids.head.length, nprobe)
@@ -297,13 +271,14 @@ object KMeansTrainer {
     c1 * m.k2 + assignLocal(v, m.sub(c1))
   }
 
-  /** Local parity twin of [[TwoLevelNearestCentroids]]: the `nprobe`
-    * nearest FINE cells through `p1`-probe L1 fan-out — top-p1 NON-EMPTY
-    * L1 cells by (d2, cid) ascending, then their children ranked by
-    * (d2, fineId) ascending (stride-k2 global ids). With p1 = nprobe = 1
-    * this is single fine assignment to the nearest non-empty cell
-    * (= [[assignLocal2]] whenever the nearest L1 cell is non-empty —
-    * empty cells index nothing, so serving skips them). */
+  /** Local parity twin of [[graft.functions.NearestCentroids]] over a
+    * two-level model: the `nprobe` nearest FINE cells through `p1`-probe
+    * L1 fan-out — top-p1 NON-EMPTY L1 cells by (d2, cid) ascending, then
+    * their children ranked by (d2, fineId) ascending (stride-k2 global
+    * ids). With p1 = nprobe = 1 this is single fine assignment to the
+    * nearest non-empty cell (= [[assignLocal2]] whenever the nearest L1
+    * cell is non-empty — empty cells index nothing, so serving skips
+    * them). */
   def probeLocal2(v: Array[Double], m: Trained2, p1: Int, nprobe: Int): IndexedSeq[Int] = {
     val cells = m.l1.centroids.indices
       .filter(c => m.sub(c).centroids.nonEmpty)
@@ -321,14 +296,14 @@ object KMeansTrainer {
   def fineProbeBuckets(
       emb: org.apache.spark.sql.Column, m: Trained2,
       p1: Int, nprobe: Int): org.apache.spark.sql.Column =
-    graft.functions.TwoLevelNearestCentroids(emb, m, p1, nprobe)
+    graft.functions.NearestCentroids(emb, m, p1, nprobe)
 
   /** Single FINE bucket assignment under a two-level model — the k ∝ N
     * twin of [[coarseBucket]] (nearest non-empty L1 cell's nearest child,
     * k1 + k2 evals per row instead of F). */
   def fineBucket(
       emb: org.apache.spark.sql.Column, m: Trained2): org.apache.spark.sql.Column =
-    graft.functions.TwoLevelNearestCentroids(emb, m, 1, 1).getItem(0)
+    fineProbeBuckets(emb, m, 1, 1).getItem(0)
 
   /** Single-node reference for [[trainTwoLevel]] — the SAME lockstep
     * semantics (one global Lloyd loop over all sub-models, one global

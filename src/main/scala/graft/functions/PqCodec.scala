@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
 
 /** The three PQ kernels — encode, query LUT, ADC score — as fused codegen
-  * expressions ([[NearestCentroid]]'s pattern applied to [[PqIndex]]).
+  * expressions ([[NearestCentroids]]'s pattern applied to [[PqIndex]]).
   *
   * The previous formulation built each of the M×K per-codeword distances as
   * its own `aggregate(zip_with(slice(emb,...), typedLit(codeword), ...))`
@@ -193,7 +193,9 @@ case class PqLut(child: Expression, books: IndexedSeq[Double],
 }
 
 /** ADC score: approx squared L2 = Σ_s lut(s)(code(s)) — the per-candidate
-  * hot loop of every PQ search (runs once per (vector, query) pair). */
+  * hot loop of every PQ search (runs once per (vector, query) pair). A
+  * code count other than the LUT's subspace count is an error, never a
+  * truncated sum. */
 case class PqAdc(left: Expression, right: Expression) extends BinaryExpression {
 
   override def dataType: DataType = DoubleType
@@ -209,7 +211,9 @@ case class PqAdc(left: Expression, right: Expression) extends BinaryExpression {
   override def nullSafeEval(lutAny: Any, codesAny: Any): Any = {
     val lut = lutAny.asInstanceOf[ArrayData]
     val codes = codesAny.asInstanceOf[ArrayData]
-    val n = math.min(lut.numElements(), codes.numElements())
+    val n = lut.numElements()
+    require(codes.numElements() == n,
+      s"$prettyName: lut has $n subspaces but codes has ${codes.numElements()}")
     var sum = 0.0
     var s = 0
     while (s < n) {
@@ -224,7 +228,11 @@ case class PqAdc(left: Expression, right: Expression) extends BinaryExpression {
       val n = ctx.freshName("n"); val s = ctx.freshName("s")
       val sum = ctx.freshName("sum")
       s"""
-         |int $n = java.lang.Math.min($lut.numElements(), $codes.numElements());
+         |int $n = $lut.numElements();
+         |if ($codes.numElements() != $n) {
+         |  throw new IllegalArgumentException("$prettyName: lut has " + $n +
+         |    " subspaces but codes has " + $codes.numElements());
+         |}
          |double $sum = 0.0;
          |for (int $s = 0; $s < $n; $s++) {
          |  $sum += $lut.getArray($s).getDouble($codes.getInt($s));

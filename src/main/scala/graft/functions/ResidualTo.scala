@@ -21,7 +21,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * Numeric contract — identical to the old expression element-for-element:
   * out(i) = emb(i).toDouble − cents(bucket·dim + i), the exact IEEE ops of
   * `x.cast("double") − y`. Accepts array<float> (the only production input)
-  * and array<double> for symmetry with [[PqEncode]]/[[PqLut]].
+  * and array<double> for symmetry with [[PqEncode]]/[[PqLut]]. An
+  * embedding whose length is not `dim` is an error, never a truncated
+  * residual.
   */
 case class ResidualTo(left: Expression, right: Expression,
     cents: IndexedSeq[Double], dim: Int) extends BinaryExpression {
@@ -47,10 +49,11 @@ case class ResidualTo(left: Expression, right: Expression,
   override def nullSafeEval(embAny: Any, bucketAny: Any): Any = {
     val x = embAny.asInstanceOf[ArrayData]
     val off = bucketAny.asInstanceOf[Int] * dim
-    val n = math.min(x.numElements(), dim)
-    val out = new Array[Double](n)
+    require(x.numElements() == dim,
+      s"$prettyName: embedding has ${x.numElements()} elements but the model dim is $dim")
+    val out = new Array[Double](dim)
     var i = 0
-    while (i < n) {
+    while (i < dim) {
       out(i) = (if (elemIsFloat) x.getFloat(i).toDouble else x.getDouble(i)) - flat(off + i)
       i += 1
     }
@@ -60,14 +63,17 @@ case class ResidualTo(left: Expression, right: Expression,
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val centsRef = ctx.addReferenceObj("cents", flat, "double[]")
     nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
+      val i = ctx.freshName("i")
       val off = ctx.freshName("off"); val out = ctx.freshName("out")
       val get = if (elemIsFloat) s"((double) $a.getFloat($i))" else s"$a.getDouble($i)"
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $dim);
+         |if ($a.numElements() != $dim) {
+         |  throw new IllegalArgumentException("$prettyName: embedding has " + $a.numElements() +
+         |    " elements but the model dim is $dim");
+         |}
          |int $off = $b * $dim;
-         |double[] $out = new double[$n];
-         |for (int $i = 0; $i < $n; $i++) {
+         |double[] $out = new double[$dim];
+         |for (int $i = 0; $i < $dim; $i++) {
          |  $out[$i] = $get - $centsRef[$off + $i];
          |}
          |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);

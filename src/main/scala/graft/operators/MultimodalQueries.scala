@@ -1536,9 +1536,9 @@ object MultimodalQueries {
     * four longs per pair side — still no vectors in the pair exchange.
     * Query-side fan-out is multi-probe (q37's convention)
     * because a matched pair at 0.707 need not share a nearest centroid —
-    * the probe count is MEASURED, not guessed (CrossModalKneeProbe sweep
-    * on the real corpora), and the sketch loses nothing on top (e2e ==
-    * block recall at every measured point). Blocking is the TWO-LEVEL
+    * the probe count is MEASURED, not guessed (the PLANS round 15 knee
+    * sweep on the real corpora), and the sketch loses nothing on top
+    * (e2e == block recall at every measured point). Blocking is the TWO-LEVEL
     * k ∝ N fine model ([[crossModalFineModel]], [[CrossModalFineProbes]]
     * — see those scaladocs for the measured knee and the regime's
     * intrinsic recall/volume exponent). */
@@ -1548,9 +1548,9 @@ object MultimodalQueries {
   /** L1 fan-out of the two-level fine probe ([[crossModalFineModel]]):
     * the query's [[CrossModalFineProbes]] fine probes are drawn from its
     * nearest p1 L1 cells' children. Measured with the fine-probe knee
-    * (CrossModalKneeProbe, PLANS round 15): at nprobe 16, p1 = 4 → 8 still
-    * gains recall (0.977 → 0.996 at sf0.1), p1 = 16 is flat (0.710 → 0.701
-    * at sf1x — noise); the knee is p1 ≈ nprobe/2. */
+    * (PLANS round 15): at nprobe 16, p1 = 4 → 8 still gains recall
+    * (0.977 → 0.996 at sf0.1), p1 = 16 is flat (0.710 → 0.701 at sf1x —
+    * noise); the knee is p1 ≈ nprobe/2. */
   private[graft] val CrossModalL1Probes = 8
 
   /** FINE probe count of the two-level blocking — the q220/q231 operating
@@ -1959,12 +1959,6 @@ object MultimodalQueries {
       prePartitioned = true)
   }
 
-  /** q220's retrieval tail alone (probes → fused scan → top-1) — exposed
-    * for CrossModalProbe's per-stage attribution. */
-  private[graft] def crossModalTop1Probe(t: graft.Tables): org.apache.spark.sql.DataFrame =
-    crossModalTop1(t, crossModalAudioProbes(t), crossModalImageIndex(t),
-      prePartitioned = true)
-
   private val xmodalLayoutCache = new graft.SessionCache[(String, String)]
 
   /** The NORMALIZED at-rest form of the probe frame: ONE row per query —
@@ -1976,7 +1970,7 @@ object MultimodalQueries {
     * sf100x, 50×) and carries only index state — vectors stay in the ONE
     * place vectors live (the modality embedding tables / session decode
     * checkpoints), the q146-codebook discipline applied to query state.
-    * Map-only: one [[graft.functions.TwoLevelNearestCentroids]] pass plus
+    * Map-only: one [[graft.functions.NearestCentroids]] pass plus
     * the four signature columns. */
   private[graft] def crossModalAudioProbesPacked(
       t: graft.Tables): org.apache.spark.sql.DataFrame = {

@@ -1,7 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the scan/join/exchange/aggregate skeleton of selected
   * queries' physical plans — the fast way to confirm pushdown, pruning, and
   * join strategy didn't regress. Run with the spark jars + compiled classes
@@ -9,10 +7,7 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession()
     val want: String => Boolean =
       if (args.isEmpty) _ => true else n => args.exists(n.contains)
     graft.SparkEntry.engineQueries.filter(q => want(q.name)).foreach { q =>

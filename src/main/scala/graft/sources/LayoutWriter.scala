@@ -143,9 +143,15 @@ object LayoutWriter {
     * across the driver's core counts; a production deployment sizes it
     * from ledger bytes / target file size (guide §6: 128 MB–1 GB files)
     * via spark.graft.audit.buckets — a data-derived number, never the
-    * executor count. */
-  def auditBuckets(spark: org.apache.spark.sql.SparkSession): Int =
-    spark.conf.getOption("spark.graft.audit.buckets").map(_.toInt).getOrElse(8)
+    * executor count. A value that is not a positive integer is an error
+    * naming the key. */
+  def auditBuckets(spark: org.apache.spark.sql.SparkSession): Int = {
+    val key = "spark.graft.audit.buckets"
+    spark.conf.getOption(key).fold(8) { v =>
+      v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"$key must be a positive integer, got '$v'"))
+    }
+  }
 
   /** Deterministic at-rest table name keyed on (tag, data dir, bucket
     * count): same artifact → same name, so re-runs and fresh sessions

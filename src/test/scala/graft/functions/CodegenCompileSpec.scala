@@ -58,9 +58,7 @@ class CodegenCompileSpec extends AnyFunSuite {
       row(cmsBytes, UTF8String.fromString("alpha"))),
     ("GreedyBpeTokens", GreedyBpeTokens(in(0, strArr)),
       row(sa("internationalization", "spark"))),
-    ("NearestCentroid", NearestCentroid(in(0, floatArr), cents, 4),
-      row(fa(0.5f, -0.25f, 1.5f, 0.75f))),
-    ("NearestCentroids", NearestCentroids(in(0, floatArr), cents, 4, 2),
+    ("NearestCentroids", NearestCentroids.flat(in(0, floatArr), cents, 4, 2),
       row(fa(0.5f, -0.25f, 1.5f, 0.75f))),
     ("CosineSimilarity", CosineSimilarity(in(0, floatArr), in(1, floatArr)),
       row(fa(1.0f, 2.0f, 3.0f), fa(-2.0f, 0.5f, 4.0f))),
@@ -70,7 +68,7 @@ class CodegenCompileSpec extends AnyFunSuite {
       row(123456789L, 987654321L)),
     ("HyperplaneSignature", HyperplaneSignature(in(0, floatArr), planes, 4),
       row(fa(0.5f, -0.25f, 1.5f, 0.75f))),
-    ("TwoLevelNearestCentroids", TwoLevelNearestCentroids(in(0, floatArr),
+    ("NearestCentroids/two-level", NearestCentroids(in(0, floatArr),
       // l1 = 2 cells x dim 4; sub = 3 children (2 in cell 0, 1 in cell 1)
       IndexedSeq(0.0, 0.0, 0.0, 0.0, 1.0, 1.0, 1.0, 1.0),
       IndexedSeq(0.1, 0.0, 0.0, 0.0, -0.1, 0.0, 0.2, 0.0, 1.0, 1.1, 0.9, 1.0),
@@ -107,7 +105,15 @@ class CodegenCompileSpec extends AnyFunSuite {
         new GenericArrayData(Array[Any](3L, -1L)),
         fa(0.5f, -0.25f, 1.5f, 0.75f, 1.0f, 2.0f, -0.5f, 0.25f),
         new GenericArrayData(Array[Any](5L)),
-        fa(0.4f, -0.3f, 1.4f, 0.8f))))
+        fa(0.4f, -0.3f, 1.4f, 0.8f))),
+    ("HammingCosineReject", HammingCosineReject(
+      in(0, ArrayType(LongType)), in(1, ArrayType(LongType)), in(2, floatArr),
+      in(3, ArrayType(LongType)), in(4, floatArr), in(5, LongType), 1, 40, 4, 0.9),
+      row(new GenericArrayData(Array[Any](7L, 9L)),
+        new GenericArrayData(Array[Any](3L, -1L)),
+        fa(0.5f, -0.25f, 1.5f, 0.75f, 1.0f, 2.0f, -0.5f, 0.25f),
+        new GenericArrayData(Array[Any](5L)),
+        fa(0.4f, -0.3f, 1.4f, 0.8f), 9L)))
 
   for ((name, expr, input) <- cases) {
     test(s"$name: generated code compiles and matches interpreted eval") {
@@ -129,11 +135,31 @@ class CodegenCompileSpec extends AnyFunSuite {
     val exprs = Seq[(String, Expression)](
       ("MinHashSignature", MinHashSignature(in(0, strArr))),
       ("CosineSimilarity", CosineSimilarity(in(0, floatArr), in(1, floatArr))),
-      ("NearestCentroids", NearestCentroids(in(0, floatArr), cents, 4, 2)))
+      ("NearestCentroids", NearestCentroids.flat(in(0, floatArr), cents, 4, 2)))
     val nullRow = row(null, null)
     for ((name, e) <- exprs) {
       val gen = GenerateUnsafeProjection.generate(Seq(e), subexpressionEliminationEnabled = false)
       assert(gen(nullRow).isNullAt(0), s"$name: null in must be null out")
+    }
+  }
+
+  test("length mismatches are errors on both paths, never a truncated result") {
+    val mismatched = Seq[(String, Expression, GenericInternalRow)](
+      ("PqAdc", PqAdc(
+        in(0, ArrayType(ArrayType(DoubleType))), in(1, ArrayType(IntegerType))),
+        row(new GenericArrayData(Array[Any](
+          new GenericArrayData(Array(0.25, 1.5, 2.0)),
+          new GenericArrayData(Array(3.0, 0.75, 0.1)))),
+          new GenericArrayData(Array[Any](1)))),
+      ("ResidualTo", ResidualTo(in(0, floatArr), in(1, IntegerType), cents, 4),
+        row(fa(0.5f, -0.25f, 1.5f), 2)))
+    for ((name, e, input) <- mismatched) {
+      val gen = GenerateUnsafeProjection.generate(Seq(e), subexpressionEliminationEnabled = false)
+      val interp = InterpretedUnsafeProjection.createProjection(Seq(e))
+      for ((path, p) <- Seq("codegen" -> gen, "interpreted" -> interp)) {
+        val err = intercept[IllegalArgumentException](p(input))
+        assert(err.getMessage.contains(e.prettyName), s"$name $path: ${err.getMessage}")
+      }
     }
   }
 }

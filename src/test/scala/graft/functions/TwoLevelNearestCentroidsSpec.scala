@@ -3,13 +3,16 @@ package graft.functions
 import graft.SharedSparkSpec
 import org.apache.spark.sql.functions._
 
-/** The two-level fine-probe kernel (q220/q231's k ∝ N blocking) must equal
-  * its local parity twin [[KMeansTrainer.probeLocal2]] on randomized
-  * two-level models (including EMPTY and under-filled cells) across a
-  * (p1, nprobe) grid, with interpreted eval == codegen; at p1 = nprobe = 1
-  * it must reduce to [[KMeansTrainer.assignLocal2]] whenever the nearest
-  * L1 cell is non-empty, and tie distances must keep the LOWER fine id
-  * regardless of which probed L1 cell contributed the entry. */
+/** [[NearestCentroids]] over two-level models (q220/q231's k ∝ N
+  * blocking) must equal its local parity twin [[KMeansTrainer.probeLocal2]]
+  * on randomized two-level models (including EMPTY and under-filled cells)
+  * across a (p1, nprobe) grid, with interpreted eval == codegen; at
+  * p1 = nprobe = 1 it must reduce to [[KMeansTrainer.assignLocal2]]
+  * whenever the nearest L1 cell is non-empty, and tie distances must keep
+  * the LOWER fine id regardless of which probed L1 cell contributed the
+  * entry. Over FLAT models (the one-cell lift behind coarseBucket and
+  * probeBuckets) it must equal [[KMeansTrainer.assignLocal]] at nprobe = 1
+  * and probeLocal2 on the lift, ties and nprobe > k included. */
 class TwoLevelNearestCentroidsSpec extends SharedSparkSpec {
   import KMeansTrainer.{Trained, Trained2}
 
@@ -36,7 +39,7 @@ class TwoLevelNearestCentroidsSpec extends SharedSparkSpec {
   private def run(m: Trained2, v: Seq[Float], p1: Int, nprobe: Int): Seq[Int] = {
     import spark.implicits._
     Seq(Tuple1(v)).toDF("embedding")
-      .select(TwoLevelNearestCentroids(col("embedding"), m, p1, nprobe).as("p"))
+      .select(NearestCentroids(col("embedding"), m, p1, nprobe).as("p"))
       .collect().head.getSeq[Int](0)
   }
 
@@ -110,7 +113,7 @@ class TwoLevelNearestCentroidsSpec extends SharedSparkSpec {
     val m = mkModel(rng, 4, 3, allowEmpty = true)
     val v = Array.fill(Dim)(rng.nextDouble() * 2 - 1)
     val vf = v.map(_.toFloat)
-    val interp = TwoLevelNearestCentroids(
+    val interp = NearestCentroids(
       Literal.create(vf, ArrayType(FloatType)),
       m.l1.centroids.flatMap(_.toIndexedSeq),
       m.sub.flatMap(_.centroids.flatMap(_.toIndexedSeq)),
@@ -118,5 +121,61 @@ class TwoLevelNearestCentroidsSpec extends SharedSparkSpec {
       m.k2, Dim, 2, 3).eval(null).asInstanceOf[ArrayData].toIntArray().toSeq
     assert(interp == run(m, vf.toSeq, 2, 3))
     assert(interp == KMeansTrainer.probeLocal2(v, m, 2, 3))
+  }
+
+  /** A flat model's one-cell lift, the form probeLocal2 reads. */
+  private def lift(m: Trained): Trained2 =
+    Trained2(Trained(IndexedSeq(new Array[Double](Dim)), IndexedSeq(1L), IndexedSeq(0.0), 1),
+      IndexedSeq(m), m.centroids.length, 1)
+
+  /** Flat kernel output: (codegen via a DataFrame, interpreted eval). */
+  private def runFlat(m: Trained, v: Array[Float], nprobe: Int): (Seq[Int], Seq[Int]) = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    import spark.implicits._
+    val cents = m.centroids.flatMap(_.toIndexedSeq)
+    val gen = Seq(Tuple1(v.toSeq)).toDF("embedding")
+      .select(NearestCentroids(col("embedding"), cents, Dim, nprobe).as("p"))
+      .collect().head.getSeq[Int](0)
+    val interp = NearestCentroids.flat(Literal.create(v, ArrayType(FloatType)), cents, Dim, nprobe)
+      .eval(null).asInstanceOf[ArrayData].toIntArray().toSeq
+    (gen, interp)
+  }
+
+  private def checkFlat(m: Trained, v: Array[Double], what: String): Unit = {
+    val k = m.centroids.length
+    for (nprobe <- Seq(1, 2, k, k + 3).distinct) {
+      val (gen, interp) = runFlat(m, v.map(_.toFloat), nprobe)
+      val expect = KMeansTrainer.probeLocal2(v, lift(m), 1, nprobe)
+      assert(gen == interp, s"$what nprobe=$nprobe: codegen=$gen interpreted=$interp")
+      assert(gen == expect, s"$what nprobe=$nprobe: got=$gen probeLocal2=$expect")
+      assert(gen.length == math.min(nprobe, k), s"$what nprobe=$nprobe: $gen")
+      if (nprobe == 1) assert(gen == Seq(KMeansTrainer.assignLocal(v, m)), s"$what")
+    }
+  }
+
+  test("flat models: codegen == interpreted == assignLocal (nprobe 1) == probeLocal2 on the lift") {
+    val rng = new scala.util.Random(53L)
+    for (trial <- 1 to 20) {
+      val k = 1 + rng.nextInt(6)
+      val m = Trained(IndexedSeq.fill(k)(Array.fill(Dim)(rng.nextDouble() * 2 - 1)),
+        IndexedSeq.fill(k)(1L), IndexedSeq.fill(k)(0.0), 1)
+      // Float-exact query so the kernel's float input is the reference's.
+      val v = Array.fill(Dim)((rng.nextDouble() * 2 - 1).toFloat.toDouble)
+      checkFlat(m, v, s"trial $trial k=$k")
+    }
+  }
+
+  test("flat models: equal distances keep the lower centroid id; NaN rows get the lowest ids") {
+    // Centroids 1 and 3 are copies of each other, 0 and 2 mirror them about
+    // the query: every distance ties pairwise.
+    val a = Array(1.0, 0.0, 0.0, 0.0); val b = Array(0.0, 1.0, 0.0, 0.0)
+    val m = Trained(IndexedSeq(a.map(-_), a, b.map(-_), a.clone()),
+      IndexedSeq.fill(4)(1L), IndexedSeq.fill(4)(0.0), 1)
+    checkFlat(m, Array(0.0, 0.0, 0.0, 0.0), "all-tie")
+    checkFlat(m, Array(0.5, 0.0, 0.0, 0.0), "pair-tie")
+    assert(runFlat(m, Array(0.5f, 0f, 0f, 0f), 3)._1 == Seq(1, 3, 2))
+    checkFlat(m, Array(Double.NaN, 0.0, 0.0, 0.0), "NaN")
   }
 }

@@ -150,4 +150,20 @@ class LayoutWriterSpec extends SharedSparkSpec {
       .agg(sum("value")).collect().head.getDouble(0)
     assert(math.abs(others - expected) < 1e-9)
   }
+
+  test("spark.graft.audit.buckets: default 8, a positive integer, else an error naming the key") {
+    val key = "spark.graft.audit.buckets"
+    val saved = spark.conf.getOption(key)
+    try {
+      spark.conf.unset(key)
+      assert(LayoutWriter.auditBuckets(spark) == 8)
+      spark.conf.set(key, "16")
+      assert(LayoutWriter.auditBuckets(spark) == 16)
+      for (bad <- Seq("abc", "0", "-1")) {
+        spark.conf.set(key, bad)
+        val e = intercept[IllegalArgumentException](LayoutWriter.auditBuckets(spark))
+        assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$bad'"), e.getMessage)
+      }
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }

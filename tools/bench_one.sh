@@ -4,15 +4,8 @@
 # derby metastore) land in /tmp, not the repo — gate reruns used to
 # deposit warehouse tables into /root/repo/spark-warehouse.
 set -e
+. "$(dirname "$0")/add_opens.sh"
 cd "$(mktemp -d /tmp/bench_one.XXXX)"
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
 java $ADD_OPENS -Xmx8g \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "/opt/spark/jars/*:/root/repo/target/scala-2.13/classes" \

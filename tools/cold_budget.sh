@@ -8,6 +8,7 @@
 # Usage: tools/cold_budget.sh [sf_dir] [n_passes] [out_json]
 set -e
 set -o pipefail
+. "$(dirname "$0")/add_opens.sh"
 cd /root/repo
 SF=${1:-/root/testdata/sf0.1}
 N=${2:-3}
@@ -22,14 +23,6 @@ if ! sbt -batch compile > "$COMPILE_LOG" 2>&1; then
   grep -E '^\[error\]' "$COMPILE_LOG" || tail -20 "$COMPILE_LOG"
   exit 1
 fi
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
 TMP=$(mktemp -d /tmp/cold_budget.XXXX)
 for i in $(seq 1 "$N"); do
   echo "[cold_budget] pass $i/$N (fresh JVM, cold-only) ..."

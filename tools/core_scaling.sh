@@ -11,6 +11,7 @@
 # Usage: tools/core_scaling.sh [out_tsv] [q1 q2 ...]
 set -e
 set -o pipefail
+. "$(dirname "$0")/add_opens.sh"
 cd /root/repo
 OUT=${1:-/tmp/core_scaling.tsv}
 shift || true
@@ -18,14 +19,6 @@ QUERIES=${@:-"q36_dedup_ngram_jaccard q47_tfidf q55_dedup_fuzzy \
 q68_salted_join q109_multimodal_pipeline q126_profile q135_video_frames \
 q153_crossdoc_spans q161_mad_outliers q175_ngram_novelty"}
 SF_DIR=${SF_DIR:-/root/repo/scaledata/sf1x}
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
 echo -e "query\tcpus\tcold_s\twarm_s" > "$OUT"
 for q in $QUERIES; do
   for cpus in 8 32; do

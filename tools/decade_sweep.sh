@@ -21,17 +21,10 @@
 #       DECADES="sf1x sf10x sf100x" to override the fixture list
 #       SAMPLES=3 fresh-JVM samples per cell (>= 3 for citable numbers)
 set -e
+. "$(dirname "$0")/add_opens.sh"
 cd /root/repo
 N=${1:-3}
 SAMPLES=${SAMPLES:-3}
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
 run() { # sf_dir xmx shuffle_partitions query
   echo "== $4 @ $1 (xmx=$2 shufP=$3, $SAMPLES samples x $N runs) =="
   local log rc s colds="" warms=""

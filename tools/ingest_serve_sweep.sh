@@ -12,16 +12,9 @@
 # stamps make cross-JVM reuse safe).
 # Usage: tools/ingest_serve_sweep.sh [n_runs=3]
 set -e
+. "$(dirname "$0")/add_opens.sh"
 cd /root/repo
 N=${1:-3}
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
 run() { # label sf_dir xmx shufP query serve_flag n
   echo "== $1: $5 @ $2 (serve=$6, n=$7) =="
   SPARK_GRAFT_SHUFFLE_PARTITIONS=$4 SPARK_GRAFT_SERVE_LAYOUTS=$6 \

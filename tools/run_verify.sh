@@ -3,6 +3,7 @@
 # hash-compare every query against its DuckDB oracle (emulates the driver).
 # Usage: tools/run_verify.sh [sf_dir] [out_dir] [query_filter]
 set -e
+. "$(dirname "$0")/add_opens.sh"
 cd /root/repo
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/graft_verify}
@@ -15,14 +16,6 @@ if ! sbt -batch compile > "$COMPILE_LOG" 2>&1; then
   exit 1
 fi
 rm -rf "$OUT"
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
 java $ADD_OPENS -Xmx8g \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "/opt/spark/jars/*:target/scala-2.13/classes" \

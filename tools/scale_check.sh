@@ -7,6 +7,7 @@
 # Usage: tools/scale_check.sh [out_tsv] [q1 q2 ...]
 set -e
 set -o pipefail
+. "$(dirname "$0")/add_opens.sh"
 cd /root/repo
 OUT=${1:-/tmp/scale_check.tsv}
 shift || true
@@ -14,14 +15,6 @@ QUERIES=${@:-"q36_dedup_ngram_jaccard q104_cluster_profile q122_pagerank \
 q151_setsim_prefix q153_crossdoc_spans q180_basket_lift \
 q187_postings_stream_ingest q211_cdc_stream_apply q214_curation_e2e \
 q215_curation_incremental"}
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
 echo -e "query\tsf\tcold_s\twarm_s" > "$OUT"
 # The two fixture dirs to compare (low then high); override for other
 # decades, e.g. SF_DIRS="scaledata/sf1x scaledata/sf10x" for the second.
