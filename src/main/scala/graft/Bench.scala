@@ -1,8 +1,23 @@
 package graft
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
 object Bench {
+  /** One query's timed run: wall seconds, the error if it threw, and the
+    * codegen classes compiled while it ran (count and compile ms — the
+    * JVM-wide counters, exact because the passes run one query at a time). */
+  final case class Run(name: String, secs: Double, err: Option[String],
+      compiles: Long, compileMs: Double)
+
+  /** Classes compiled and compile ns so far in this JVM. */
+  private def codegenCounters(): (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = LocalSession()
+    val (setupC0, setupNs0) = codegenCounters()
     // The "No Partition Defined for Window operation" warning is pinned
     // benign by PlanMetricsSpec (bounded-frame inventory; PLANS.md round 8)
     // and would otherwise dominate the bench tail — hundreds of lines that
@@ -40,6 +55,7 @@ object Bench {
         df.select(xxhash64(df.columns.toIndexedSeq.map(col): _*)).count()
       }
     }
+    val (setupC1, setupNs1) = codegenCounters()
     // (time, error): a failing query must be VISIBLE in the bench JSON, not
     // silently contribute a bogus duration. Sorted name order: Map iteration
     // order is per-JVM nondeterministic, which made cross-round per-query
@@ -48,17 +64,20 @@ object Bench {
     // Optional substring filter for local iteration (unset in driver runs):
     // SPARK_GRAFT_ONLY=q108 times just the matching queries.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
-    def pass(): Seq[(String, Double, Option[String])] =
+    def pass(): Seq[Run] =
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (name, _) => only.forall(name.contains) }
         .map { case (name, fn) =>
+        val (c0, ns0) = codegenCounters()
         val t0 = System.nanoTime()
         val err =
           try { fn(spark, sfDir).count(); None }
           catch { case e: Throwable =>
             Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}")
           }
-        (name, (System.nanoTime() - t0) / 1e9, err)
+        val secs = (System.nanoTime() - t0) / 1e9
+        val (c1, ns1) = codegenCounters()
+        Run(name, secs, err, c1 - c0, (ns1 - ns0) / 1e6)
       }
     // Pass 1 (headline `value`/`queries`): first execution — includes each
     // query's one-time plan+codegen compile, the honest single-shot number.
@@ -73,14 +92,14 @@ object Bench {
     // JVMs and only the first-execution numbers matter, so paying ~2×warm
     // per pass would triple its wall-clock for data it discards.
     val coldOnly = sys.env.get("SPARK_GRAFT_COLD_ONLY").contains("1")
-    val warm =
-      if (coldOnly) results
-      else {
-        val (w1, w2) = (pass(), pass())
-        w1.zip(w2).map { case ((n, t1, e1), (_, t2, e2)) =>
-          (n, math.min(t1, t2), e1.orElse(e2))
+    val warmPasses = if (coldOnly) Nil else Seq(pass(), pass())
+    val warm = warmPasses match {
+      case Seq(w1, w2) =>
+        w1.zip(w2).map { case (r1, r2) =>
+          r1.copy(secs = math.min(r1.secs, r2.secs), err = r1.err.orElse(r2.err))
         }
-      }
+      case _ => results
+    }
     // Layout audit (untimed, after the passes so the memoized layouts
     // already exist): the data-skipping layouts must actually SKIP at bench
     // scale, asserted from runtime scan metrics — a layout regression (e.g.
@@ -113,12 +132,12 @@ object Bench {
     def jstr(s: String): String =
       "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"").replaceAll("[\\n\\r\\t]", " ") + "\""
     def jnum(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    def qmap(rs: Seq[(String, Double, Option[String])], key: String => String): String =
-      rs.map { case (k, v, _) => jstr(key(k)) + ":" + jnum(v) }.mkString("{", ",", "}")
-    val errs = results.collect { case (k, _, Some(e)) => jstr(k) + ":" + jstr(e) }
+    def qmap(rs: Seq[Run], value: Run => String): String =
+      rs.map(r => jstr(r.name) + ":" + value(r)).mkString("{", ",", "}")
+    val errs = results.collect { case Run(k, _, Some(e), _, _) => jstr(k) + ":" + jstr(e) }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val totalWarm = warm.map(_._2).sum
+    val total = results.map(_.secs).sum
+    val totalWarm = warm.map(_.secs).sum
     // Full per-query detail (cold + warm + errors, full query names) goes to a
     // sidecar file; the stdout line stays compact because the driver keeps only
     // the LAST 2000 chars of output and parses the JSON line out of that tail —
@@ -127,11 +146,23 @@ object Bench {
     // artifact: r10 committed a budget-pass BENCH_DETAIL.json whose
     // "queries_warm" silently duplicated the cold times. Now cold-only
     // output carries "cold_only":true and NO warm fields at all.
+    // Codegen per query: classes compiled and compile ms in the cold pass
+    // ("compiles"/"compile_ms") and in each warm pass ("*_warm", one map per
+    // pass, not a min), plus the untimed warmup's ("*_setup"). The warmup
+    // and cold counts sum to the classes one pass needs.
+    def compiles(rs: Seq[Run]): String = qmap(rs, _.compiles.toString)
+    def compileMs(rs: Seq[Run]): String = qmap(rs, r => jnum(r.compileMs))
+    val codegenFields =
+      s""""compiles_setup":${setupC1 - setupC0},"compile_ms_setup":${jnum((setupNs1 - setupNs0) / 1e6)},""" +
+        s""""compiles":${compiles(results)},"compile_ms":${compileMs(results)}""" +
+        (if (coldOnly) ""
+         else s""","compiles_warm":${warmPasses.map(compiles).mkString("[", ",", "]")},""" +
+           s""""compile_ms_warm":${warmPasses.map(compileMs).mkString("[", ",", "]")}""")
     val warmFields =
       if (coldOnly) s""""cold_only":true"""
-      else s""""total_warm":$totalWarm,"queries_warm":${qmap(warm, identity)}"""
+      else s""""total_warm":$totalWarm,"queries_warm":${qmap(warm, r => jnum(r.secs))}"""
     val detail =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${qmap(results, identity)},$warmFields,"errors":$errs,"failed":${results.count(_._3.isDefined)},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${qmap(results, r => jnum(r.secs))},$warmFields,"errors":$errs,"failed":${results.count(_.err.isDefined)},$codegenFields,"sf":"$sfDir"}"""
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_DETAIL.json"),
       detail.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     // Compact keys: "q36_dedup_ngram_jaccard" -> "q36"; 2-decimal times
@@ -151,13 +182,13 @@ object Bench {
     // array costs ~4.5, which holds ~250 queries. Full names + 3-decimal
     // cold/warm/error detail stay in BENCH_DETAIL.json.
     def jnum1(v: Double): String = "%.1f".formatLocal(java.util.Locale.ROOT, v)
-    def qarr(rs: Seq[(String, Double, Option[String])]): String =
-      rs.map { case (_, v, _) => jnum1(v) }.mkString("[", ",", "]")
+    def qarr(rs: Seq[Run]): String =
+      rs.map(r => jnum1(r.secs)).mkString("[", ",", "]")
     val lineWarm =
       if (coldOnly) s""""cold_only":true"""
       else s""""total_warm":${jnum2(totalWarm)}"""
     val line =
-      s"""{"metric":"total","value":${jnum2(total)},"unit":"sec","order":"sorted(name)","queries":${qarr(results)},$lineWarm,"failed":${results.count(_._3.isDefined)},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${jnum2(total)},"unit":"sec","order":"sorted(name)","queries":${qarr(results)},$lineWarm,"failed":${results.count(_.err.isDefined)},"sf":"$sfDir"}"""
     require(line.length < 1500, s"bench line too long for driver tail: ${line.length}")
     // Stop Spark BEFORE printing: the driver parses the JSON from the tail of
     // captured output, so nothing (executor shutdown logs included) may print

@@ -40,10 +40,15 @@ object BenchOne {
       println("=== optimized ===\n" + qe.optimizedPlan.toString.take(8000))
       println("=== executed ===\n" + qe.executedPlan.toString.take(8000))
     }
+    // Each run also prints the codegen classes it compiled: a warm run that
+    // still compiles is losing its classes from Spark's codegen cache.
+    def compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     (1 to n).foreach { i =>
+      val c0 = compiles
       val t0 = System.nanoTime()
       val rows = fn(spark, sfDir).count()
-      println(f"$name run$i: ${(System.nanoTime() - t0) / 1e9}%.2fs ($rows rows)")
+      val secs = (System.nanoTime() - t0) / 1e9
+      println(f"$name run$i: $secs%.2fs ($rows rows, ${compiles - c0} codegen compiles)")
     }
     spark.stop()
   }

@@ -232,7 +232,7 @@ object Multimodal {
       }
     } catch {
       case _: java.util.zip.DataFormatException => return None
-    }
+    } finally inf.reset()
     if (got != raw.length) return None
     val out = new Array[Byte](stride * h)
     var y = 0
@@ -478,7 +478,9 @@ object Multimodal {
     * synthetic-media paths at 256-pixel payloads — one pair per executor
     * thread, `reset()` per record, instead of allocate+end per record.
     * Thread-confined by construction (a task never shares its thread
-    * mid-record), so this is invisible to results. */
+    * mid-record), so this is invisible to results. Each use also resets
+    * the codec when it is done, so an idle thread does not keep its last
+    * record's input array reachable. */
   private val deflScratch = new ThreadLocal[java.util.zip.Deflater] {
     override def initialValue() = new java.util.zip.Deflater()
   }
@@ -518,6 +520,7 @@ object Multimodal {
       if (clen == comp.length) comp = java.util.Arrays.copyOf(comp, comp.length * 2)
       clen += defl.deflate(comp, clen, comp.length - clen)
     }
+    defl.reset()
     val out = java.nio.ByteBuffer.allocate(8 + 25 + (12 + clen) + 12)
     out.put(Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte))
     val crc = crcScratch.get()

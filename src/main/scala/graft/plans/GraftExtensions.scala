@@ -3,6 +3,8 @@ package graft.plans
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions.{
   Abs, And, Cast, Expression, Length, LessThanOrEqual, Levenshtein, Subtract}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 import org.apache.spark.sql.types.NumericType
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -14,12 +16,17 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * `AsOfJoin.register` / `experimental.extraOptimizations` are the
   * per-session dev hooks the tests and ad-hoc sessions use. Same objects
   * are injected either way.
+  *
+  * Every engine session passes through here, so this is also where the
+  * JVM-wide codegen class cache gets its size (see
+  * [[GraftExtensions.CodegenCacheEntries]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    GraftExtensions.codegenCacheSized
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
     ext.injectOptimizerRule(_ => LevenshteinLengthGuard)
     // The engine's fixed-arity codegen expressions, SQL-callable — the same
@@ -40,6 +47,35 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     fn("graft_simhash_sig", 1)(a => graft.functions.SimHashSignature(a(0)))
     fn("graft_morton", 2)(a => graft.functions.MortonCode(a(0), a(1)))
     fn("graft_cms_estimate", 2)(a => graft.functions.CmsEstimateCount(a(0), a(1)))
+  }
+}
+
+object GraftExtensions {
+
+  /** Entries of Spark's compiled-class cache (`CodeGenerator`'s LRU over
+    * generated sources, one per JVM). Spark sizes it once, from the static
+    * conf `spark.sql.codegen.cache.maxEntries` (default 100), when
+    * `CodeGenerator` is first initialised. The engine's working set is far
+    * larger: one pass of the 233 `SparkEntry` queries at sf0.01 compiles
+    * 2,707 classes (`compiles_setup` plus the cold `compiles` of Bench's
+    * BENCH_DETAIL.json, 4 cores), and the q215/q216 curation funnels alone
+    * compile about 300. With 100 entries every warm pass evicted and
+    * recompiled almost all of them, and the JIT then compiled the fresh
+    * bytecode again. 4096 holds the whole suite with about 1.5x headroom.
+    * An entry costs about 25 KB of heap (source text, class and its
+    * loader): perfbench's `llm_pipeline` heap peak rose 6.5 MB when its
+    * 359 classes stopped being evicted. */
+  val CodegenCacheEntries = 4096
+
+  /** Initialises `CodeGenerator` under a conf carrying the size above. Only
+    * the first initialisation in the JVM reads the conf, so this counts only
+    * if no codegen ran before the first engine session was built; otherwise
+    * the cache keeps the size it was created with. */
+  private lazy val codegenCacheSized: Unit = {
+    val conf = new SQLConf
+    conf.setConf(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES, CodegenCacheEntries)
+    SQLConf.withExistingConf(conf)(CodeGenerator.compileTime)
+    ()
   }
 }
 

@@ -24,6 +24,11 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CodegenCompileSpec extends AnyFunSuite {
 
+  // Build the shared session before any codegen, as every engine JVM does:
+  // the session's extensions size Spark's codegen class cache, which is
+  // fixed by the JVM's first use of codegen.
+  graft.SharedSparkSpec.session
+
   private val floatArr = ArrayType(FloatType)
   private val strArr = ArrayType(StringType)
 
