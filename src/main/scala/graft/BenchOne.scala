@@ -1,9 +1,14 @@
 package graft
 
+import graft.sources.ParquetRowReader
+import org.apache.spark.sql.SparkSession
+
 /** Local micro-bench: time ONE query N times in a single JVM/session.
   * Usage: graft.BenchOne <queryName> <sfDir> [n=3]. Complements Bench (the
   * driver's whole-suite run) for per-query plan iteration — run-to-run
   * variance on a busy box makes single whole-suite timings unreliable.
+  * A name of the form `rows:<table>:<col,col,...>` times a `getRows` stream
+  * over `<sfDir>/<table>.parquet` instead: every row pivoted to its map.
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
@@ -17,6 +22,29 @@ object BenchOne {
     // the gate-SF contract.
     val spark = LocalSession(
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", LocalSession.cpus))
+    name.split(":", 3) match {
+      case Array("rows", table, cols) =>
+        val columns = cols.split(',').map(_.trim).filter(_.nonEmpty).toSeq
+        timeRows(spark, name, s"$sfDir/$table.parquet", columns, n)
+      case _ =>
+        timeQuery(spark, name, sfDir, n)
+    }
+    spark.stop()
+  }
+
+  private def timeRows(spark: SparkSession, name: String,
+      path: String, cols: Seq[String], n: Int): Unit =
+    (1 to n).foreach { i =>
+      val t0 = System.nanoTime()
+      val it = ParquetRowReader.fromPath(spark, path).getRows(cols)
+      var rows = 0L
+      while (it.hasNext) { it.next(); rows += 1 }
+      val secs = (System.nanoTime() - t0) / 1e9
+      println(f"$name run$i: $secs%.2fs ($rows rows, ${rows / secs}%.0f rows/s)")
+    }
+
+  private def timeQuery(spark: SparkSession, name: String,
+      sfDir: String, n: Int): Unit = {
     val fn = SparkEntry.queries(name)
     // SPARK_GRAFT_WARMUP=<query>[,<query>...]: run DIFFERENT queries once,
     // untimed and in order, before timing the target. Suite-cold budgets
@@ -50,6 +78,5 @@ object BenchOne {
       val secs = (System.nanoTime() - t0) / 1e9
       println(f"$name run$i: $secs%.2fs ($rows rows, ${compiles - c0} codegen compiles)")
     }
-    spark.stop()
   }
 }

@@ -127,7 +127,10 @@ object GraphQueries {
       // count (the table is about to be scanned 8 more times by the
       // supersteps), ~24 B/row, guide-§6 file-size target, floored at
       // the session width so the superstep probes keep full parallelism.
-      val e = degEdges(t).count()
+      // Every edge joins exactly one degree row, so the count is that of
+      // the checkpointed pairs the write reads anyway: the degree join and
+      // aggregation run once, in the write.
+      val e = edgePairs(t).count()
       val width = math.max(
         t.spark.sessionState.conf.numShufflePartitions,
         math.min(4096L, e * 24L / (256L << 20) + 1L).toInt)

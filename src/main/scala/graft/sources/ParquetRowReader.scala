@@ -2,7 +2,9 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import scala.collection.MapFactory
+import scala.collection.immutable.{AbstractMap, VectorMap}
 import scala.jdk.CollectionConverters._
 
 /** Row-streaming parity module: the faithful — and corrected — port of the
@@ -27,8 +29,14 @@ import scala.jdk.CollectionConverters._
   * shared, repeatedly-overwritten dict per batch (`records = [{}] * n`,
   * reader.py:55) — an aliasing bug its own degenerate test data hides. This
   * port implements the *documented* semantics (README.md:47-50): lossless,
-  * per-row-distinct maps. Nested structs lower to Map, arrays to Seq —
-  * the analogue of Arrow's `.as_py()` lowering (reader.py:64).
+  * per-row-distinct maps. Each row is an immutable `Map[String, Any]` that
+  * iterates its keys in column order, as the reference's Python dicts do; a
+  * projection that names a column twice keeps one key holding the last
+  * occurrence's value. Nested structs lower to such maps, arrays to `List`,
+  * map columns to `Map` — the analogue of Arrow's `.as_py()` lowering
+  * (reader.py:64). The pivot is planned once per stream from the
+  * projection's schema: every row of the stream shares its column names
+  * and name→position index.
   *
   * Memory contract: `getRows` streams via `toLocalIterator()` — one
   * partition resident in the driver at a time, the direct analogue of the
@@ -44,14 +52,15 @@ final class ParquetRowReader private (val df: DataFrame) {
   /** Projected columns (pushed down to the parquet scan), lazily. */
   def getRows(columns: Seq[String]): Iterator[Map[String, Any]] = {
     val proj = if (columns.isEmpty) df else df.select(columns.map(col): _*)
-    proj.toLocalIterator().asScala.map(ParquetRowReader.toMap)
+    proj.toLocalIterator().asScala.map(new ParquetRowReader.RowPivot(proj.schema))
   }
 
   /** Distributed consumption: run `f` over row-maps on the executors —
     * the 100 TB-scale replacement for driver-side iteration. */
   def foreachRows(columns: Seq[String])(f: Map[String, Any] => Unit): Unit = {
     val proj = if (columns.isEmpty) df else df.select(columns.map(col): _*)
-    proj.foreachPartition { (it: Iterator[Row]) => it.map(ParquetRowReader.toMap).foreach(f) }
+    val pivot = new ParquetRowReader.RowPivot(proj.schema)
+    proj.foreachPartition { (it: Iterator[Row]) => it.map(pivot).foreach(f) }
   }
 }
 
@@ -113,16 +122,95 @@ object ParquetRowReader {
   /** Reference `ParquetReader(dataset)`: wrap a caller-built source. */
   def fromDataFrame(df: DataFrame): ParquetRowReader = new ParquetRowReader(df)
 
-  /** Row → Map with deep lowering: struct → Map, array → Seq (the `.as_py()`
-    * analogue, reference reader.py:64). */
-  def toMap(r: Row): Map[String, Any] =
-    r.schema.fieldNames.iterator.zipWithIndex
-      .map { case (n, i) => n -> lower(r.get(i)) }.toMap
+  /** The columnar→row pivot of one schema, planned once per stream: the
+    * distinct column names in order, the position each name reads (the last
+    * field of that name, as a dict assigned in field order keeps), and for
+    * each one the lowering its type needs — struct → row map (through the
+    * struct's own pivot), array → `List`, map → `Map`; every other type
+    * passes through as the `Row` holds it. */
+  private[sources] final class RowPivot(schema: StructType)
+      extends (Row => Map[String, Any]) with Serializable {
+    private val columns = new Columns(schema.fieldNames.distinct)
+    private val source = columns.names.map(schema.fieldNames.lastIndexOf(_))
+    // null where the value passes through unchanged
+    private val lowerings: Array[Any => Any] =
+      source.map(i => RowPivot.lowering(schema(i).dataType))
 
-  private def lower(v: Any): Any = v match {
-    case r: Row                        => toMap(r)
-    case s: scala.collection.Seq[_]    => s.iterator.map(lower).toList
-    case m: scala.collection.Map[_, _] => m.iterator.map { case (k, x) => k -> lower(x) }.toMap
-    case x                             => x
+    def apply(r: Row): Map[String, Any] = {
+      val values = new Array[Any](source.length)
+      var i = 0
+      while (i < values.length) {
+        val v = r.get(source(i))
+        val lower = lowerings(i)
+        values(i) = if (v == null || lower == null) v else lower(v)
+        i += 1
+      }
+      new RowMap(columns, values)
+    }
+  }
+
+  private object RowPivot {
+    def lowering(t: DataType): Any => Any = t match {
+      case s: StructType =>
+        val pivot = new RowPivot(s)
+        v => pivot(v.asInstanceOf[Row])
+      case ArrayType(et, _) =>
+        val lower = elementLowering(et)
+        v => v.asInstanceOf[scala.collection.Seq[Any]].iterator.map(lower).toList
+      case MapType(_, vt, _) =>
+        val lower = elementLowering(vt)
+        v => v.asInstanceOf[scala.collection.Map[Any, Any]].iterator
+          .map { case (k, x) => k -> lower(x) }.toMap
+      case _ => null
+    }
+
+    private def elementLowering(t: DataType): Any => Any = {
+      val lower = lowering(t)
+      if (lower == null) identity else x => if (x == null) null else lower(x)
+    }
+  }
+
+  /** The key side shared by every row map of one stream. */
+  private final class Columns(val names: Array[String]) extends Serializable {
+    private val index: Map[String, Int] = names.iterator.zipWithIndex.toMap
+    def indexOf(name: String): Int = index.getOrElse(name, -1)
+  }
+
+  /** One row: an immutable map over the row's `values`, in column order.
+    * Lookups and `size` are O(1); equality and `hashCode` are the
+    * collection library's, so they agree with any `Map` of the same
+    * entries. `updated`, `removed` and the derived collections (`filter`,
+    * `map`, `++`, ...) build a `VectorMap`, which keeps the column order. */
+  private final class RowMap(columns: Columns, values: Array[Any])
+      extends AbstractMap[String, Any] with Serializable {
+    override def size: Int = values.length
+    override def knownSize: Int = values.length
+
+    def get(key: String): Option[Any] = {
+      val i = columns.indexOf(key)
+      if (i < 0) None else Some(values(i))
+    }
+    override def apply(key: String): Any = {
+      val i = columns.indexOf(key)
+      if (i < 0) default(key) else values(i)
+    }
+    override def getOrElse[V1 >: Any](key: String, default: => V1): V1 = {
+      val i = columns.indexOf(key)
+      if (i < 0) default else values(i)
+    }
+    override def contains(key: String): Boolean = columns.indexOf(key) >= 0
+
+    def iterator: Iterator[(String, Any)] = columns.names.iterator.zip(values.iterator)
+    override def keysIterator: Iterator[String] = columns.names.iterator
+    override def valuesIterator: Iterator[Any] = values.iterator
+    override def foreachEntry[U](f: (String, Any) => U): Unit = {
+      var i = 0
+      while (i < values.length) { f(columns.names(i), values(i)); i += 1 }
+    }
+
+    def updated[V1 >: Any](key: String, value: V1): Map[String, V1] =
+      VectorMap.from[String, V1](iterator).updated(key, value)
+    def removed(key: String): Map[String, Any] = VectorMap.from(iterator).removed(key)
+    override def mapFactory: MapFactory[Map] = VectorMap
   }
 }

@@ -1,5 +1,6 @@
 #!/bin/bash
 # Micro-bench one query: tools/bench_one.sh <query> [sf_dir] [n]
+# or one getRows stream:  tools/bench_one.sh rows:<table>:<col,col,...> [sf_dir] [n]
 # Runs the JVM in a scratch cwd so layout writes (spark-warehouse,
 # derby metastore) land in /tmp, not the repo — gate reruns used to
 # deposit warehouse tables into /root/repo/spark-warehouse.
