@@ -4,11 +4,12 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 object Bench {
-  /** One query's timed run: wall seconds, the error if it threw, and the
+  /** One query's timed run: wall seconds, the error if it threw, the
     * codegen classes compiled while it ran (count and compile ms — the
-    * JVM-wide counters, exact because the passes run one query at a time). */
+    * JVM-wide counters, exact because the passes run one query at a time)
+    * and the session artifacts it built (the [[Artifacts]] ledger's diff). */
   final case class Run(name: String, secs: Double, err: Option[String],
-      compiles: Long, compileMs: Double)
+      compiles: Long, compileMs: Double, artifacts: Map[String, Artifacts.Charge])
 
   /** Classes compiled and compile ns so far in this JVM. */
   private def codegenCounters(): (Long, Long) =
@@ -69,6 +70,7 @@ object Bench {
         .filter { case (name, _) => only.forall(name.contains) }
         .map { case (name, fn) =>
         val (c0, ns0) = codegenCounters()
+        val a0 = Artifacts.charges
         val t0 = System.nanoTime()
         val err =
           try { fn(spark, sfDir).count(); None }
@@ -77,7 +79,11 @@ object Bench {
           }
         val secs = (System.nanoTime() - t0) / 1e9
         val (c1, ns1) = codegenCounters()
-        Run(name, secs, err, c1 - c0, (ns1 - ns0) / 1e6)
+        val built = Artifacts.charges.collect {
+          case (a, c) if !a0.get(a).contains(c) =>
+            a -> (c - a0.getOrElse(a, Artifacts.Charge(0, 0)))
+        }
+        Run(name, secs, err, c1 - c0, (ns1 - ns0) / 1e6, built)
       }
     // Pass 1 (headline `value`/`queries`): first execution — includes each
     // query's one-time plan+codegen compile, the honest single-shot number.
@@ -134,7 +140,7 @@ object Bench {
     def jnum(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     def qmap(rs: Seq[Run], value: Run => String): String =
       rs.map(r => jstr(r.name) + ":" + value(r)).mkString("{", ",", "}")
-    val errs = results.collect { case Run(k, _, Some(e), _, _) => jstr(k) + ":" + jstr(e) }
+    val errs = results.collect { case Run(k, _, Some(e), _, _, _) => jstr(k) + ":" + jstr(e) }
       .mkString("{", ",", "}")
     val total = results.map(_.secs).sum
     val totalWarm = warm.map(_.secs).sum
@@ -158,11 +164,24 @@ object Bench {
         (if (coldOnly) ""
          else s""","compiles_warm":${warmPasses.map(compiles).mkString("[", ",", "]")},""" +
            s""""compile_ms_warm":${warmPasses.map(compileMs).mkString("[", ",", "]")}""")
+    // Artifact builds per query (queries that built nothing are left out):
+    // build ms per artifact name in the cold pass ("artifacts"), and the
+    // number of builds in the cold pass ("artifact_builds") and in each
+    // warm pass ("artifact_builds_warm").
+    def building(rs: Seq[Run]): Seq[Run] = rs.filter(_.artifacts.nonEmpty)
+    def builds(rs: Seq[Run]): String =
+      qmap(building(rs), _.artifacts.values.map(_.builds).sum.toString)
+    val artifactFields =
+      s""""artifacts":${qmap(building(results), r =>
+        r.artifacts.toSeq.sortBy(_._1).map { case (a, c) => jstr(a) + ":" + jnum(c.ms) }
+          .mkString("{", ",", "}"))},"artifact_builds":${builds(results)}""" +
+        (if (coldOnly) ""
+         else s""","artifact_builds_warm":${warmPasses.map(builds).mkString("[", ",", "]")}""")
     val warmFields =
       if (coldOnly) s""""cold_only":true"""
       else s""""total_warm":$totalWarm,"queries_warm":${qmap(warm, r => jnum(r.secs))}"""
     val detail =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${qmap(results, r => jnum(r.secs))},$warmFields,"errors":$errs,"failed":${results.count(_.err.isDefined)},$codegenFields,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${qmap(results, r => jnum(r.secs))},$warmFields,"errors":$errs,"failed":${results.count(_.err.isDefined)},$codegenFields,$artifactFields,"sf":"$sfDir"}"""
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_DETAIL.json"),
       detail.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     // Compact keys: "q36_dedup_ngram_jaccard" -> "q36"; 2-decimal times

@@ -42,12 +42,10 @@ final class Tables(val spark: SparkSession, val dir: String) {
 }
 
 object Tables {
-  private val instances = new SessionCache[Tables]
-
   /** Memoized Tables per (session, data dir): all queries of a run share one
     * set of resolved DataFrames instead of re-reading parquet footers. */
   def forPath(spark: SparkSession, dir: String): Tables =
-    instances.get(spark, dir)(new Tables(spark, dir))
+    Artifacts.get(spark, dir, "tables")(new Tables(spark, dir))
 
   /** Normalize the event-time column to `TimestampType` across every
     * encoding the driver testdata has shipped with:
@@ -77,39 +75,6 @@ object Tables {
     df.schema.fields.collect {
       case f if f.dataType == org.apache.spark.sql.types.TimestampNTZType => f.name
     }.foldLeft(df)((d, c) => normalizeTs(d, c))
-}
-
-/** Amortization cache keyed by (SparkSession, data dir) — the shared reuse
-  * surface for expensive once-per-session artifacts: resolved tables,
-  * bucketed layouts (q94), dedup cluster labels (q60/q87/q104), trained
-  * k-means centroids (q37). At 100 TB these artifacts are the difference
-  * between "a pipeline" and "every query re-runs the upstream".
-  *
-  * Entries of STOPPED sessions are swept on every access: a process that
-  * cycles sessions (test suites, notebook restarts) would otherwise pin
-  * every dead session — and everything its cached DataFrames reference —
-  * for the JVM's lifetime. computeIfAbsent gives per-key once-only
-  * semantics under the concurrent access pattern of Verify (4-way). */
-final class SessionCache[V] {
-  private val m =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), V]()
-
-  def get(spark: SparkSession, dir: String)(mk: => V): V = {
-    m.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    m.computeIfAbsent((spark, dir), _ => mk)
-  }
-
-  /** Evict one entry, returning it so the caller can release resources it
-    * pins (unpersist a cached frame, drop a checkpoint). Used where a
-    * standing artifact is superseded within a session — e.g. a spec forcing
-    * a rebuild from a different source, or dir turnover in a sweep. */
-  def remove(spark: SparkSession, dir: String): Option[V] =
-    Option(m.remove((spark, dir)))
-
-  /** Whether an entry exists — a SPEC probe (e.g. "did this run train a
-    * model?" = "did the model cache fill?"), never a control-flow check. */
-  def contains(spark: SparkSession, dir: String): Boolean =
-    m.containsKey((spark, dir))
 }
 
 /** Shared helpers enforcing the determinism rules of SURVEY.md §7.4. */

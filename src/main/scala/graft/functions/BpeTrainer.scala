@@ -146,13 +146,11 @@ object BpeTrainer {
   def vocabOf(merges: Seq[Merge], singles: Seq[String]): Seq[String] =
     (singles ++ merges.map(m => m.left + m.right)).distinct
 
-  private val trainedCache = new graft.SessionCache[Seq[Merge]]
-
   /** Merges learned from a data dir's `documents` table, memoized per
     * (session, dir, budget) — training is the expensive upstream, its
     * consumers (q106's merge table, q107's tokenize pass) are derivations,
     * same amortization as the q60 cluster labels. */
   def trainedMerges(t: graft.Tables, maxMerges: Int): Seq[Merge] =
-    trainedCache.get(t.spark, s"${t.dir}#bpe$maxMerges")(
+    graft.Artifacts.get(t, s"bpe$maxMerges")(
       train(t.documents, maxMerges))
 }

@@ -480,8 +480,6 @@ object KMeansTrainer {
       k2, iters)
   }
 
-  private val trainedCache = new graft.SessionCache[Trained]
-
   val K = 8
   val MaxIters = 20
   val Tol = 1e-3
@@ -491,6 +489,6 @@ object KMeansTrainer {
     * and q37's IVF serves from it (train once, derive everywhere — the
     * q60-labels / q94-layout amortization pattern). */
   def trainedModel(t: graft.Tables): Trained =
-    trainedCache.get(t.spark, s"${t.dir}#kmeans$K")(
+    graft.Artifacts.get(t, s"kmeans$K")(
       train(t.embeddings, K, MaxIters, Tol))
 }

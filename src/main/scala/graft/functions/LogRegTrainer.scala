@@ -209,10 +209,8 @@ object LogRegTrainer {
   def score(w: Array[Double], text: String): Double =
     sigmoid(dot(w, featurize(text)._1))
 
-  private val trainedCache = new graft.SessionCache[Trained]
-
   /** Memoized per (session, dir) — the train-once-serve-many amortization
     * every trainer in this engine shares (BpeTrainer/KMeansTrainer). */
   def trained(t: graft.Tables): Trained =
-    trainedCache.get(t.spark, s"${t.dir}#logreg$Iters")(train(t.documents))
+    graft.Artifacts.get(t, s"logreg$Iters")(train(t.documents))
 }

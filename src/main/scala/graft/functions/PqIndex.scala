@@ -43,12 +43,10 @@ object PqIndex {
   /** codebooks(s)(j) = the j-th codeword of subspace s (length SubDim). */
   final case class Model(codebooks: IndexedSeq[IndexedSeq[Array[Double]]])
 
-  private val cache = new graft.SessionCache[Model]
-
   /** Train the M subspace codebooks on the deterministic sample, memoized
     * per (session, dir). */
   def trainedModel(t: graft.Tables): Model =
-    cache.get(t.spark, s"${t.dir}#pq$M-$K")({
+    graft.Artifacts.get(t, s"pq$M-$K")({
       val spark = t.spark
       import spark.implicits._
       val sample = t.embeddings
@@ -163,7 +161,7 @@ object PqIndex {
     * it). Same driver-sized sample, same training contract; memoized
     * under its own key. */
   def trainedResidualModel(t: graft.Tables): Model =
-    cache.get(t.spark, s"${t.dir}#pqres$M-$K")({
+    graft.Artifacts.get(t, s"pqres$M-$K")({
       val spark = t.spark
       import spark.implicits._
       val km = KMeansTrainer.trainedModel(t)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{EngineQuery, dsl}
+import graft.{Artifacts, EngineQuery, dsl}
 import graft.dsl._
 import org.apache.spark.sql.GraftShims
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
@@ -1340,14 +1340,10 @@ object AdvancedQueries {
     * the same pair table, and a production recommender materializes that
     * table once per corpus build, not once per report. Checkpointed at
     * pair-scale (support-floored item pairs), never corpus-scale. */
-  private val basketArtifacts = new graft.SessionCache[(
-    org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-    org.apache.spark.sql.DataFrame)]
-
   private def memoBasket(t: graft.Tables): (
       org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
       org.apache.spark.sql.DataFrame) =
-    basketArtifacts.get(t.spark, s"${t.dir}#basket$MaxBasketParts") {
+    Artifacts.get(t, s"basket$MaxBasketParts") {
       // The distinct (order, part) base feeds all three artifacts (items,
       // the pair explode TWICE via the support join, and the order count);
       // un-checkpointed it re-ran its corpus scan + distinct exchange per
@@ -1502,8 +1498,6 @@ object AdvancedQueries {
     * (part, month − 1) — month-item-scale. The join's right side re-ranks
     * the SAME window table, so both sides are dataframe-aliased (the
     * derived-self-join resolution rule, q193's lesson). */
-  private val trendingRanked = new graft.SessionCache[org.apache.spark.sql.DataFrame]
-
   val q206 = EngineQuery(
     "q206_trending",
     Some("""WITH m AS (SELECT date_trunc('month', o.o_orderdate) AS mon, l.l_partkey,
@@ -1529,7 +1523,7 @@ object AdvancedQueries {
     // memoized per (session, dir) at month×item scale (the q180/q204
     // basket-artifact economics: one corpus join per corpus generation,
     // every report reads the checkpointed rollup).
-    val r = trendingRanked.get(t.spark, s"${t.dir}#trending") {
+    val r = Artifacts.get(t, "trending") {
       val m = t.lineitem
         .join(t.orders, col("l_orderkey") === col("o_orderkey"))
         .groupBy(date_trunc("month", col("o_orderdate")).as("mon"), col("l_partkey"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.EngineQuery
+import graft.{Artifacts, EngineQuery}
 import graft.dsl._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -175,8 +175,6 @@ object CurationQueries {
         .unionByName(rep(5, "chunks", chunks, "chunk_len")))
   }
 
-  private val metaCache = new graft.SessionCache[DataFrame]
-
   /** ONE corpus text pass, memoized per (session, dir): every per-doc
     * SCALAR the funnel family needs — token count, quality verdict (q45's
     * score expression verbatim at the corpus-calibrated ≥0.25 cut), q23's
@@ -187,7 +185,7 @@ object CurationQueries {
     * the 100 TB shape where metadata is checkpointable and the corpus text
     * is read, not held. */
   private[operators] def docMeta(t: graft.Tables): DataFrame =
-    metaCache.get(t.spark, s"${t.dir}#curmeta")({
+    Artifacts.get(t, "curmeta")({
       val tk = toks(col("text"))
       val stops = Seq("the", "a", "of", "and", "in", "to")
       val stopRatio =
@@ -210,8 +208,6 @@ object CurationQueries {
   private def digests(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("key"))
 
-  private val evalShCache = new graft.SessionCache[DataFrame]
-
   /** The distinct 8-shingles of the RAW src0 benchmark set, memoized per
     * (session, dir) as a localCheckpoint: the eval set is invariant across
     * every [[benchmarkHitIds]] call, but un-memoized it re-paid a src0
@@ -221,15 +217,13 @@ object CurationQueries {
     * corpus size, so holding the distinct shingles for the session is
     * free and the broadcast below stays bounded. */
   private def evalShingles(t: graft.Tables): DataFrame =
-    evalShCache.get(t.spark, s"${t.dir}#evalsh8")({
+    Artifacts.get(t, "evalsh8")({
       t.documents
         .select(col("source"), toks(col("text")).as("tk"))
         .filter(size(col("tk")) >= 8 && col("source") === "src0")
         .select(explode(shingles(col("tk"), 8)).as("sh")).distinct()
         .localCheckpoint()
     })
-
-  private val benchHitsCache = new graft.SessionCache[DataFrame]
 
   /** The CORPUS-WIDE decontamination hit set — every non-benchmark doc
     * sharing an 8-shingle with the RAW src0 benchmark set — memoized per
@@ -244,7 +238,7 @@ object CurationQueries {
     * per-doc metadata column maintained next to the corpus and recomputed
     * only when the benchmark suite changes. */
   private def corpusBenchmarkHits(t: graft.Tables): DataFrame =
-    benchHitsCache.get(t.spark, s"${t.dir}#curbenchhits")({
+    Artifacts.get(t, "curbenchhits")({
       t.documents
         .select(col("doc_id"), col("source"), toks(col("text")).as("tk"))
         .filter(size(col("tk")) >= 8 && col("source") =!= "src0")
@@ -270,8 +264,6 @@ object CurationQueries {
   private[graft] def storeDigestKeys(t: graft.Tables, ids: DataFrame): DataFrame =
     digests(rawDocs(t).join(ids, Seq("doc_id"), "left_semi")).select("key")
 
-  private val storeCache = new graft.SessionCache[DataFrame]
-
   /** Yesterday's FROZEN store: the base split (doc_id ≢ 0 mod 10) through
     * the full q214 funnel — quality, base-internal exact + near-dup dedup
     * (pairs from the memoized corpus list filtered to base endpoints),
@@ -280,7 +272,7 @@ object CurationQueries {
     * it once, not per consumer. The cached value is an eagerly
     * localCheckpointed id-scale frame. */
   private[graft] def frozenStoreIds(t: graft.Tables): DataFrame =
-    storeCache.get(t.spark, s"${t.dir}#curstore")({
+    Artifacts.get(t, "curstore")({
       val raw = rawDocs(t)
       val isBatch = col("doc_id") % 10 === 0
       val pairList = TextQueries.corpusJaccardPairs(t)
@@ -302,8 +294,6 @@ object CurationQueries {
         .select("doc_id").localCheckpoint()
     })
 
-  private val storePostingsCache = new graft.SessionCache[DataFrame]
-
   /** The corpus shingle postings restricted to the frozen store, memoized
     * per (session, dir) — the standing near-dup index a production
     * incremental pipeline holds alongside the store itself. q215 pays the
@@ -312,10 +302,8 @@ object CurationQueries {
     * frozen since yesterday); all slices now stream against this
     * checkpoint and only the slice/admitted postings are recomputed. */
   private[graft] def storePostings(t: graft.Tables): DataFrame =
-    storePostingsCache.get(t.spark, s"${t.dir}#curstoreinv")(
+    Artifacts.get(t, "curstoreinv")(
       TextQueries.refPostings(t, frozenStoreIds(t)).localCheckpoint())
-
-  private val storeKeysCache = new graft.SessionCache[DataFrame]
 
   /** The frozen store's digest-key set, memoized per (session, dir) — the
     * second standing artifact a nightly/continuous ingest holds next to the
@@ -324,10 +312,8 @@ object CurationQueries {
     * without the memo each evaluation re-restricted [[docMeta]] and, in the
     * continuous form, re-CHECKPOINTED the store-scale result per run. */
   private[graft] def frozenStoreKeys(t: graft.Tables): DataFrame =
-    storeKeysCache.get(t.spark, s"${t.dir}#curstorekeys")(
+    Artifacts.get(t, "curstorekeys")(
       storeDigestKeys(t, frozenStoreIds(t)).localCheckpoint())
-
-  private val curLayoutCache = new graft.SessionCache[Map[String, String]]
 
   /** The curation funnel's standing inputs AT REST — the layout-family
     * serve for q214/q215 (judge round-15 item 3): every session artifact
@@ -363,7 +349,7 @@ object CurationQueries {
     ("storeinv", "curstoreinv", Seq("doc_id")))
 
   private[graft] def curationLayoutTables(t: graft.Tables): Map[String, String] =
-    curLayoutCache.get(t.spark, s"${t.dir}#curlayout")({
+    Artifacts.get(t, "curlayout")({
       val width = t.spark.sessionState.conf.numShufflePartitions
       def tbl(tag: String, df: => DataFrame, cols: Seq[String]): String = {
         val name = graft.sources.LayoutWriter.deterministicName(tag, t.dir, width)
@@ -399,7 +385,7 @@ object CurationQueries {
   private[graft] def dropCurationFamily(t: graft.Tables): Unit = {
     val spark = t.spark
     val width = spark.sessionState.conf.numShufflePartitions
-    curLayoutCache.remove(spark, s"${t.dir}#curlayout")
+    Artifacts.forget(t, "curlayout")
     CurationInputs.dropServed(t)
     familySpec.foreach { case (_, tag, _) =>
       val tbl = graft.sources.LayoutWriter.deterministicName(tag, t.dir, width)
@@ -510,9 +496,6 @@ object CurationQueries {
     * old∩new shingles cannot newly drop anything (the hash gate proves the
     * reduction exact). Benchmark suites are KB–MB at any corpus size, so
     * the broadcast stays bounded. */
-  private val deltaOldEvCache = new graft.SessionCache[DataFrame]
-  private val deltaKeptCache = new graft.SessionCache[DataFrame]
-
   val q227 = EngineQuery(
     "q227_decontam_delta",
     Some("""WITH raw AS (SELECT doc_id, source, string_split(text, ' ') AS tk,
@@ -550,11 +533,11 @@ object CurationQueries {
     // set and the kept set under it — in production both exist before the
     // new suite arrives (the kept set IS the curated corpus), so a served
     // delta sweep pays only the candidate pass below.
-    val oldEv = deltaOldEvCache.get(t.spark, s"${t.dir}#decontoldev")(
+    val oldEv = Artifacts.get(t, "decontoldev")(
       evOf(col("doc_id") % 2 === 1).localCheckpoint())
     val cand = sh8src.filter(col("source") =!= "src0")
       .select(col("doc_id"), explode(shingles(col("tk"), 8)).as("sh"))
-    val kept = deltaKeptCache.get(t.spark, s"${t.dir}#decontkept")({
+    val kept = Artifacts.get(t, "decontkept")({
       val oldHits = cand.join(broadcast(oldEv), "sh").select("doc_id").distinct()
       t.documents.filter(col("source") =!= "src0")
         .select(col("doc_id"), col("source"))
@@ -728,8 +711,6 @@ object CurationQueries {
         storePostings(t), TextQueries.corpusPostings(t)._1,
         TextQueries.corpusPostings(t)._2, corpusBenchmarkHits(t))
 
-    private val servedInvCache = new graft.SessionCache[DataFrame]
-
     /** Served: every standing input reads from the bucketed layout tables
       * — zero corpus text reads, zero store rebuild. The postings table is
       * the one input the CONTINUOUS replay touches per generation (the
@@ -762,7 +743,7 @@ object CurationQueries {
     def served(t: graft.Tables): CurationInputs = {
       val tb = curationLayoutTables(t)
       def pinned(member: String): DataFrame =
-        servedInvCache.get(t.spark, s"${t.dir}#curpin#$member")({
+        Artifacts.get(t, s"curpin#$member")({
           val loc = t.spark.sessionState.catalog.getTableMetadata(
             org.apache.spark.sql.catalyst.TableIdentifier(tb(member)))
             .location.toString
@@ -779,7 +760,7 @@ object CurationQueries {
       * free with the RDD's GC once the entry is dropped. */
     private[graft] def dropServed(t: graft.Tables): Unit =
       PinnedMembers.foreach { m =>
-        servedInvCache.remove(t.spark, s"${t.dir}#curpin#$m")
+        Artifacts.forget(t, s"curpin#$m")
       }
 
     def of(t: graft.Tables): CurationInputs =

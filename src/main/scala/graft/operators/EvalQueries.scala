@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.EngineQuery
+import graft.{Artifacts, EngineQuery}
 import graft.dsl._
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
@@ -490,6 +490,12 @@ object EvalQueries {
           .otherwise(0).cast("int").as("alert")))
   }
 
+  /** Evict the memoized exact ranking — the dir-turnover drop hook the
+    * standing checkpoint was missing (a long session sweeping dirs would
+    * otherwise pin one ranked frame per dir for its lifetime). */
+  private[graft] def dropRankedPrice(t: graft.Tables): Unit =
+    Artifacts.forget(t, "q208ranked")
+
   /** q208: approximate-quantile audit — measure percentile_approx's actual
     * rank error against EXACT order statistics before trusting it at
     * 100 TB (the audit-your-sketches discipline: the approx path is the
@@ -504,15 +510,6 @@ object EvalQueries {
     * driver-sized broadcast). No oracle: the sketch's outputs are
     * engine-specific by design — EvalQueriesSpec asserts every realized
     * error is within its bound, which is the point of the query. */
-  private val rankedPriceCache =
-    new graft.SessionCache[(org.apache.spark.sql.DataFrame, Long)]
-
-  /** Evict the memoized exact ranking — the dir-turnover drop hook the
-    * standing checkpoint was missing (a long session sweeping dirs would
-    * otherwise pin one ranked frame per dir for its lifetime). */
-  private[graft] def dropRankedPrice(t: graft.Tables): Unit =
-    rankedPriceCache.remove(t.spark, s"${t.dir}#q208ranked")
-
   val q208 = EngineQuery("q208_quantile_audit", None) { t =>
     val spark = t.spark
     import spark.implicits._
@@ -525,7 +522,7 @@ object EvalQueries {
     // runs audit the sketch against the memoized ranking instead of
     // re-paying the range-exchange global sort per evaluation (it was the
     // second-warmest non-family query on the board at 1.57 s warm).
-    val (ranked, n) = rankedPriceCache.get(spark, s"${t.dir}#q208ranked")({
+    val (ranked, n) = Artifacts.get(t, "q208ranked")({
       graft.functions.GlobalRank.withGlobalIdAndCount(vals, Seq(col("v")))
     })
     val rankedVals = ranked.select(col("v"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{EngineQuery, dsl}
+import graft.{Artifacts, EngineQuery, dsl}
 import graft.dsl._
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.functions._
@@ -920,8 +920,6 @@ object MultimodalQueries {
     embedFeatures(pixels).toDF
   }
 
-  private val mediaEmbCache = new graft.SessionCache[org.apache.spark.sql.DataFrame]
-
   /** Decoded-pixel media embeddings `(doc_id, embedding)` for the whole
     * corpus, decoded ONCE per (session, dir) and held as a localCheckpoint
     * (the corpusPostings discipline, `TextQueries.corpusPostings`): q218's
@@ -931,7 +929,7 @@ object MultimodalQueries {
     * cost, so paying it once is the whole game. 64 floats + id per row is
     * id-scale (~0.3 KB/doc), far smaller than the media it replaces. */
   private[graft] def mediaPixelEmbeddings(t: graft.Tables): org.apache.spark.sql.DataFrame =
-    mediaEmbCache.get(t.spark, s"${t.dir}#mediaemb")(
+    Artifacts.get(t, "mediaemb")(
       embedDocSlice(t, t.documents).localCheckpoint())
 
   /** q219's payload length: the synthetic WAV covers 512 text bytes (256
@@ -966,12 +964,10 @@ object MultimodalQueries {
     embedFeatures(pcm).toDF
   }
 
-  private val audioEmbCache = new graft.SessionCache[org.apache.spark.sql.DataFrame]
-
   /** Decoded-sample audio embeddings, decoded once per (session, dir) —
     * [[mediaPixelEmbeddings]]'s audio twin, same checkpoint economics. */
   private[graft] def audioSampleEmbeddings(t: graft.Tables): org.apache.spark.sql.DataFrame =
-    audioEmbCache.get(t.spark, s"${t.dir}#audioemb")(
+    Artifacts.get(t, "audioemb")(
       audioEmbedDocSlice(t, t.documents).localCheckpoint())
 
   /** q223's frame geometry: q135's exact container (4 frames, frame f's
@@ -1011,13 +1007,11 @@ object MultimodalQueries {
     embedFeatures(px).toDF
   }
 
-  private val videoEmbCache = new graft.SessionCache[org.apache.spark.sql.DataFrame]
-
   /** Decoded sampled-frame video embeddings, decoded once per (session,
     * dir) — [[mediaPixelEmbeddings]]'s video twin, same checkpoint
     * economics. */
   private[graft] def videoFrameEmbeddings(t: graft.Tables): org.apache.spark.sql.DataFrame =
-    videoEmbCache.get(t.spark, s"${t.dir}#videoemb")(
+    Artifacts.get(t, "videoemb")(
       videoEmbedDocSlice(t, t.documents).localCheckpoint())
 
   /** q218's operating point: exact-cosine near-dup threshold and the
@@ -1189,36 +1183,26 @@ object MultimodalQueries {
     trainCoarseFrom(embedSlice(t.documents.filter(col("doc_id") < sampleLimit)), k)
   }
 
-  private val mediaModelCache =
-    new graft.SessionCache[graft.functions.KMeansTrainer.Trained]
-  private val audioModelCache =
-    new graft.SessionCache[graft.functions.KMeansTrainer.Trained]
-
   /** [[trainCoarseModel]] on the image-feature space, memoized per
     * (session, dir). */
   private[graft] def mediaNearDupModel(
       t: graft.Tables): graft.functions.KMeansTrainer.Trained =
-    mediaModelCache.get(t.spark, s"${t.dir}#medianear")(
+    Artifacts.get(t, "medianear")(
       trainCoarseModel(t, embedDocSlice(t, _)))
 
   /** [[trainCoarseModel]] on the audio-feature space, memoized per
     * (session, dir). */
   private[graft] def audioNearDupModel(
       t: graft.Tables): graft.functions.KMeansTrainer.Trained =
-    audioModelCache.get(t.spark, s"${t.dir}#audionear")(
+    Artifacts.get(t, "audionear")(
       trainCoarseModel(t, audioEmbedDocSlice(t, _)))
-
-  private val videoModelCache =
-    new graft.SessionCache[graft.functions.KMeansTrainer.Trained]
 
   /** [[trainCoarseModel]] on the video-feature space, memoized per
     * (session, dir). */
   private[graft] def videoNearDupModel(
       t: graft.Tables): graft.functions.KMeansTrainer.Trained =
-    videoModelCache.get(t.spark, s"${t.dir}#videonear")(
+    Artifacts.get(t, "videonear")(
       trainCoarseModel(t, videoEmbedDocSlice(t, _)))
-
-  private val nearDupIdxCache = new graft.SessionCache[org.apache.spark.sql.DataFrame]
 
   /** The STANDING near-dup index of a decoded modality: (doc_id, bucket,
     * sig, sig2) under the trained coarse model — 28-byte rows, the one-shot
@@ -1238,7 +1222,7 @@ object MultimodalQueries {
       t: graft.Tables, tag: String,
       emb: => org.apache.spark.sql.DataFrame,
       km: => graft.functions.KMeansTrainer.Trained): org.apache.spark.sql.DataFrame =
-    nearDupIdxCache.get(t.spark, s"${t.dir}#$tag")({
+    Artifacts.get(t, tag)({
       import graft.functions.{KMeansTrainer, HyperplaneSignature}
       val m = km
       emb.select(col("doc_id"),
@@ -1259,8 +1243,6 @@ object MultimodalQueries {
   /** [[nearDupIndex]] of the video modality. */
   private[graft] def videoNearDupIndex(t: graft.Tables): org.apache.spark.sql.DataFrame =
     nearDupIndex(t, "vidnearidx", videoFrameEmbeddings(t), videoNearDupModel(t))
-
-  private val nearDupLayoutCache = new graft.SessionCache[String]
 
   /** Deterministic at-rest table name keyed on (tag, data dir, bucket
     * width): same artifact → same name, so re-runs and fresh sessions
@@ -1294,7 +1276,7 @@ object MultimodalQueries {
   private[graft] def nearDupIndexTable(
       t: graft.Tables, tag: String,
       idx: => org.apache.spark.sql.DataFrame): String =
-    nearDupLayoutCache.get(t.spark, s"${t.dir}#$tag#layout")({
+    Artifacts.get(t, s"$tag#layout")({
       val width = t.spark.sessionState.conf.numShufflePartitions
       val tbl = layoutName(tag, t.dir, width)
       graft.sources.LayoutWriter.serveOrWriteBucketed(
@@ -1593,9 +1575,6 @@ object MultimodalQueries {
     (k1, k2)
   }
 
-  private val xmodalModelCache =
-    new graft.SessionCache[graft.functions.KMeansTrainer.Trained2]
-
   /** Train a two-level quantizer from a `(doc_id, embedding)` sample frame,
     * routing like [[trainCoarseFrom]]: above the crossover (F ≥
     * [[CoarseDistributedK]] fine cells) the GROUPED distributed loop
@@ -1630,7 +1609,7 @@ object MultimodalQueries {
     * (F ≥ 128 ⇔ N ≥ 32 k docs). Memoized per (session, dir). */
   private[graft] def crossModalFineModel(
       t: graft.Tables): graft.functions.KMeansTrainer.Trained2 =
-    xmodalModelCache.get(t.spark, s"${t.dir}#xmfine")({
+    Artifacts.get(t, "xmfine")({
       val (k1, k2) = crossModalFineK(t.documents.count())
       val sampleLimit = math.max(256L, 32L * k1 * k2)
       trainFineFrom(
@@ -1638,46 +1617,6 @@ object MultimodalQueries {
         k1, k2)
     })
 
-
-  /** CROSS-MODAL alignment + retrieval audit — the text↔image↔audio
-    * pairing that goes BEYOND doc_id identity (the last multimodal corner:
-    * q218/q219 dedup within a modality; production multimodal curation
-    * also needs the CLIP/LAION-style check that a doc's modalities agree
-    * with EACH OTHER, and the content-based cross-modal join that finds a
-    * match without an id bridge). Two parts, both served from the memoized
-    * per-modality decode checkpoints (zero new decode passes — the frames
-    * are shared with q218/q219):
-    *
-    *   1. ALIGNMENT (the LAION filter shape): one id-keyed join of the two
-    *      modality frames, exact cosine per pair, counted against
-    *      [[CrossModalAlignT]] — at 100 TB this is the per-pair
-    *      keep/drop signal a multimodal corpus is filtered on.
-    *   2. RETRIEVAL (the beyond-id join): every audio vector queries the
-    *      IMAGE corpus by content — trained two-level k ∝ N fine blocks
-    *      ([[crossModalFineModel]]'s quantizer, index-side single fine
-    *      assignment, query-side [[CrossModalFineProbes]]-probe fan-out —
-    *      measured knee of the recall/candidate-volume curve), the 256-bit
-    *      sign-sketch Hamming scan fused into one packed-array kernel
-    *      ([[graft.functions.HammingShortlist]] at
-    *      [[CrossModalHammingSlack]], top-[[CrossModalShortlistM]] per
-    *      probe — candidates carry ids and longs, never vectors, and the
-    *      verify volume is linear in the corpus),
-    *      exact cosine on candidate ids only, top-1 by (cos desc, id asc).
-    *      The audit counts, per source: queries whose top-1 is their own
-    *      doc (`n_top1_self`), queries resolved to a DIFFERENT doc at
-    *      aligned cosine — a canonical-prefix near-dup found across
-    *      modalities (`n_top1_dup`), and honest misses (`n_miss`:
-    *      blocking/prefilter loss or sub-threshold top-1 — q210's
-    *      audit-not-assume discipline; the spec pins the measured floor).
-    *
-    * Output is COUNTS only (the .xxxx5 rounding-boundary rule: a float
-    * avg would be sum-order-dependent; the threshold comparison rides
-    * round4 like every cosine gate in this family). No SQL oracle (codec +
-    * trained quantizer); CrossModalSpec pins planted-corpus outcomes
-    * (self-retrieval, prefix-dup ties resolving min-id, miss accounting),
-    * admissibility of the slack at the matched-pair operating point, the
-    * decode-once plan, and the no-cartesian plan. */
-  private val xmodalIdxCache = new graft.SessionCache[org.apache.spark.sql.DataFrame]
 
   /** The 256-bit cross-modal sketch columns over an `embedding` column. */
   private def crossModalSigCols: Seq[org.apache.spark.sql.Column] =
@@ -1769,7 +1708,7 @@ object MultimodalQueries {
   }
 
   private[graft] def crossModalImageIndex(t: graft.Tables): org.apache.spark.sql.DataFrame =
-    xmodalIdxCache.get(t.spark, s"${t.dir}#xmimgidx")({
+    Artifacts.get(t, "xmimgidx")({
       // LIVE-form reuse (round 16): when q231's at-rest packed index is
       // present AND source-fingerprint-fresh, a live session reads it
       // instead of re-paying model-train + assign + sign + pack — no
@@ -1796,32 +1735,28 @@ object MultimodalQueries {
     * query set is itself a standing corpus (a batch cross-modal join
     * precomputes both sides' assignments), and the probe selection is the
     * same O(N·k·dim) term as the index side. */
-  private val xmodalChoiceCache = new graft.SessionCache[Boolean]
-
   private[graft] def crossModalAudioProbes(t: graft.Tables): org.apache.spark.sql.DataFrame = {
     // LIVE-form reuse (round 16, the index's twin): a fresh at-rest
     // normalized probe table means the probe lists are already
     // materialized — the session joins them with the decode-once audio
     // checkpoint ([[servedProbesFrom]] — one shared standing frame with
-    // q231/q232) and never consults the fine model. Decided OUTSIDE the
-    // frame's cache builder: servedProbesFrom has its own entry in the
-    // same SessionCache, and ConcurrentHashMap.computeIfAbsent must not
-    // nest — but the DECISION itself is memoized in its own cache entry
-    // (round 17): Verify runs queries 4-way concurrent, and an unmemoized
-    // contains-then-get let two first callers race onto DIFFERENT
-    // branches, leaving two standing MEMORY_AND_DISK frames for one dir.
+    // q231/q232) and never consults the fine model. The DECISION is its
+    // own artifact (round 17): Verify runs queries 4-way concurrent, and
+    // an unmemoized built-then-get let two first callers race onto
+    // DIFFERENT branches, leaving two standing MEMORY_AND_DISK frames for
+    // one dir.
     // A session frame already BUILT wins over the table (don't pay a
     // second standing frame mid-session once q231 writes the layout).
     val width = t.spark.sessionState.conf.numShufflePartitions
     val prbTbl = layoutName("xmqprobes", t.dir, width)
-    val useServed = xmodalChoiceCache.get(t.spark, s"${t.dir}#xmaudprobes#src")({
-      !xmodalIdxCache.contains(t.spark, s"${t.dir}#xmaudprobes") &&
+    val useServed = Artifacts.get(t, "xmaudprobes#src")({
+      !Artifacts.built(t, "xmaudprobes") &&
         graft.sources.LayoutWriter.registerIfFresh(
           t.spark, prbTbl, Seq("qid"), width, Some(t.dir))
     })
     if (useServed)
       servedProbesFrom(t, t.spark.table(prbTbl), audioSampleEmbeddings(t))
-    else xmodalIdxCache.get(t.spark, s"${t.dir}#xmaudprobes")({
+    else Artifacts.get(t, "xmaudprobes")({
       import graft.functions.KMeansTrainer
       cacheStanding(
         audioSampleEmbeddings(t).select(col("doc_id").as("qid") +:
@@ -1953,6 +1888,44 @@ object MultimodalQueries {
             .as("n_miss")))
   }
 
+  /** CROSS-MODAL alignment + retrieval audit — the text↔image↔audio
+    * pairing that goes BEYOND doc_id identity (the last multimodal corner:
+    * q218/q219 dedup within a modality; production multimodal curation
+    * also needs the CLIP/LAION-style check that a doc's modalities agree
+    * with EACH OTHER, and the content-based cross-modal join that finds a
+    * match without an id bridge). Two parts, both served from the memoized
+    * per-modality decode checkpoints (zero new decode passes — the frames
+    * are shared with q218/q219):
+    *
+    *   1. ALIGNMENT (the LAION filter shape): one id-keyed join of the two
+    *      modality frames, exact cosine per pair, counted against
+    *      [[CrossModalAlignT]] — at 100 TB this is the per-pair
+    *      keep/drop signal a multimodal corpus is filtered on.
+    *   2. RETRIEVAL (the beyond-id join): every audio vector queries the
+    *      IMAGE corpus by content — trained two-level k ∝ N fine blocks
+    *      ([[crossModalFineModel]]'s quantizer, index-side single fine
+    *      assignment, query-side [[CrossModalFineProbes]]-probe fan-out —
+    *      measured knee of the recall/candidate-volume curve), the 256-bit
+    *      sign-sketch Hamming scan fused into one packed-array kernel
+    *      ([[graft.functions.HammingShortlist]] at
+    *      [[CrossModalHammingSlack]], top-[[CrossModalShortlistM]] per
+    *      probe — candidates carry ids and longs, never vectors, and the
+    *      verify volume is linear in the corpus),
+    *      exact cosine on candidate ids only, top-1 by (cos desc, id asc).
+    *      The audit counts, per source: queries whose top-1 is their own
+    *      doc (`n_top1_self`), queries resolved to a DIFFERENT doc at
+    *      aligned cosine — a canonical-prefix near-dup found across
+    *      modalities (`n_top1_dup`), and honest misses (`n_miss`:
+    *      blocking/prefilter loss or sub-threshold top-1 — q210's
+    *      audit-not-assume discipline; the spec pins the measured floor).
+    *
+    * Output is COUNTS only (the .xxxx5 rounding-boundary rule: a float
+    * avg would be sum-order-dependent; the threshold comparison rides
+    * round4 like every cosine gate in this family). No SQL oracle (codec +
+    * trained quantizer); CrossModalSpec pins planted-corpus outcomes
+    * (self-retrieval, prefix-dup ties resolving min-id, miss accounting),
+    * admissibility of the slack at the matched-pair operating point, the
+    * decode-once plan, and the no-cartesian plan. */
   val q220 = EngineQuery("q220_crossmodal_align", None) { t =>
     // prePartitioned: the memoized probe frame is cached BEHIND its bucket
     // exchange ([[cacheStanding]]), so every run's candidate join is
@@ -1961,8 +1934,6 @@ object MultimodalQueries {
     crossModalAuditFrom(t, crossModalAudioProbes(t), crossModalImageIndex(t),
       prePartitioned = true)
   }
-
-  private val xmodalLayoutCache = new graft.SessionCache[(String, String)]
 
   /** The NORMALIZED at-rest form of the probe frame: ONE row per query —
     * (qid, buckets array<int>, sig0..3) — with NO embedding column. The
@@ -2018,8 +1989,8 @@ object MultimodalQueries {
     * 4 GB warehouse). Flip it when a deployment's re-materialization
     * frequency dominates its storage cost. */
   private[graft] def probeSnapshotEnabled: Boolean =
-    sys.env.get("SPARK_GRAFT_PROBE_SNAPSHOT")
-      .orElse(sys.props.get("spark.graft.probeSnapshot")).contains("1")
+    graft.sources.LayoutWriter.onOffFlag(
+      "SPARK_GRAFT_PROBE_SNAPSHOT", "spark.graft.probeSnapshot")
 
   /** Cache key for the shared served-probe frame. The snapshot-policy bit
     * is part of the identity: a session that flips
@@ -2028,14 +1999,14 @@ object MultimodalQueries {
     * old policy/source (the specs used to rely on remembering to call
     * [[dropServedProbes]]; now the key enforces it — the drop hook remains
     * the footprint-release / dir-turnover lever). */
-  private def servedProbesKey(t: graft.Tables, snap: Boolean): String =
-    s"${t.dir}#xmsrvprobes#snap=$snap"
+  private def servedProbesKey(snap: Boolean): String =
+    s"xmsrvprobes#snap=$snap"
 
   private[graft] def servedProbesFrom(
       t: graft.Tables,
       packed: => org.apache.spark.sql.DataFrame,
       qemb: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    xmodalIdxCache.get(t.spark, servedProbesKey(t, probeSnapshotEnabled))({
+    Artifacts.get(t, servedProbesKey(probeSnapshotEnabled))({
       def exploded =
         packed.join(qemb.select(col("doc_id").as("qid"),
             col("embedding").as("qemb")), Seq("qid"))
@@ -2062,7 +2033,7 @@ object MultimodalQueries {
     * hook for [[servedProbesFrom]]'s one-entry-per-dir cache. */
   private[graft] def dropServedProbes(t: graft.Tables): Unit =
     Seq(true, false).foreach { snap =>
-      xmodalIdxCache.remove(t.spark, servedProbesKey(t, snap))
+      Artifacts.forget[org.apache.spark.sql.DataFrame](t, servedProbesKey(snap))
         .foreach(_.unpersist())
     }
 
@@ -2070,7 +2041,7 @@ object MultimodalQueries {
     * The live-reuse claim ("a table-present live run performs zero model
     * training") is exactly "this stays false across the run". */
   private[graft] def crossModalModelTrained(t: graft.Tables): Boolean =
-    xmodalModelCache.contains(t.spark, s"${t.dir}#xmfine")
+    Artifacts.built(t, "xmfine")
 
   /** Evict the cross-modal session artifacts (packed index, probe frames,
     * fine model, layout-table memo) so a spec can force the NEXT q220 run
@@ -2078,15 +2049,15 @@ object MultimodalQueries {
     * is untestable inside one session otherwise (every artifact is
     * session-memoized by design). */
   private[graft] def dropCrossModalSession(t: graft.Tables): Unit = {
-    xmodalIdxCache.remove(t.spark, s"${t.dir}#xmimgidx").foreach(_.unpersist())
-    xmodalIdxCache.remove(t.spark, s"${t.dir}#xmaudprobes").foreach(_.unpersist())
+    Artifacts.forget[org.apache.spark.sql.DataFrame](t, "xmimgidx").foreach(_.unpersist())
+    Artifacts.forget[org.apache.spark.sql.DataFrame](t, "xmaudprobes").foreach(_.unpersist())
     // The memoized source decision must fall with the frame it chose —
     // a stale "live" verdict would pin the next session-shaped run off
     // the tables it should now reuse.
-    xmodalChoiceCache.remove(t.spark, s"${t.dir}#xmaudprobes#src")
+    Artifacts.forget(t, "xmaudprobes#src")
     dropServedProbes(t)
-    xmodalModelCache.remove(t.spark, s"${t.dir}#xmfine")
-    xmodalLayoutCache.remove(t.spark, s"${t.dir}#xmlayout")
+    Artifacts.forget(t, "xmfine")
+    Artifacts.forget(t, "xmlayout")
   }
 
   /** q220's retrieval artifacts AT REST: the packed per-bucket image index
@@ -2097,7 +2068,7 @@ object MultimodalQueries {
     * re-runs overwrite, never accumulate). Returns
     * (indexTable, packedProbeTable). */
   private[graft] def crossModalLayoutTables(t: graft.Tables): (String, String) =
-    xmodalLayoutCache.get(t.spark, s"${t.dir}#xmlayout")({
+    Artifacts.get(t, "xmlayout")({
       val width = t.spark.sessionState.conf.numShufflePartitions
       val idxTbl = layoutName("xmidx", t.dir, width)
       val prbTbl = layoutName("xmqprobes", t.dir, width)
@@ -2141,8 +2112,6 @@ object MultimodalQueries {
       t.spark.table(idxTbl), prePartitioned = true)
   }
 
-  private val embTblCache = new graft.SessionCache[String]
-
   /** A modality's DECODED-EMBEDDING table at rest: the (doc_id, embedding)
     * frame written once as a doc_id-bucketed, doc_id-sorted table at
     * shuffle width under a deterministic name. The r14 serve sweep named
@@ -2158,7 +2127,7 @@ object MultimodalQueries {
   private[graft] def embTableOf(
       t: graft.Tables, tag: String,
       emb: => org.apache.spark.sql.DataFrame): String =
-    embTblCache.get(t.spark, s"${t.dir}#$tag#embtbl")({
+    Artifacts.get(t, s"$tag#embtbl")({
       val width = t.spark.sessionState.conf.numShufflePartitions
       val tbl = layoutName(tag, t.dir, width)
       graft.sources.LayoutWriter.serveOrWriteBucketed(
@@ -2209,7 +2178,7 @@ object MultimodalQueries {
     * next to the vectors (at 100 TB a bucket-partitioned layout, q94's
     * convention). */
   private[graft] def crossModalStoreIndex(t: graft.Tables): org.apache.spark.sql.DataFrame =
-    xmodalIdxCache.get(t.spark, s"${t.dir}#xmstoreidx")({
+    Artifacts.get(t, "xmstoreidx")({
       import graft.functions.KMeansTrainer
       val m2 = crossModalStoreFineModel(t)
       cacheStanding(packXModal(
@@ -2227,7 +2196,7 @@ object MultimodalQueries {
     * (session, dir). */
   private[graft] def crossModalStoreFineModel(
       t: graft.Tables): graft.functions.KMeansTrainer.Trained2 =
-    xmodalModelCache.get(t.spark, s"${t.dir}#xmstorefine")({
+    Artifacts.get(t, "xmstorefine")({
       val store = t.documents.filter(col("doc_id") % 10 =!= 0)
       val (k1, k2) = crossModalFineK(store.count())
       val sampleLimit = math.max(256L, 32L * k1 * k2)
@@ -2300,11 +2269,6 @@ object MultimodalQueries {
             col("top_cos") < CrossModalAlignT, 1L).otherwise(0L)).as("n_miss")))
   }
 
-  private val mediaIncModelCache =
-    new graft.SessionCache[graft.functions.KMeansTrainer.Trained]
-  private val mediaStoreIdxCache =
-    new graft.SessionCache[org.apache.spark.sql.DataFrame]
-
   /** A decoded modality's handles for the incremental-ingest family: the
     * memo tag, the filter-before-decode embed pass (model training), and
     * the session decode-once embedding checkpoint. ONE ingest pipeline
@@ -2317,18 +2281,18 @@ object MultimodalQueries {
       embeddings: graft.Tables => org.apache.spark.sql.DataFrame,
       /** SPEC probe: did this session pay the CORPUS-scale decode? (the
         * decode-once checkpoint cache filled) — never a control-flow
-        * check, per the SessionCache contract. */
+        * check, per [[graft.Artifacts.built]]. */
       corpusDecoded: graft.Tables => Boolean)
 
   private[graft] lazy val imageIngest: IngestModality =
     IngestModality("media", embedDocSlice, mediaPixelEmbeddings,
-      t => mediaEmbCache.contains(t.spark, s"${t.dir}#mediaemb"))
+      t => Artifacts.built(t, "mediaemb"))
   private[graft] lazy val audioIngest: IngestModality =
     IngestModality("audio", audioEmbedDocSlice, audioSampleEmbeddings,
-      t => audioEmbCache.contains(t.spark, s"${t.dir}#audioemb"))
+      t => Artifacts.built(t, "audioemb"))
   private[graft] lazy val videoIngest: IngestModality =
     IngestModality("video", videoEmbedDocSlice, videoFrameEmbeddings,
-      t => videoEmbCache.contains(t.spark, s"${t.dir}#videoemb"))
+      t => Artifacts.built(t, "videoemb"))
 
   /** A modality's frozen STORE-side ledger at rest, PACKED: [[packIngest]]
     * of the store's (doc_id, bucket, sig, embedding) rows — one row per
@@ -2340,7 +2304,7 @@ object MultimodalQueries {
     * serve session re-pays neither decode + train + assign NOR the
     * store-scale pack. */
   private[graft] def storePackTableOf(t: graft.Tables, m: IngestModality): String =
-    nearDupLayoutCache.get(t.spark, s"${t.dir}#${m.tag}storepack#layout")({
+    Artifacts.get(t, s"${m.tag}storepack#layout")({
       val width = t.spark.sessionState.conf.numShufflePartitions
       val tbl = layoutName(s"${m.tag}storepack", t.dir, width)
       graft.sources.LayoutWriter.serveOrWriteBucketed(
@@ -2358,7 +2322,7 @@ object MultimodalQueries {
     * anyway), which is exactly what a serve session replays the audit
     * from without touching media bytes. */
   private[graft] def batchProbeTableOf(t: graft.Tables, m: IngestModality): String =
-    nearDupLayoutCache.get(t.spark, s"${t.dir}#${m.tag}batchprb#layout")({
+    Artifacts.get(t, s"${m.tag}batchprb#layout")({
       val width = t.spark.sessionState.conf.numShufflePartitions
       val tbl = layoutName(s"${m.tag}batchprb", t.dir, width)
       graft.sources.LayoutWriter.serveOrWriteBucketed(
@@ -2408,7 +2372,7 @@ object MultimodalQueries {
     val stats = foldFlatIntoPackedTable(t.spark, tbl,
       t.spark.sessionState.conf.numShufflePartitions, admittedFlat)
     graft.sources.LayoutWriter.restamp(t.spark, tbl, Seq("bucket"), t.dir)
-    mediaStoreIdxCache.remove(t.spark, s"${t.dir}#${m.tag}storepack")
+    Artifacts.forget[org.apache.spark.sql.DataFrame](t, s"${m.tag}storepack")
       .foreach(_.unpersist())
     stats
   }
@@ -2452,21 +2416,16 @@ object MultimodalQueries {
     * warehouse" simulation ([[dropCrossModalSession]]'s ingest twin), and
     * the dir-turnover eviction hook for long sessions. */
   private[graft] def dropIngestSession(t: graft.Tables, m: IngestModality): Unit = {
-    val s = t.spark
-    (m.tag match {
-      case "media" => mediaEmbCache
-      case "audio" => audioEmbCache
-      case _       => videoEmbCache
-    }).remove(s, s"${t.dir}#${m.tag}emb")
-    ingestBatchFlatCache.remove(s, s"${t.dir}#${m.tag}batchflat")
-    mediaIncModelCache.remove(s, s"${t.dir}#${m.tag}inc")
-    mediaStoreIdxCache.remove(s, s"${t.dir}#${m.tag}storepack")
+    Artifacts.forget(t, s"${m.tag}emb")
+    Artifacts.forget(t, s"${m.tag}batchflat")
+    Artifacts.forget(t, s"${m.tag}inc")
+    Artifacts.forget[org.apache.spark.sql.DataFrame](t, s"${m.tag}storepack")
       .foreach(_.unpersist())
-    mediaStoreIdxCache.remove(s, s"${t.dir}#${m.tag}batchprbpin")
+    Artifacts.forget[org.apache.spark.sql.DataFrame](t, s"${m.tag}batchprbpin")
       .foreach(_.unpersist())
-    mediaStoreIdxCache.remove(s, s"${t.dir}#${m.tag}storeidx")
-    nearDupLayoutCache.remove(s, s"${t.dir}#${m.tag}storepack#layout")
-    nearDupLayoutCache.remove(s, s"${t.dir}#${m.tag}batchprb#layout")
+    Artifacts.forget(t, s"${m.tag}storeidx")
+    Artifacts.forget(t, s"${m.tag}storepack#layout")
+    Artifacts.forget(t, s"${m.tag}batchprb#layout")
   }
 
   /** Drop a modality's packed-ledger artifacts — table, files, and both
@@ -2476,8 +2435,8 @@ object MultimodalQueries {
   private[graft] def dropStorePackArtifacts(t: graft.Tables, m: IngestModality): Unit = {
     val width = t.spark.sessionState.conf.numShufflePartitions
     val tbl = layoutName(s"${m.tag}storepack", t.dir, width)
-    nearDupLayoutCache.remove(t.spark, s"${t.dir}#${m.tag}storepack#layout")
-    mediaStoreIdxCache.remove(t.spark, s"${t.dir}#${m.tag}storepack")
+    Artifacts.forget(t, s"${m.tag}storepack#layout")
+    Artifacts.forget[org.apache.spark.sql.DataFrame](t, s"${m.tag}storepack")
       .foreach(_.unpersist())
     t.spark.sql(s"DROP TABLE IF EXISTS $tbl")
     // An externally-registered table's files (and the freshness marker)
@@ -2499,7 +2458,7 @@ object MultimodalQueries {
     * (session, dir, modality). */
   private[graft] def incrementalModelOf(
       t: graft.Tables, m: IngestModality): graft.functions.KMeansTrainer.Trained =
-    mediaIncModelCache.get(t.spark, s"${t.dir}#${m.tag}inc")({
+    Artifacts.get(t, s"${m.tag}inc")({
       val store = t.documents.filter(col("doc_id") % 10 =!= 0)
       val k = mediaCoarseK(store.count())
       val sampleLimit = math.max(256L, 32L * k)
@@ -2524,7 +2483,7 @@ object MultimodalQueries {
     * or media bytes. */
   private[graft] def storeIndexOf(
       t: graft.Tables, m: IngestModality): org.apache.spark.sql.DataFrame =
-    mediaStoreIdxCache.get(t.spark, s"${t.dir}#${m.tag}storeidx")({
+    Artifacts.get(t, s"${m.tag}storeidx")({
       import graft.functions.{KMeansTrainer, HyperplaneSignature}
       val km = incrementalModelOf(t, m)
       m.embeddings(t).filter(col("doc_id") % 10 =!= 0)
@@ -2562,9 +2521,6 @@ object MultimodalQueries {
       t: graft.Tables, m: IngestModality): org.apache.spark.sql.DataFrame =
     assignFlat(t, m, m.embeddings(t).filter(col("doc_id") % 10 =!= 0))
 
-  private val ingestBatchFlatCache =
-    new graft.SessionCache[org.apache.spark.sql.DataFrame]
-
   /** Tonight's BATCH flat rows, decoded DELTA-ONLY ([[IngestModality
     * .embedSlice]] over the batch docs, never the corpus checkpoint) and
     * checkpointed per (session, dir, modality). This is what makes the
@@ -2575,7 +2531,7 @@ object MultimodalQueries {
     * live path (spec-pinned by MediaIngestReuseSpec). */
   private[graft] def batchFlatOf(
       t: graft.Tables, m: IngestModality): org.apache.spark.sql.DataFrame =
-    ingestBatchFlatCache.get(t.spark, s"${t.dir}#${m.tag}batchflat")(
+    Artifacts.get(t, s"${m.tag}batchflat")(
       assignFlat(t, m,
         m.embedSlice(t, t.documents.filter(col("doc_id") % 10 === 0)))
         .localCheckpoint())
@@ -2669,7 +2625,7 @@ object MultimodalQueries {
     * the session build, unchanged. */
   private[graft] def storePackedOf(
       t: graft.Tables, m: IngestModality): org.apache.spark.sql.DataFrame =
-    mediaStoreIdxCache.get(t.spark, s"${t.dir}#${m.tag}storepack")({
+    Artifacts.get(t, s"${m.tag}storepack")({
       val width = t.spark.sessionState.conf.numShufflePartitions
       val tbl = layoutName(s"${m.tag}storepack", t.dir, width)
       if (graft.sources.LayoutWriter.registerIfFresh(
@@ -2898,7 +2854,7 @@ object MultimodalQueries {
     // the bucketed scans' hashpartitioning, so the decision joins stay
     // exchange-free off the cache.
     val probeTbl = batchProbeTableOf(t, m)
-    val probe = mediaStoreIdxCache.get(t.spark, s"${t.dir}#${m.tag}batchprbpin")(
+    val probe = Artifacts.get(t, s"${m.tag}batchprbpin")(
       cacheStandingBucketed(t.spark, probeTbl))
     storePackTableOf(t, m)
     ingestAuditFrom(probe.select("doc_id", "bucket"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{EngineQuery, dsl}
+import graft.{Artifacts, EngineQuery, dsl}
 import graft.dsl._
 import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.expressions.Window
@@ -85,14 +85,13 @@ object SimilarityQueries {
     * corpus is not viable, and they stay un-cached below). Round 17: both
     * queries previously re-ran the full signature + band self-join +
     * verification per call — 2 identical corpus pipelines per bench pass
-    * (q217 2.08 s + q24 1.79 s warm at sf0.1 for one artifact's work). */
-  private val bandedPairsCache = new graft.SessionCache[DataFrame]
-
-  /** The banded+verified pipeline shared VERBATIM by q24 (the LSH
+    * (q217 2.08 s + q24 1.79 s warm at sf0.1 for one artifact's work).
+    *
+    * The banded+verified pipeline shared VERBATIM by q24 (the LSH
     * contract, no-oracle) and q217 (the same output gated on q36's exact
     * oracle — recall-1 proof on this corpus). */
   private def bandedVerifiedPairs(t: graft.Tables): DataFrame =
-    orderedByAll(bandedPairsCache.get(t.spark, s"${t.dir}#lshverified")({
+    orderedByAll(Artifacts.get(t, "lshverified")({
       val base = shingled(t.documents)
       // Candidate id pairs are materialized once (lazy localCheckpoint):
       // they feed the doc-id fetch AND the final verification join, and
@@ -587,16 +586,6 @@ object SimilarityQueries {
     adcRerank(enc.join(broadcast(q), "bucket"), e)
   }
 
-  /** The MinHash LSH index AT REST — q24's banded rows `(band, bh, doc_id)`
-    * written ONCE bucketed by the FULL serving key (band, bh), memoized per
-    * (session, dir): the corpus-scale work of fuzzy dedup (shingling the
-    * text and hashing 64 min-hashes per doc) is paid at index-build, q144's
-    * pattern applied to the MinHash family. 24 bytes × 16 bands per doc at
-    * rest. Both key columns must be bucket columns: v1 bucketing elides the
-    * join exchange only when join keys equal bucket columns exactly
-    * (bh-only bucketing re-shuffled both sides — measured). */
-  private val minhashLayouts = new graft.SessionCache[String]
-
   /** The stored-index rows of `docs` — (band, bh, doc_id), [[Bands]] rows
     * per eligible doc. Shared by the full build (q145) and the delta
     * append (q183) so the two write paths cannot drift. */
@@ -612,8 +601,16 @@ object SimilarityQueries {
       .select(col("x.band").as("band"), col("x.bh").as("bh"), col("doc_id"))
   }
 
+  /** The MinHash LSH index AT REST — q24's banded rows `(band, bh, doc_id)`
+    * written ONCE bucketed by the FULL serving key (band, bh), memoized per
+    * (session, dir): the corpus-scale work of fuzzy dedup (shingling the
+    * text and hashing 64 min-hashes per doc) is paid at index-build, q144's
+    * pattern applied to the MinHash family. 24 bytes × 16 bands per doc at
+    * rest. Both key columns must be bucket columns: v1 bucketing elides the
+    * join exchange only when join keys equal bucket columns exactly
+    * (bh-only bucketing re-shuffled both sides — measured). */
   private[graft] def minhashBandTable(t: graft.Tables): String =
-    minhashLayouts.get(t.spark, t.dir)({
+    Artifacts.get(t, "minhash")({
       val tbl = graft.sources.LayoutWriter.deterministicName("mh_bands", t.dir, 8)
       graft.sources.LayoutWriter.writeBucketed(
         bandRows(t.documents), tbl, Seq("band", "bh"), 8, "overwrite")
@@ -631,8 +628,6 @@ object SimilarityQueries {
       baseFiles: Set[String],
       deltaFiles: Set[String])
 
-  private val appendedBandLayouts = new graft.SessionCache[BandAppendStats]
-
   /** q181's incremental-maintenance mechanism applied to the OTHER stored
     * similarity index: the minhash band table grows by a delta-batch append
     * (doc_id ≡ 0 (mod 8) — the same "daily batch" split) into the same
@@ -641,7 +636,7 @@ object SimilarityQueries {
     * generation, and serving reads the union through one bucketed scan
     * with no exchange on the band keys. */
   private[graft] def appendedBandStats(t: graft.Tables): BandAppendStats =
-    appendedBandLayouts.get(t.spark, t.dir)({
+    Artifacts.get(t, "minhash-append")({
       val tbl = graft.sources.LayoutWriter.deterministicName("mh_bands_inc", t.dir, 8)
       val isDelta = pmod(col("doc_id"), lit(8)) === 0
       graft.sources.LayoutWriter.writeBucketed(
@@ -697,15 +692,6 @@ object SimilarityQueries {
     serveBandIndex(t.spark.table(appendedBandStats(t).table), t)
   }
 
-  /** The residual IVF-PQ index AT REST — inverted lists as PARTITION
-    * directories: q140's (vec_id, codes) rows land ONCE under
-    * `bucket=<cell>/` dirs (4 B codes + id per vector — what a production
-    * ANN service actually stores), memoized per (session, dir). The encode
-    * pass over the corpus is the build cost; q127/q140 re-encode per query
-    * by design (their declared shape is the live composition of the two
-    * trained models), this layout is their at-rest complement. */
-  private val ivfpqLayouts = new graft.SessionCache[String]
-
   /** (vec_id, bucket, codes) of `vecs` under the FROZEN models — shared by
     * the full build (q146) and the delta append (q186) so the two encode
     * paths cannot drift. */
@@ -721,8 +707,15 @@ object SimilarityQueries {
       .select(col("vec_id"), col("bucket"),
         graft.functions.PqIndex.encodeExpr(col("res"), pqr).as("codes"))
 
+  /** The residual IVF-PQ index AT REST — inverted lists as PARTITION
+    * directories: q140's (vec_id, codes) rows land ONCE under
+    * `bucket=<cell>/` dirs (4 B codes + id per vector — what a production
+    * ANN service actually stores), memoized per (session, dir). The encode
+    * pass over the corpus is the build cost; q127/q140 re-encode per query
+    * by design (their declared shape is the live composition of the two
+    * trained models), this layout is their at-rest complement. */
   private[graft] def ivfpqCodesDir(t: graft.Tables): String =
-    ivfpqLayouts.get(t.spark, t.dir)({
+    Artifacts.get(t, "ivfpq")({
       val km = graft.functions.KMeansTrainer.trainedModel(t)
       val pqr = graft.functions.PqIndex.trainedResidualModel(t)
       val out = java.nio.file.Files.createTempDirectory("graft_q146_ivfpq").toString
@@ -739,8 +732,6 @@ object SimilarityQueries {
       baseFiles: Set[String],
       deltaFiles: Set[String])
 
-  private val appendedIvfpqLayouts = new graft.SessionCache[CodesAppendStats]
-
   /** q181/q183's append mechanism on the THIRD stored artifact — and the
     * second layout MECHANISM: the IVF-PQ lists are PARTITION DIRECTORIES
     * (not a bucketed table), and a partitioned parquet write in append mode
@@ -751,7 +742,7 @@ object SimilarityQueries {
     * (vec_id ≡ 0 (mod 8)) are assigned/encoded, and DPP partition skipping
     * serves the union exactly as it served the one-shot build. */
   private[graft] def appendedCodesStats(t: graft.Tables): CodesAppendStats =
-    appendedIvfpqLayouts.get(t.spark, t.dir)({
+    Artifacts.get(t, "ivfpq-append")({
       val km = graft.functions.KMeansTrainer.trainedModel(t)
       val pqr = graft.functions.PqIndex.trainedResidualModel(t)
       val out = java.nio.file.Files.createTempDirectory("graft_q186_ivfpq").toString
@@ -934,8 +925,6 @@ object SimilarityQueries {
           coalesce(col("n_delta_dropped"), lit(0L)).as("n_delta_dropped")))
   }
 
-  private val frozenSemDropCache = new graft.SessionCache[DataFrame]
-
   /** Base-only variant of [[semdedupDropped]] (q185's frozen store). The
     * base-internal dedup IS the frozen state a production store holds —
     * memoized per (session, dir) as an id-scale checkpoint, because q185
@@ -959,7 +948,7 @@ object SimilarityQueries {
         .select(col("vec_b").as("vec_id")).distinct()
     }
     if (onlyBase)
-      frozenSemDropCache.get(t.spark, s"${t.dir}#semfrozen")(build.localCheckpoint())
+      Artifacts.get(t, "semfrozen")(build.localCheckpoint())
     else build
   }
 

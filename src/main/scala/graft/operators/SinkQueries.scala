@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.EngineQuery
+import graft.{Artifacts, EngineQuery}
 import graft.dsl._
 import org.apache.spark.sql.functions.{avg, col, count, lit, max, min, round, sum, when}
 
@@ -110,13 +110,11 @@ object SinkQueries {
     * benchmark the write, not the join. First call per session writes;
     * warm calls measure the exchange-free join itself. Table names are
     * DETERMINISTIC per (tag, dir, width) with overwrite semantics — the
-    * SessionCache already serializes writers per (session, dir), and one
+    * artifact store already serializes writers per (session, dir), and one
     * stable name per artifact stops warehouse accumulation across
     * sessions and gate reruns. */
-  private val bucketedLayouts = new graft.SessionCache[(String, String)]
-
   private def bucketedTables(t: graft.Tables): (String, String) =
-    bucketedLayouts.get(t.spark, t.dir)({
+    Artifacts.get(t, "bucketed")({
       val liT = graft.sources.LayoutWriter.deterministicName("bkt_li", t.dir, 8)
       val ordT = graft.sources.LayoutWriter.deterministicName("bkt_ord", t.dir, 8)
       graft.sources.LayoutWriter.writeBucketed(
@@ -164,10 +162,8 @@ object SinkQueries {
     * pay the clustering write once, every later read skips. The oracle
     * aggregates the round-tripped rows against the source table, proving
     * the re-layout lossless. */
-  private val zorderLayouts = new graft.SessionCache[String]
-
   private[graft] def zorderedDir(t: graft.Tables): String =
-    zorderLayouts.get(t.spark, t.dir)({
+    Artifacts.get(t, "zorder")({
       val out = java.nio.file.Files
         .createTempDirectory("graft_q114_zorder").toString
       graft.sources.LayoutWriter.writeZOrdered(
@@ -201,10 +197,8 @@ object SinkQueries {
     * proving the maintenance pass lossless. Both layouts are memoized per
     * (session, dir) like q94/q114: pay the rewrite once, warm runs measure
     * the read. */
-  private val compactedLayouts = new graft.SessionCache[String]
-
   private[operators] def compactedDir(t: graft.Tables): String =
-    compactedLayouts.get(t.spark, t.dir)({
+    Artifacts.get(t, "compacted")({
       val frag = java.nio.file.Files
         .createTempDirectory("graft_q117_frag").toString
       t.lineitem.write.mode("overwrite")
@@ -252,10 +246,8 @@ object SinkQueries {
   /** q123's two-epoch layout, memoized per (session, dir) like its layout
     * siblings (q114/q117/q133): the query measures the mergeSchema READ,
     * not a per-call rewrite of the corpus into fresh temp dirs. */
-  private val driftLayouts = new graft.SessionCache[String]
-
   private def driftDir(t: graft.Tables): String =
-    driftLayouts.get(t.spark, t.dir)({
+    Artifacts.get(t, "drift")({
       val dir = java.nio.file.Files
         .createTempDirectory("graft_q123_drift").toString
       // epoch-1 files: no quality column yet
@@ -291,9 +283,6 @@ object SinkQueries {
   // layout siblings q117/q123/q133/q137: warm bench passes (and repeated
   // Verify calls) measure the READ path, and temp dirs don't accumulate
   // across invocations.
-  private val csvLayouts = new graft.SessionCache[String]
-  private val jsonlLayouts = new graft.SessionCache[String]
-  private val xmlLayouts = new graft.SessionCache[String]
 
   /** CSV round-trip through the oracle gate — [[graft.sources.CsvSource]]
     * (schema-explicit, PERMISSIVE-tolerant, multiLine-off-so-splittable)
@@ -302,7 +291,7 @@ object SinkQueries {
     * the parquet source, so the text round-trip must be value-exact
     * (doubles print full-precision and re-parse bit-identically). */
   val q129 = EngineQuery("q129_csv_roundtrip", Some(RelationalQueries.q10Sql)) { t =>
-    val out = csvLayouts.get(t.spark, t.dir)({
+    val out = Artifacts.get(t, "csv")({
       val dir = java.nio.file.Files
         .createTempDirectory("graft_q129_csv").toString
       graft.sources.CsvSource.writeCsv(RelationalQueries.q10Body(t), dir)
@@ -318,7 +307,7 @@ object SinkQueries {
     * actually deliver; schema stays explicit (inference is an extra full
     * pass at 100 TB). */
   val q130 = EngineQuery("q130_jsonl_roundtrip", Some(RelationalQueries.q10Sql)) { t =>
-    val out = jsonlLayouts.get(t.spark, t.dir)({
+    val out = Artifacts.get(t, "jsonl")({
       val dir = java.nio.file.Files
         .createTempDirectory("graft_q130_jsonl").toString
       graft.sources.JsonlSource.writeJsonl(RelationalQueries.q10Body(t), dir)
@@ -335,7 +324,7 @@ object SinkQueries {
     * explicit (inference is an extra pass) and the files are splittable
     * by row tag. */
   val q132 = EngineQuery("q132_xml_roundtrip", Some(RelationalQueries.q10Sql)) { t =>
-    val out = xmlLayouts.get(t.spark, t.dir)({
+    val out = Artifacts.get(t, "xml")({
       val dir = java.nio.file.Files
         .createTempDirectory("graft_q132_xml").toString
       RelationalQueries.q10Body(t).write.mode("overwrite")
@@ -360,10 +349,8 @@ object SinkQueries {
     * PartitionFilters). At 100 TB this is the difference between scanning 2
     * languages and scanning 100 because the predicate was written against
     * the dim table. Both layouts memoized per (session, dir). */
-  private val dppLayouts = new graft.SessionCache[(String, String)]
-
   private[operators] def dppDirs(t: graft.Tables): (String, String) =
-    dppLayouts.get(t.spark, t.dir)({
+    Artifacts.get(t, "dpp")({
       val fact = java.nio.file.Files
         .createTempDirectory("graft_q133_fact").toString
       t.documents.write.mode("overwrite").partitionBy("lang").parquet(fact)
@@ -408,10 +395,8 @@ object SinkQueries {
     * bloom-annotated round-trip lossless and the probe exact (blooms have
     * false positives, never false negatives — results are identical, only
     * IO differs). Layout memoized per (session, dir). */
-  private val bloomLayouts = new graft.SessionCache[String]
-
   private[graft] def bloomDir(t: graft.Tables): String =
-    bloomLayouts.get(t.spark, t.dir)({
+    Artifacts.get(t, "bloom")({
       val out = java.nio.file.Files
         .createTempDirectory("graft_q137_bloom").toString
       t.lineitem
@@ -456,10 +441,8 @@ object SinkQueries {
     * row-group/page min-max stats are tight, non-overlapping intervals.
     * Memoized per (session, dir) like q94/q114/q117: pay the clustering
     * write once. */
-  private val sortedLayouts = new graft.SessionCache[String]
-
   private[graft] def sortedEventsDir(t: graft.Tables): String =
-    sortedLayouts.get(t.spark, t.dir)({
+    Artifacts.get(t, "sorted")({
       val out = java.nio.file.Files
         .createTempDirectory("graft_q159_sorted").toString
       // Spark's default parquet timestamp encoding is INT96 — which carries
@@ -571,8 +554,6 @@ object SinkQueries {
     graft.sources.LayoutWriter.upsertPartitions(merged, storeDir, Seq("p"))
   }
 
-  private val cdcStores = new graft.SessionCache[String]
-
   /** q211: CONTINUOUS CDC apply against a partitioned parquet store — the
     * MUTATION member of the ingest family (q181/q183/q186/q187 append,
     * q184/q117 compact, q211 updates AND deletes): the change feed arrives
@@ -602,7 +583,7 @@ object SinkQueries {
            |SELECT prio, CAST(count(*) AS BIGINT) AS n,
            |  round(sum(total) / 1000000, 4) AS total_m
            |FROM fin GROUP BY prio ORDER BY ALL""".stripMargin)) { t =>
-    val store = cdcStores.get(t.spark, s"${t.dir}#cdcstore") {
+    val store = Artifacts.get(t, "cdcstore") {
       val dir = java.nio.file.Files.createTempDirectory("graft_q211_cdc").toString
       val base = t.orders
         .select((col("o_orderkey") % 8).cast("int").as("p"), col("o_orderkey"),

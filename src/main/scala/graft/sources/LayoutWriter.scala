@@ -247,8 +247,18 @@ object LayoutWriter {
     * fixture dirs regenerated in place), flag on = answer from the standing
     * at-rest artifacts, building them only if absent. */
   def servingLayouts: Boolean =
-    sys.env.get("SPARK_GRAFT_SERVE_LAYOUTS")
-      .orElse(sys.props.get("spark.graft.serveLayouts")).contains("1")
+    onOffFlag("SPARK_GRAFT_SERVE_LAYOUTS", "spark.graft.serveLayouts")
+
+  /** An on/off switch read from env var `env`, else system property `prop`:
+    * unset or "0" is off, "1" is on, and any other value is an error naming
+    * the key it came from — "true" must not silently mean off. */
+  private[graft] def onOffFlag(env: String, prop: String): Boolean =
+    sys.env.get(env).map(env -> _).orElse(sys.props.get(prop).map(prop -> _)) match {
+      case None | Some((_, "0")) => false
+      case Some((_, "1")) => true
+      case Some((key, v)) =>
+        throw new IllegalArgumentException(s"$key must be 0 or 1, got '$v'")
+    }
 
   /** Cheap content fingerprint of a source data directory: md5 over the
     * sorted (relative path, length, mtime) of every file under `dir`.

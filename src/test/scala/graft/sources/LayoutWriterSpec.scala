@@ -166,4 +166,30 @@ class LayoutWriterSpec extends SharedSparkSpec {
       }
     } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
+
+  test("serving flags: unset, 0 or 1, else an error naming the key") {
+    def probeSnapshot = graft.operators.MultimodalQueries.probeSnapshotEnabled
+    for ((env, key, read) <- Seq[(String, String, () => Boolean)](
+        ("SPARK_GRAFT_SERVE_LAYOUTS", "spark.graft.serveLayouts", () => LayoutWriter.servingLayouts),
+        ("SPARK_GRAFT_PROBE_SNAPSHOT", "spark.graft.probeSnapshot", () => probeSnapshot))) {
+      assume(sys.env.get(env).isEmpty, s"$env is set, and it overrides $key")
+      val saved = sys.props.get(key)
+      try {
+        sys.props.remove(key)
+        assert(!read())
+        sys.props(key) = "0"
+        assert(!read())
+        sys.props(key) = "1"
+        assert(read())
+        for (bad <- Seq("true", "2")) {
+          sys.props(key) = bad
+          val e = intercept[IllegalArgumentException](read())
+          assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$bad'"), e.getMessage)
+        }
+      } finally saved match {
+        case Some(v) => sys.props(key) = v
+        case None => sys.props.remove(key)
+      }
+    }
+  }
 }

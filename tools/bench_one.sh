@@ -3,11 +3,12 @@
 # or one getRows stream:  tools/bench_one.sh rows:<table>:<col,col,...> [sf_dir] [n]
 # Runs the JVM in a scratch cwd so layout writes (spark-warehouse,
 # derby metastore) land in /tmp, not the repo — gate reruns used to
-# deposit warehouse tables into /root/repo/spark-warehouse.
+# deposit warehouse tables into the checkout's spark-warehouse.
 set -e
 . "$(dirname "$0")/add_opens.sh"
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
 cd "$(mktemp -d /tmp/bench_one.XXXX)"
 java $ADD_OPENS -Xmx8g \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/opt/spark/jars/*:/root/repo/target/scala-2.13/classes" \
+  -cp "/opt/spark/jars/*:$ROOT/target/scala-2.13/classes" \
   graft.BenchOne "$1" "${2:-/root/testdata/sf0.1}" "${3:-3}"

@@ -46,6 +46,9 @@ Env: BUDGET_GATE_SF (sf dir for offender reruns, default /root/testdata/sf0.1),
 """
 import os, sys, json, re, statistics, subprocess
 
+# The checkout this script lives in: its bench_one.sh runs that tree.
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 RERUN_MAX = 2        # at most this many offenders are attributable as transients
 UNIFORM_MEDIAN = 1.25  # board median ratio above this = host-noise signature
 ABS_FLOOR = 1.0      # seconds: limit = max(budget*tol, budget + ABS_FLOOR) —
@@ -113,7 +116,7 @@ def rerun_cold(name, sf_dir):
     try:
         out = subprocess.run(
             ["tools/bench_one.sh", name, sf_dir, "1"],
-            capture_output=True, text=True, timeout=900, cwd="/root/repo",
+            capture_output=True, text=True, timeout=900, cwd=ROOT,
             env={**os.environ, "SPARK_GRAFT_WARMUP": warmup_chain(name)})
     except Exception as e:
         print(f"[budget_gate]   rerun of {name} failed to launch: {e}")

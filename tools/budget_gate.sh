@@ -7,7 +7,8 @@
 set -e
 set -o pipefail
 . "$(dirname "$0")/add_opens.sh"
-cd /root/repo
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+cd "$ROOT"
 SF=${1:-/root/testdata/sf0.1}
 TOL=${2:-2.0}
 COMPILE_LOG=$(mktemp)
@@ -22,6 +23,6 @@ echo "[budget_gate] cold pass (fresh JVM, scratch cwd $TMP) ..."
   SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS=32 SPARK_GRAFT_COLD_ONLY=1 \
   java $ADD_OPENS -Xmx8g -Dspark.ui.enabled=false \
     -Dspark.sql.session.timeZone=UTC \
-    -cp "/opt/spark/jars/*:/root/repo/target/scala-2.13/classes" graft.Bench \
+    -cp "/opt/spark/jars/*:$ROOT/target/scala-2.13/classes" graft.Bench \
     > "$TMP/stdout.log" 2>&1 )
 BUDGET_GATE_SF="$SF" python3 tools/budget_gate.py "$TMP/BENCH_DETAIL.json" COLD_BUDGET.json "$TOL"

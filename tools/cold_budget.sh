@@ -9,7 +9,8 @@
 set -e
 set -o pipefail
 . "$(dirname "$0")/add_opens.sh"
-cd /root/repo
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+cd "$ROOT"
 SF=${1:-/root/testdata/sf0.1}
 N=${2:-3}
 OUT=${3:-COLD_BUDGET.json}
@@ -35,7 +36,7 @@ for i in $(seq 1 "$N"); do
     SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS=32 SPARK_GRAFT_COLD_ONLY=1 \
     java $ADD_OPENS -Xmx8g -Dspark.ui.enabled=false \
       -Dspark.sql.session.timeZone=UTC \
-      -cp "/opt/spark/jars/*:/root/repo/target/scala-2.13/classes" graft.Bench \
+      -cp "/opt/spark/jars/*:$ROOT/target/scala-2.13/classes" graft.Bench \
       > "$TMP/stdout_$i.log" 2>&1 )
   cp "$PASSDIR/BENCH_DETAIL.json" "$TMP/pass_$i.json"
 done

@@ -12,20 +12,21 @@
 set -e
 set -o pipefail
 . "$(dirname "$0")/add_opens.sh"
-cd /root/repo
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+cd "$ROOT"
 OUT=${1:-/tmp/core_scaling.tsv}
 shift || true
 QUERIES=${@:-"q36_dedup_ngram_jaccard q47_tfidf q55_dedup_fuzzy \
 q68_salted_join q109_multimodal_pipeline q126_profile q135_video_frames \
 q153_crossdoc_spans q161_mad_outliers q175_ngram_novelty"}
-SF_DIR=${SF_DIR:-/root/repo/scaledata/sf1x}
+SF_DIR=${SF_DIR:-$ROOT/scaledata/sf1x}
 echo -e "query\tcpus\tcold_s\twarm_s" > "$OUT"
 for q in $QUERIES; do
   for cpus in 8 32; do
     LOG=$(mktemp)
     SPARK_GRAFT_CPUS=$cpus java $ADD_OPENS -Xmx${BENCH_XMX:-12g} \
       -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-      -cp "/opt/spark/jars/*:/root/repo/target/scala-2.13/classes" \
+      -cp "/opt/spark/jars/*:$ROOT/target/scala-2.13/classes" \
       graft.BenchOne "$q" "$SF_DIR" 3 > "$LOG" 2>&1 || { echo "FAIL $q $cpus"; tail -5 "$LOG"; exit 1; }
     COLD=$(grep -oP 'run1: \K[0-9.]+' "$LOG")
     W2=$(grep -oP 'run2: \K[0-9.]+' "$LOG")

@@ -22,7 +22,8 @@
 #       SAMPLES=3 fresh-JVM samples per cell (>= 3 for citable numbers)
 set -e
 . "$(dirname "$0")/add_opens.sh"
-cd /root/repo
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+cd "$ROOT"
 N=${1:-3}
 SAMPLES=${SAMPLES:-3}
 run() { # sf_dir xmx shuffle_partitions query
@@ -33,7 +34,7 @@ run() { # sf_dir xmx shuffle_partitions query
     rc=0
     SPARK_GRAFT_SHUFFLE_PARTITIONS=$3 java $ADD_OPENS -Xmx$2 \
       -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-      -cp "/opt/spark/jars/*:target/scala-2.13/classes" \
+      -cp "/opt/spark/jars/*:$ROOT/target/scala-2.13/classes" \
       graft.BenchOne "$4" "$1" "$N" >"$log" 2>&1 || rc=$?
     if [ "$rc" -ne 0 ]; then
       echo "  FAILED: exit $rc for $4 @ $1 (sample $s)"
@@ -73,9 +74,9 @@ q231_crossmodal_index_layout q232_crossmodal_emb_layout"
 for q in ${QUERIES:-$DEFAULT_QUERIES}; do
   for sf in ${DECADES:-sf1x sf10x sf100x}; do
     case $sf in
-      sf1x)   run /root/repo/scaledata/sf1x   12g 32  "$q" ;;
-      sf10x)  run /root/repo/scaledata/sf10x  24g 64  "$q" ;;
-      sf100x) run /root/repo/scaledata/sf100x 72g 256 "$q" ;;
+      sf1x)   run $ROOT/scaledata/sf1x   12g 32  "$q" ;;
+      sf10x)  run $ROOT/scaledata/sf10x  24g 64  "$q" ;;
+      sf100x) run $ROOT/scaledata/sf100x 72g 256 "$q" ;;
       *)      echo "unknown decade: $sf" ; exit 2 ;;
     esac
   done

@@ -22,7 +22,8 @@ import sys, os, shutil
 import duckdb
 
 src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-out = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/scaledata/sf1x"
+out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scaledata", "sf1x")
 F = int(sys.argv[3]) if len(sys.argv) > 3 else 10
 # Replica token-prefix LETTER — must be UNIQUE per application depth.
 # With a fixed letter, chained applications collide: sf10x replica k>0 of

@@ -21,7 +21,7 @@ to refresh only the rerun entries.
 import os, re, sys, json, statistics, subprocess
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from budget_gate import CACHE_UPSTREAM, warmup_chain
+from budget_gate import CACHE_UPSTREAM, ROOT, warmup_chain
 
 
 class MeasureError(Exception):
@@ -32,7 +32,7 @@ def measure(name, sf_dir):
     try:
         out = subprocess.run(
             ["tools/bench_one.sh", name, sf_dir, "1"],
-            capture_output=True, text=True, timeout=900, cwd="/root/repo",
+            capture_output=True, text=True, timeout=900, cwd=ROOT,
             env={**os.environ, "SPARK_GRAFT_WARMUP": warmup_chain(name)})
     except Exception as e:  # TimeoutExpired, OSError, ...
         raise MeasureError(f"launch/timeout: {e}")

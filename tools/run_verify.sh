@@ -4,7 +4,8 @@
 # Usage: tools/run_verify.sh [sf_dir] [out_dir] [query_filter]
 set -e
 . "$(dirname "$0")/add_opens.sh"
-cd /root/repo
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+cd "$ROOT"
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/graft_verify}
 # Gate on sbt's exit status (the old grep-for-success let a compile
@@ -18,6 +19,6 @@ fi
 rm -rf "$OUT"
 java $ADD_OPENS -Xmx8g \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/opt/spark/jars/*:target/scala-2.13/classes" \
+  -cp "/opt/spark/jars/*:$ROOT/target/scala-2.13/classes" \
   graft.Verify "$SF" "$OUT"
 python3 tools/oracle_check.py "$SF" "$OUT" "$3"

@@ -8,7 +8,8 @@
 set -e
 set -o pipefail
 . "$(dirname "$0")/add_opens.sh"
-cd /root/repo
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+cd "$ROOT"
 OUT=${1:-/tmp/scale_check.tsv}
 shift || true
 QUERIES=${@:-"q36_dedup_ngram_jaccard q104_cluster_profile q122_pagerank \
@@ -18,13 +19,13 @@ q215_curation_incremental"}
 echo -e "query\tsf\tcold_s\twarm_s" > "$OUT"
 # The two fixture dirs to compare (low then high); override for other
 # decades, e.g. SF_DIRS="scaledata/sf1x scaledata/sf10x" for the second.
-SF_DIRS=${SF_DIRS:-"/root/testdata/sf0.1 /root/repo/scaledata/sf1x"}
+SF_DIRS=${SF_DIRS:-"/root/testdata/sf0.1 $ROOT/scaledata/sf1x"}
 for q in $QUERIES; do
   for sf in $SF_DIRS; do
     LOG=$(mktemp)
     SPARK_GRAFT_CPUS=32 java $ADD_OPENS -Xmx${BENCH_XMX:-12g} \
       -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-      -cp "/opt/spark/jars/*:/root/repo/target/scala-2.13/classes" \
+      -cp "/opt/spark/jars/*:$ROOT/target/scala-2.13/classes" \
       graft.BenchOne "$q" "$sf" 3 > "$LOG" 2>&1 || { echo "FAIL $q $sf"; tail -5 "$LOG"; exit 1; }
     COLD=$(grep -oP 'run1: \K[0-9.]+' "$LOG")
     W2=$(grep -oP 'run2: \K[0-9.]+' "$LOG")
