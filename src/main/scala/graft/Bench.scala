@@ -93,7 +93,7 @@ object Bench {
     // on a shared box rides run-to-run contention noise (round-3 saw warm >
     // cold inversions of 3-5x on queries whose plans hadn't changed).
     val results = pass()
-    // SPARK_GRAFT_COLD_ONLY=1 (tools/cold_budget.sh): skip the two warm
+    // SPARK_GRAFT_COLD_ONLY=1 (tools/budget.py): skip the two warm
     // passes — the budget generator runs N whole-suite cold passes in fresh
     // JVMs and only the first-execution numbers matter, so paying ~2×warm
     // per pass would triple its wall-clock for data it discards.
@@ -148,7 +148,7 @@ object Bench {
     // sidecar file; the stdout line stays compact because the driver keeps only
     // the LAST 2000 chars of output and parses the JSON line out of that tail —
     // a 64-query map with full names and 9-decimal times overflows it.
-    // Cold-only runs (tools/cold_budget.sh) must be UNMISTAKABLE in the
+    // Cold-only runs (tools/budget.py) must be UNMISTAKABLE in the
     // artifact: r10 committed a budget-pass BENCH_DETAIL.json whose
     // "queries_warm" silently duplicated the cold times. Now cold-only
     // output carries "cold_only":true and NO warm fields at all.

@@ -2,11 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one session recipe of the engine's mains (Bench, Verify, BenchOne,
-  * PhaseProbe, ExplainDump, plans.PlanCheck), so a plan printed or timed by
-  * any of them is the plan Bench runs. Bench's and Verify's timings and
-  * outputs are read against this exact configuration: change nothing here
-  * without both in mind. */
+/** The one session recipe of the engine's mains (Bench, Verify, BenchOne),
+  * so a plan printed or timed by any of them is the plan Bench runs.
+  * Bench's and Verify's timings and outputs are read against this exact
+  * configuration: change nothing here without both in mind. */
 object LocalSession {
   /** Cores of the local master, `SPARK_GRAFT_CPUS` (default 32) — also the
     * default shuffle width. */

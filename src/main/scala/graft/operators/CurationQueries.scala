@@ -993,7 +993,7 @@ object CurationQueries {
     // construction (Dataset.checkpoint calls toRdd immediately), and the
     // r17 shape planned ~8 frames per slice × 3 generations — ~2.5 s of
     // pure driver-side planning per q216 run with every executor idle
-    // (PhaseProbe: construct-bound). A frame now checkpoints only when
+    // (BenchOne: construct-bound). A frame now checkpoints only when
     // that buys something: MULTIPLE consumers (keyedMin feeds the ledger
     // probe, the exact survivors and the admitted-key accumulator; t3g /
     // t3gInv / t4g feed 2–4 consumers each) — single-consumer frames
