@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.ParquetRowReader
+import org.apache.spark.JobCounter
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.QueryPlanningTracker
@@ -18,7 +19,8 @@ import org.apache.spark.sql.execution.FormattedMode
   * construct (the imperative body plus analysis), optimize, physical and
   * execute — to tell plan-walk overhead from real work. Optimize and
   * physical are read from the [[QueryPlanningTracker]] of the plan the run
-  * then executes, so the query is planned once per run.
+  * then executes, so the query is planned once per run. Each line also
+  * counts the Spark jobs the run started, construction included.
   *
   * `SPARK_GRAFT_EXPLAIN=1` prints each query's formatted plan (the one
   * `plans/rNN/` commits) after the warmup; the scan/join/exchange/aggregate
@@ -29,14 +31,14 @@ object BenchOne {
     * its phases and compiles stay 0. */
   final case class Run(name: String, run: Int, secs: Double, rows: Long,
       construct: Double = 0, optimize: Double = 0, physical: Double = 0,
-      execute: Double = 0, compiles: Long = 0) {
+      execute: Double = 0, compiles: Long = 0, jobs: Long = 0) {
     // The `<name> runN: <secs>s (` prefix is what tools/budget.py and
     // tools/sweep parse.
     def line: String =
       if (name.startsWith("rows:"))
         f"$name run$run: $secs%.2fs ($rows rows, ${rows / secs}%.0f rows/s)"
       else
-        f"$name run$run: $secs%.2fs ($rows rows, $compiles codegen compiles; " +
+        f"$name run$run: $secs%.2fs ($rows rows, $compiles codegen compiles, $jobs jobs; " +
           f"construct=$construct%.2f optimize=$optimize%.2f physical=$physical%.2f " +
           f"execute=$execute%.2f)"
   }
@@ -90,7 +92,7 @@ object BenchOne {
         (1 to n).iterator.map(i => timeRows(spark, name, i, s"$sfDir/$table.parquet", columns))
       case _ =>
         val fn = SparkEntry.queries(name)
-        (1 to n).iterator.map(i => timeQuery(name, i, fn(spark, sfDir)))
+        (1 to n).iterator.map(i => timeQuery(spark, name, i, fn(spark, sfDir)))
     }
 
   private def timeRows(spark: SparkSession, name: String, i: Int,
@@ -104,26 +106,31 @@ object BenchOne {
 
   /** One run of a query: build it, plan the `groupBy().count()` that
     * `count()` would run, then collect that same plan. Each run also counts
-    * the codegen classes it compiled: a warm run that still compiles is
-    * losing its classes from Spark's codegen cache. */
-  private def timeQuery(name: String, i: Int, build: => DataFrame): Run = {
+    * the codegen classes it compiled (a warm run that still compiles is
+    * losing its classes from Spark's codegen cache) and the jobs it
+    * started. */
+  private def timeQuery(spark: SparkSession, name: String, i: Int,
+      build: => DataFrame): Run = {
     def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    val c0 = compiles
-    val t0 = System.nanoTime()
-    val counted = build.groupBy().count()
-    val t1 = System.nanoTime()
-    val qe = counted.queryExecution
-    qe.executedPlan
-    val t2 = System.nanoTime()
-    val rows = counted.collect().head.getLong(0)
-    val t3 = System.nanoTime()
-    val phases = qe.tracker.phases
-    def phase(p: String) = phases.get(p).fold(0.0)(_.durationMs / 1e3)
-    Run(name, i, (t3 - t0) / 1e9, rows,
-      construct = (t1 - t0) / 1e9,
-      optimize = phase(QueryPlanningTracker.OPTIMIZATION),
-      physical = phase(QueryPlanningTracker.PLANNING),
-      execute = (t3 - t2) / 1e9,
-      compiles = compiles - c0)
+    val (run, jobs) = JobCounter(spark.sparkContext) {
+      val c0 = compiles
+      val t0 = System.nanoTime()
+      val counted = build.groupBy().count()
+      val t1 = System.nanoTime()
+      val qe = counted.queryExecution
+      qe.executedPlan
+      val t2 = System.nanoTime()
+      val rows = counted.collect().head.getLong(0)
+      val t3 = System.nanoTime()
+      val phases = qe.tracker.phases
+      def phase(p: String) = phases.get(p).fold(0.0)(_.durationMs / 1e3)
+      Run(name, i, (t3 - t0) / 1e9, rows,
+        construct = (t1 - t0) / 1e9,
+        optimize = phase(QueryPlanningTracker.OPTIMIZATION),
+        physical = phase(QueryPlanningTracker.PLANNING),
+        execute = (t3 - t2) / 1e9,
+        compiles = compiles - c0)
+    }
+    run.copy(jobs = jobs)
   }
 }

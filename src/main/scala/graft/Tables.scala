@@ -120,11 +120,6 @@ object dsl {
   def foldSum(arr: Column): Column =
     aggregate(arr, lit(0.0), (acc, x) => acc + x)
 
-  /** Dot product of two float-array columns in double precision, fixed
-    * fold order (matches the DuckDB oracle expression exactly). */
-  def dot(a: Column, b: Column): Column =
-    foldSum(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")))
-
   /** L2 norm of a float-array column in double precision. */
   def l2norm(a: Column): Column =
     sqrt(foldSum(transform(a, x => x.cast("double") * x.cast("double"))))

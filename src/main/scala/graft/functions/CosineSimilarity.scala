@@ -14,8 +14,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * Numeric contract: accumulates dot and both norms in index order with
   * double precision and combines as dot / (sqrt(nx) * sqrt(ny)) — bit-for-bit
   * identical to the fold-based formulation mirrored in the DuckDB oracles
-  * (dsl.dot / dsl.l2norm), so swapping it into oracle-checked queries cannot
-  * change results.
+  * (`list_reduce` left folds from 0.0), so swapping it into oracle-checked
+  * queries cannot change results.
   *
   * Zero-length or zero-norm inputs yield NaN (division by zero), matching
   * the fold-based expression's behavior.

@@ -259,7 +259,6 @@ object KMeansTrainer {
       sub: IndexedSeq[Trained],
       k2: Int,
       iters: Int) {
-    def fineStride: Int = k2
     def fineCentroid(f: Int): Array[Double] = sub(f / k2).centroids(f % k2)
   }
 

@@ -97,25 +97,6 @@ object PqIndex {
   def adcScore(lut: Column, codes: Column): Column =
     PqCodec.adc(lut, codes)
 
-  /** Train the M subspace codebooks on an explicitly provided driver-side
-    * sample — the generic twin of [[trainedModel]] for vector columns other
-    * than the embeddings table (q218 trains on media-derived vectors). Same
-    * contract: id-sorted sample, per-subspace [[KMeansTrainer.trainLocal]],
-    * ties on the lowest centroid id. */
-  def trainModelOn(sample: Seq[(Long, Array[Double])]): Model = {
-    val sorted = sample.sortBy(_._1).toIndexedSeq
-    require(sorted.length >= K,
-      s"PQ training needs >= $K sample vectors, got ${sorted.length}")
-    require(sorted.forall(_._2.length == M * SubDim),
-      s"PQ expects ${M * SubDim}-dim vectors")
-    Model((0 until M).map { s =>
-      val sub = sorted.map { case (id, v) =>
-        (id, v.slice(s * SubDim, (s + 1) * SubDim))
-      }
-      KMeansTrainer.trainLocal(sub, K, MaxIters, Tol).centroids
-    })
-  }
-
   /** Symmetric-distance (SDC) pair score: approx squared L2 between two
     * CODED vectors = Σ_s sdc(s)(codeA(s))(codeB(s)), where sdc is the
     * M×K×K codeword-to-codeword distance table riding the plan as an ~8 KB
@@ -138,10 +119,6 @@ object PqIndex {
         element_at(codesA, s + 1) + 1), element_at(codesB, s + 1) + 1)
     }.reduce(_ + _)
   }
-
-  /** Local SDC score (parity oracle for [[sdcScore]]). */
-  def sdcScoreLocal(a: Array[Int], b: Array[Int], m: Model): Double =
-    (0 until M).map(s => KMeansTrainer.d2(m.codebooks(s)(a(s)), m.codebooks(s)(b(s)))).sum
 
   /** Local encoder (parity oracle for [[encodeExpr]] in PqSpec). */
   def encodeLocal(v: Array[Double], m: Model): Array[Int] =

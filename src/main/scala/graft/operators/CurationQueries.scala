@@ -4,6 +4,8 @@ import graft.{Artifacts, EngineQuery}
 import graft.dsl._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 
 /** The END-TO-END curation pipeline — the chain a training-data run executes
   * nightly, here as ONE oracled query so the stages are proven to COMPOSE
@@ -127,11 +129,11 @@ object CurationQueries {
     // min doc_id per digest survives). The survivor set leaves this stage as
     // an id-scale frame — text never flows between stages.
     // Lazy stage checkpoints (round 17, the q222/q216 lesson): each
-    // id-frame still materializes once — the propagation loop's first
-    // superstep actions s2ids, the report actions the rest — without a
-    // blocking construction-time job per stage.
-    val s2ids = digests(s1).groupBy("key").agg(min(col("doc_id")).as("doc_id"))
-      .select("doc_id").localCheckpoint(eager = false)
+    // id-frame materializes once. Under AQE, building a lazy checkpoint
+    // runs the frame's shuffle and broadcast stages on the spot; only its
+    // last stage waits for the first action (the propagation loop's first
+    // superstep for s2ids, the report for the rest).
+    val s2ids = perKeyMin(digests(s1)).select("doc_id").localCheckpoint(eager = false)
     def stage(ids: DataFrame): DataFrame = raw.join(ids, Seq("doc_id"), "left_semi")
 
     // Stage 3 — near-dup dedup. Pairwise Jaccard does not depend on the
@@ -278,8 +280,7 @@ object CurationQueries {
       val pairList = TextQueries.corpusJaccardPairs(t)
         .select(col("doc_a"), col("doc_b"))
       val base1 = raw.filter(!isBatch && qualityOk)
-      val base2ids = digests(base1).groupBy("key").agg(min(col("doc_id")).as("doc_id"))
-        .select("doc_id").localCheckpoint()
+      val base2ids = perKeyMin(digests(base1)).select("doc_id").localCheckpoint()
       val basePairs = pairList
         .join(base2ids.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"), "left_semi")
         .join(base2ids.withColumnRenamed("doc_id", "doc_b"), Seq("doc_b"), "left_semi")
@@ -454,13 +455,8 @@ object CurationQueries {
     // each runs on its own thread (guide §2.6: overlap independent jobs;
     // they were serialized, each leaving the cores idle through the next
     // one's planning and commit).
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val stats =
-      try Await.result(Future.sequence(deltas.map { case (member, df) =>
+    val stats = overlapped { implicit ec =>
+      Await.result(Future.sequence(deltas.map { case (member, df) =>
         Future {
           val (_, _, cols) = familySpec.find(_._1 == member).get
           val rows = df.count()
@@ -470,7 +466,7 @@ object CurationQueries {
           (member, rows, df.queryExecution.executedPlan.toString)
         }
       }), Duration.Inf)
-      finally pool.shutdown()
+    }
     FamilyAppendStats(
       stats.map(s => s._1 -> s._2).toMap,
       stats.map(s => s._1 -> s._3).toMap)
@@ -805,23 +801,43 @@ object CurationQueries {
     * two upfront scans bound them all. Still truth, never optimizer
     * estimates, and still no-degrade: a bulk backfill over the bound
     * keeps the shuffle join — strictly MORE conservative than per-frame
-    * counts, never less. */
+    * counts, never less. The bounds replace the decision counts, not the
+    * construction-time jobs: under AQE each lazy checkpoint of a decided
+    * frame still runs the frame's shuffle and broadcast stages as it is
+    * built (see [[curationStepFrom]]'s checkpoint note). */
   private[graft] final case class DeltaBounds(ids: Long, postings: Long) {
     def idsSmall: Boolean = ids <= TextQueries.DeltaBroadcastRows
     def postingsSmall: Boolean = postings <= TextQueries.DeltaBroadcastRows
   }
 
-  private def batchDeltaBounds(
+  /** Both bounds from ONE aggregate over the two scans (one job pair, not
+    * two). */
+  private[graft] def batchDeltaBounds(
       raw: DataFrame, sizes: DataFrame,
-      isBatch: org.apache.spark.sql.Column): DeltaBounds =
-    DeltaBounds(
-      raw.filter(isBatch).count(),
-      sizes.filter(isBatch)
-        .agg(coalesce(sum(col("n")), lit(0L))).head().getLong(0))
+      isBatch: org.apache.spark.sql.Column): DeltaBounds = {
+    val r = raw.filter(isBatch).select(lit(1L).as("id"), lit(0L).as("n"))
+      .unionByName(sizes.filter(isBatch).select(lit(0L).as("id"), col("n").cast("long")))
+      .agg(coalesce(sum(col("id")), lit(0L)), coalesce(sum(col("n")), lit(0L))).head()
+    DeltaBounds(r.getLong(0), r.getLong(1))
+  }
 
   /** Broadcast `df` when the caller's precomputed sound bound allows. */
   private def bcastIfBounded(df: DataFrame, small: Boolean): DataFrame =
     if (small) broadcast(df) else df
+
+  /** Width of the funnels' overlap pool: a constant, not a knob. Four
+    * covers q216's widest fan-out (three exact phases plus the bounds). */
+  private val OverlapThreads = 4
+
+  /** Runs `body` with a fresh fixed pool of [[OverlapThreads]] threads,
+    * shut down however `body` ends. Spark runs the jobs that the pool's
+    * threads submit side by side (FIFO back-fill), so independent frames
+    * built on it overlap their construction-time jobs. */
+  private def overlapped[A](body: ExecutionContext => A): A = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(OverlapThreads)
+    try body(ExecutionContext.fromExecutor(pool))
+    finally pool.shutdown()
+  }
 
   /** q215's funnel body over injectable standing inputs (live = session
     * memos, served = at-rest tables): `raw` = per-doc metadata,
@@ -847,29 +863,26 @@ object CurationQueries {
     // 32-byte-key shuffle join, never a store-wide broadcast. The key set
     // is the standing [[frozenStoreKeys]] artifact (q216 shares it).
     // Lazy checkpoints throughout the funnel (round 17, q222's measured
-    // lesson applied to the text twin: per-stage EAGER barriers were the
-    // dominant sf0.1 warm cost — each inserted a blocking job where the
-    // frame still materializes exactly once, and the bcastIfSmall counts
-    // force the decision frames at decision time anyway).
-    val batchKeyed = digests(batch2)
-    // batchMin checkpoints (round 18): it feeds BOTH the store-hit probe
-    // and the exact-survivor anti-join — un-checkpointed, its
-    // groupBy-min shuffle ran twice per funnel. Its two derivations
-    // (batchKeys, storeHits) are single-consumer and inline into their
-    // consumer's job instead of paying a planning pass each (the
-    // checkpoint-discipline note in [[curationStepFrom]]).
-    val batchMin = batchKeyed
-      .join(batchKeyed.groupBy("key").agg(min(col("doc_id")).as("doc_id")),
-        Seq("doc_id"), "left_semi")
-      .localCheckpoint(eager = false)
+    // lesson applied to the text twin): each frame materializes once.
+    // Under AQE a lazy checkpoint still runs its frame's shuffle and
+    // broadcast stages while it is built; an EAGER one added a blocking
+    // job for the last stage too, and those barriers were the dominant
+    // sf0.1 warm cost.
     // Broadcast decisions ride the TWO upfront batch-level bounds
     // ([[batchDeltaBounds]] — cheap scans of the meta/sizes checkpoints)
-    // instead of one blocking count per decided frame.
-    val bounds = batchDeltaBounds(raw, sizes, isBatch)
-    val batchKeys = batchMin.select("key").distinct()
+    // instead of one blocking count per decided frame. The bounds and
+    // batchMin do not read each other, so their jobs run side by side.
+    val (bounds, batchMin) = overlapped { implicit ec =>
+      val boundsF = Future(batchDeltaBounds(raw, sizes, isBatch))
+      // batchMin checkpoints: it feeds BOTH the store-hit probe and the
+      // exact-survivor anti-join. Its keys are unique (one row per key) and
+      // store keys are per-key minima, so neither derivation needs a
+      // distinct.
+      val batchMin = perKeyMin(digests(batch2)).localCheckpoint(eager = false)
+      (Await.result(boundsF, Duration.Inf), batchMin)
+    }
     val storeHits = storeKeys
-      .join(bcastIfBounded(batchKeys, bounds.idsSmall), Seq("key"), "left_semi")
-      .distinct()
+      .join(bcastIfBounded(batchMin.select("key"), bounds.idsSmall), Seq("key"), "left_semi")
     val batch3ids = batchMin
       .join(bcastIfBounded(storeHits, bounds.idsSmall), Seq("key"), "left_anti")
       .select("doc_id").localCheckpoint(eager = false)
@@ -882,7 +895,7 @@ object CurationQueries {
     val batchInv = corpusInv.join(batch3ids, Seq("doc_id"), "left_semi")
       .localCheckpoint(eager = false)
     val batch4ids = batch3ids
-      .join(TextQueries.deltaNearDupDropsFromInvsWith(sizes, storeInv, batchInv,
+      .join(TextQueries.deltaNearDupDrops(sizes, storeInv, batchInv,
           broadcastDelta = bounds.postingsSmall),
         Seq("doc_id"), "left_anti")
       .localCheckpoint(eager = false)
@@ -917,7 +930,7 @@ object CurationQueries {
     * accumulate. Everything here is id-/digest-scale (never text). */
   private[graft] final case class FunnelState(
       storeKeys: DataFrame, storeInv: DataFrame,
-      batchKeys: DataFrame, admittedIds: DataFrame, admittedInv: DataFrame)
+      batchKeys: DataFrame, admittedInv: DataFrame)
 
   private[graft] object FunnelState {
     /** Initial state of an ingest against the FROZEN store: the memoized
@@ -931,7 +944,6 @@ object CurationQueries {
     def frozenFrom(in: CurationInputs): FunnelState =
       FunnelState(in.storeKeys, in.storeInv,
         in.storeKeys.limit(0).localCheckpoint(),
-        in.storeIds.limit(0).localCheckpoint(),
         in.storeInv.limit(0).localCheckpoint())
   }
 
@@ -964,113 +976,198 @@ object CurationQueries {
     * SPARK_GRAFT_SERVE_LAYOUTS=1) the at-rest curation layout tables —
     * one step body, so the continuous serve tail cannot drift.
     *
+    * The step is its three phases in sequence: [[exactPhase]] (reads no
+    * state), [[ledgerPhase]] (the one phase that reads earlier slices'
+    * decisions) and the near-dup tail ([[slicePostings]] then
+    * [[nearDupTail]], which read only earlier slices' postings).
+    * [[curationSchedule]] runs the same phases overlapped.
+    *
     * `bounds`: a caller with a batch-level [[DeltaBounds]] (q216/q234 —
     * every slice is a subset of the batch, so the batch bound is sound
     * for every slice frame) passes it to replace the three per-slice
     * blocking decision counts; callers without one (the spec drivers)
     * keep the per-frame truth counts — same decisions either way at any
-    * in-bound size. */
+    * in-bound size.
+    *
+    * Checkpoint discipline: under AQE a lazy localCheckpoint is not free
+    * at construction. Building it plans its frame adaptively, which runs
+    * every shuffle and broadcast stage below the checkpoint on the spot,
+    * one job each; only the last stage waits for the first action. So a
+    * frame checkpoints only when it has MULTIPLE consumers (the per-key
+    * minima feed the ledger probe and the exact survivors; the admitted
+    * (doc_id, key) rows, t3gInv and t4g feed 2–4 consumers each).
+    * Single-consumer frames (the slice keys, the ledger hits) and the pure
+    * state UNIONS (each leg already a checkpoint scan, so the union
+    * re-executes nothing) inline into their consumer's job. The admitted
+    * rows and t3gInv checkpoint EAGERLY, one count job each: under
+    * [[curationSchedule]] jobs on several threads read them at once, and
+    * Spark deadlocks when a job marks a lazy checkpoint done while the
+    * scheduler submits another job over the same RDD (`RDDCheckpointData`'s
+    * lock and the RDD's state lock, taken in opposite orders; seen as a
+    * hung q216). */
   private[graft] def curationStepFrom(
       in: CurationInputs, sliceIds: DataFrame,
       st: FunnelState,
       bounds: Option[DeltaBounds] = None): (FunnelState, SliceFrames) = {
-    def bcastDecided(df: DataFrame, boundSmall: DeltaBounds => Boolean): DataFrame =
-      bounds match {
-        case Some(b) => bcastIfBounded(df, boundSmall(b))
-        case None => bcastIfSmall(df)
-      }
-    val raw = in.raw
-    val slice = raw.join(sliceIds, Seq("doc_id"), "left_semi")
-    val g2 = slice.filter(qualityOk)
-    // Exact: within-slice min per digest, then the ledger check (store ∪
-    // earlier admissions — q90's asymmetry, sequentially maintained: the
-    // corpus-scale LEDGER streams map-side against the slice digest set;
-    // hits are bounded by |slice| and anti-filter the slice. No explicit
-    // hints — the ledger is never a broadcast build side.
-    val keyed = digests(g2)
-    // Checkpoint DISCIPLINE (round 18 — fewer, load-bearing frames): a
-    // lazy localCheckpoint still pays a full physical-planning pass at
-    // construction (Dataset.checkpoint calls toRdd immediately), and the
-    // r17 shape planned ~8 frames per slice × 3 generations — ~2.5 s of
-    // pure driver-side planning per q216 run with every executor idle
-    // (BenchOne: construct-bound). A frame now checkpoints only when
-    // that buys something: MULTIPLE consumers (keyedMin feeds the ledger
-    // probe, the exact survivors and the admitted-key accumulator; t3g /
-    // t3gInv / t4g feed 2–4 consumers each) — single-consumer frames
-    // (sliceKeys, ledgerHits) and the pure state UNIONS (each leg already
-    // a checkpoint scan, so the union re-executes nothing) inline into
-    // their consumer's one job. Decisions are unchanged: the
-    // bcastDecided bounds are precomputed scalars, never frame counts.
-    val keyedMin = keyed
-      .join(keyed.groupBy("key").agg(min(col("doc_id")).as("doc_id")),
-        Seq("doc_id"), "left_semi")
-      .localCheckpoint(eager = false)
-    val sliceKeys = keyedMin.select("key").distinct()
-    val ledgerHits = st.storeKeys.unionByName(st.batchKeys)
-      .join(bcastDecided(sliceKeys, _.idsSmall), Seq("key"), "left_semi")
-      .distinct()
-    val t3g = keyedMin
-      .join(bcastDecided(ledgerHits, _.idsSmall), Seq("key"), "left_anti")
-      .select("doc_id").localCheckpoint(eager = false)
-    // Near-dup — delta-only pair formation off the standing postings index
-    // (q125's economics): a slice doc drops on a pair with any store member
-    // (either id order), any earlier admitted doc (all lower ids by the
-    // ascending-slice precondition, so the lower-id rule covers them), or a
-    // lower-id member of this slice. The slice survivors' postings are
-    // restricted once and checkpointed: they are the near-dup delta side
-    // NOW and the admitted-postings reference of every LATER slice.
-    val t3gInv = in.corpusInv.join(t3g, Seq("doc_id"), "left_semi")
-      .localCheckpoint(eager = false)
-    val refInv = st.storeInv.unionByName(st.admittedInv)
-    val t4g = t3g
-      .join(TextQueries.deltaNearDupDropsFromInvsWith(in.sizes, refInv, t3gInv,
-          broadcastDelta = bounds.map(_.postingsSmall).getOrElse(
-            t3gInv.count() <= TextQueries.DeltaBroadcastRows)),
-        Seq("doc_id"), "left_anti")
-      .localCheckpoint(eager = false)
-    // Decontaminate vs the same raw src0 benchmark set (the standing hit
-    // artifact restricted to this slice's survivors — id-scale).
-    val t5g = raw.join(t4g, Seq("doc_id"), "left_semi")
-      .filter(col("source") =!= "src0")
-      .join(in.benchHits.join(t4g, Seq("doc_id"), "left_semi"),
-        Seq("doc_id"), "left_anti")
-      .select("doc_id")
+    val ex = exactPhase(in.raw.join(sliceIds, Seq("doc_id"), "left_semi"))
+    val admitted = ledgerPhase(ex, st.storeKeys.unionByName(st.batchKeys), bounds)
+    val t3g = admitted.select("doc_id")
+    val t3gInv = slicePostings(in, t3g)
+    val (t4g, t5g) =
+      nearDupTail(in, t3g, t3gInv, st.storeInv.unionByName(st.admittedInv), bounds)
     // State unions ride UN-checkpointed: every leg is already a
     // checkpointed slice-scale frame, so a later slice's ledger probe
     // unions g−1 checkpoint scans plus one cheap key projection per leg —
     // no recompute, no per-slice planning barrier.
     val next = FunnelState(
       st.storeKeys, st.storeInv,
-      st.batchKeys.unionByName(
-        keyedMin.join(t3g, Seq("doc_id"), "left_semi").select("key")),
-      st.admittedIds.unionByName(t3g),
+      st.batchKeys.unionByName(admitted.select("key")),
       st.admittedInv.unionByName(t3gInv))
-    (next, SliceFrames(sliceIds, g2.select("doc_id"), t3g, t4g, t5g))
+    (next, SliceFrames(sliceIds, ex.quality, t3g, t4g, t5g))
   }
 
-  /** Monotone k-way generation slicing of an id frame WITHOUT a window:
-    * boundaries come from one distributed `approxQuantile` pass (driver
-    * state = k−1 doubles), then membership is a codegen'd `when` chain —
-    * so "today's batch" never funnels through a single unpartitioned
-    * window task (the q14-class bottleneck an `ntile` over the batch would
-    * reintroduce at 100 TB). Slices are ascending in doc_id (gen 1 = lowest
+  /** The exact phase's frames of one slice: its quality survivors (ids)
+    * and their per-key digest minima (doc_id, key). */
+  private[graft] final case class ExactFrames(quality: DataFrame, keyedMin: DataFrame)
+
+  /** Exact phase: quality → digests → per-key min over the slice's
+    * metadata rows ([[docMeta]]'s schema). It reads no funnel state, so
+    * every slice's exact phase may run at once. */
+  private[graft] def exactPhase(slice: DataFrame): ExactFrames = {
+    val g2 = slice.filter(qualityOk)
+    ExactFrames(g2.select("doc_id"), perKeyMin(digests(g2)).localCheckpoint(eager = false))
+  }
+
+  /** The lowest doc_id per digest key of a (doc_id, key) frame, as
+    * (doc_id, key) with one row per key. Each doc has one digest, so the
+    * grouped minimum is the surviving doc's own row: no join back onto
+    * `keyed` is needed. */
+  private[graft] def perKeyMin(keyed: DataFrame): DataFrame =
+    keyed.groupBy("key").agg(min(col("doc_id")).as("doc_id")).select("doc_id", "key")
+
+  /** Ledger phase: the slice's per-key minima (doc_id, key) whose key is
+    * not in `ledger` (store keys ∪ keys admitted by earlier slices) — the
+    * exact survivors, and with their keys the next slices' ledger gain.
+    * q90's asymmetry, sequentially maintained: the corpus-scale LEDGER
+    * streams map-side against the slice digest set; hits are bounded by
+    * |slice| and anti-filter the slice. The ledger is never a broadcast build side.
+    * Neither side needs a distinct: the minima hold one row per key, and
+    * ledger keys are unique (store keys are per-key minima, and an
+    * admitted key is never a ledger hit). */
+  private[graft] def ledgerPhase(
+      ex: ExactFrames, ledger: DataFrame, bounds: Option[DeltaBounds]): DataFrame = {
+    val ledgerHits = ledger
+      .join(bcastIdsDecided(ex.keyedMin.select("key"), bounds), Seq("key"), "left_semi")
+    ex.keyedMin.join(bcastIdsDecided(ledgerHits, bounds), Seq("key"), "left_anti")
+      .localCheckpoint()
+  }
+
+  /** Broadcast an id-bounded slice frame per the caller's [[DeltaBounds]],
+    * or per its own row count when there are none. */
+  private def bcastIdsDecided(df: DataFrame, bounds: Option[DeltaBounds]): DataFrame =
+    bounds.fold(bcastIfSmall(df))(b => bcastIfBounded(df, b.idsSmall))
+
+  /** The postings of a slice's exact survivors `t3g`, restricted once and
+    * checkpointed: they are the near-dup delta side of this slice NOW and
+    * part of the admitted-postings reference of every LATER slice. */
+  private[graft] def slicePostings(in: CurationInputs, t3g: DataFrame): DataFrame =
+    in.corpusInv.join(t3g, Seq("doc_id"), "left_semi").localCheckpoint()
+
+  /** Near-dup tail of one slice: (near-dup survivors, clean survivors).
+    *
+    * Near-dup — delta-only pair formation off the standing postings index
+    * (q125's economics): a slice doc drops on a pair with any store member
+    * (either id order), any earlier admitted doc (`refInv` = the store
+    * postings ∪ the earlier slices' [[slicePostings]]; all lower ids by the
+    * ascending-slice precondition, so the lower-id rule covers them), or a
+    * lower-id member of this slice.
+    *
+    * Decontaminate vs the same raw src0 benchmark set (the standing hit
+    * artifact restricted to this slice's survivors — id-scale). */
+  private[graft] def nearDupTail(
+      in: CurationInputs, t3g: DataFrame, t3gInv: DataFrame, refInv: DataFrame,
+      bounds: Option[DeltaBounds]): (DataFrame, DataFrame) = {
+    val broadcastDelta = bounds.fold(
+      t3gInv.count() <= TextQueries.DeltaBroadcastRows)(_.postingsSmall)
+    val t4g = t3g
+      .join(TextQueries.deltaNearDupDrops(in.sizes, refInv, t3gInv,
+          broadcastDelta = broadcastDelta),
+        Seq("doc_id"), "left_anti")
+      .localCheckpoint(eager = false)
+    val t5g = in.raw.join(t4g, Seq("doc_id"), "left_semi")
+      .filter(col("source") =!= "src0")
+      .join(in.benchHits.join(t4g, Seq("doc_id"), "left_semi"),
+        Seq("doc_id"), "left_anti")
+      .select("doc_id")
+    (t4g, t5g)
+  }
+
+  /** [[curationStepFrom]] folded over id-ordered `slices` from the frozen
+    * store (the step's precondition), with its phases overlapped. A slice
+    * here is its metadata rows (a filter of [[CurationInputs.raw]]), not
+    * its ids: the exact phase then needs no join to find them. Each
+    * phase's checkpoints run their stages as the frame is built, so the
+    * phases' jobs run as soon as their inputs exist:
+    *   - every slice's exact phase, and `bounds`, at once — they read no
+    *     funnel state;
+    *   - the ledger phases in slice order, each once its slice's exact
+    *     phase, the bounds and the previous ledger phase are done;
+    *   - each slice's near-dup tail off that chain, waiting only on the
+    *     earlier slices' postings.
+    * Every phase sees the inputs it sees in the fold, so the frames equal
+    * the fold's slice for slice (CurationStepProps pins it). */
+  private[graft] def curationSchedule(
+      in: CurationInputs, slices: Seq[DataFrame],
+      bounds: => DeltaBounds): Seq[SliceFrames] =
+    overlapped { implicit ec =>
+      val boundsF = Future(Option(bounds))
+      val exactF = slices.map(slice => Future(exactPhase(slice)))
+      var ledger = Future.successful(in.storeKeys)
+      var refInv = Future.successful(in.storeInv)
+      val frames = slices.zip(exactF).map { case (slice, exF) =>
+        val admittedF = for (l <- ledger; ex <- exF; b <- boundsF) yield ledgerPhase(ex, l, b)
+        ledger = for (l <- ledger; a <- admittedF) yield l.unionByName(a.select("key"))
+        val t3gF = admittedF.map(_.select("doc_id"))
+        val invF = t3gF.map(slicePostings(in, _))
+        val tailF = for (ref <- refInv; ex <- exF; t3g <- t3gF; inv <- invF; b <- boundsF)
+          yield {
+            val (t4g, t5g) = nearDupTail(in, t3g, inv, ref, b)
+            SliceFrames(slice.select("doc_id"), ex.quality, t3g, t4g, t5g)
+          }
+        refInv = for (ref <- refInv; inv <- invF) yield ref.unionByName(inv)
+        tailF
+      }
+      Await.result(Future.sequence(frames), Duration.Inf)
+    }
+
+  /** Monotone k-way generation slicing of a doc_id-keyed frame WITHOUT a
+    * window: boundaries come from one distributed `approxQuantile` pass
+    * (driver state = k−1 doubles), then membership is a codegen'd `when`
+    * chain — so "today's batch" never funnels through a single
+    * unpartitioned window task (the q14-class bottleneck an `ntile` over
+    * the batch would reintroduce at 100 TB). Slices are ascending in doc_id (gen 1 = lowest
     * ids), satisfying [[curationStep]]'s precondition; the boundary
     * placement is approximate, which is immaterial — CurationStepProps
     * proves the funnel's decisions are invariant under how the batch is
     * sliced, and the shared q215 oracle hash pins it end-to-end. */
-  private[graft] def generations(ids: DataFrame, k: Int): DataFrame = {
+  private[graft] def generations(docs: DataFrame, k: Int): DataFrame = {
     val probs = (1 until k).map(_.toDouble / k).toArray
-    val bounds = ids.stat.approxQuantile("doc_id", probs, 0.001)
+    // One generation has no boundary (approxQuantile rejects no probabilities).
+    val bounds =
+      if (probs.isEmpty) Array.empty[Double]
+      else docs.stat.approxQuantile("doc_id", probs, 0.001)
     val gen = bounds.zipWithIndex.foldRight(lit(k)) { case ((b, i), acc) =>
       when(col("doc_id") <= b, lit(i + 1)).otherwise(acc)
     }
-    ids.withColumn("gen", gen)
+    docs.withColumn("gen", gen)
   }
 
   /** The CONTINUOUS form of q215 — the q177/q187 convention's third member:
     * the daily batch arrives as id-ordered micro-batches, each processed by
-    * [[curationStep]] against the frozen store plus the sequentially
-    * maintained ledger, and the funnel report accumulates across arrivals.
+    * [[curationStep]]'s phases against the frozen store plus the
+    * sequentially maintained ledger ([[curationSchedule]] overlaps the
+    * phases across slices), and the funnel report accumulates across
+    * arrivals.
     * Shares q215's oracle SQL VERBATIM: sequential-per-slice processing is
     * provably decision-identical to the one-shot batch rules (the ledger
     * carries admitted-past-exact digests, so the within-batch min rule and
@@ -1097,21 +1194,16 @@ object CurationQueries {
     def stage(ids: DataFrame): DataFrame = raw.join(ids, Seq("doc_id"), "left_semi")
     val storeIds = in.storeIds
     // Three id-ordered generations of today's batch (ascending-id slices —
-    // curationStep's precondition).
-    val gens = generations(raw.filter(isBatch).select(col("doc_id")), 3)
-      .localCheckpoint(eager = false)
+    // curationStep's precondition). Not checkpointed: a slice is a filter
+    // over the metadata checkpoint, and the three exact phases read it at
+    // once (see curationStepFrom's note on lazy checkpoints and threads).
+    val gens = generations(raw.filter(isBatch), 3)
     // One batch-level bound pair serves every slice's broadcast decisions
     // (slices partition the batch) — 2 cheap scans instead of 9 blocking
     // per-frame counts across the three generations.
-    val bounds = Some(batchDeltaBounds(raw, in.sizes, isBatch))
-    var st = FunnelState.frozenFrom(in)
-    val slices = (1 to 3).map { g =>
-      val (next, frames) =
-        curationStepFrom(in, gens.filter(col("gen") === g).select("doc_id"),
-          st, bounds)
-      st = next
-      frames
-    }
+    val slices = curationSchedule(in,
+      (1 to 3).map(g => gens.filter(col("gen") === g)),
+      batchDeltaBounds(raw, in.sizes, isBatch))
     def acc(f: SliceFrames => DataFrame): DataFrame =
       slices.map(f).reduce(_ unionByName _)
     orderedByAll(
@@ -1155,12 +1247,7 @@ object CurationQueries {
     //    checkpoint, never the private tables the append mutates).
     // Results are unchanged — every future's value feeds the same
     // equality comparisons.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    try {
+    overlapped { implicit ec =>
       def privateTbl(member: String, tag: String, df: DataFrame): (String, String) = {
         val (_, _, cols) = familySpec.find(_._1 == member).get
         val name = graft.sources.LayoutWriter.deterministicName(tag, t.dir, width)
@@ -1209,7 +1296,7 @@ object CurationQueries {
         parityOk))
         .toDF("n_store_before", "n_admitted", "n_keys_appended",
           "n_postings_appended", "parity_ok"))
-    } finally pool.shutdown()
+    }
   }
 
   val all: Seq[EngineQuery] = Seq(q214, q215, q216, q227, q234)

@@ -490,12 +490,6 @@ object EvalQueries {
           .otherwise(0).cast("int").as("alert")))
   }
 
-  /** Evict the memoized exact ranking — the dir-turnover drop hook the
-    * standing checkpoint was missing (a long session sweeping dirs would
-    * otherwise pin one ranked frame per dir for its lifetime). */
-  private[graft] def dropRankedPrice(t: graft.Tables): Unit =
-    Artifacts.forget(t, "q208ranked")
-
   /** q208: approximate-quantile audit — measure percentile_approx's actual
     * rank error against EXACT order statistics before trusting it at
     * 100 TB (the audit-your-sketches discipline: the approx path is the

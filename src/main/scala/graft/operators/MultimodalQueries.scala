@@ -2553,20 +2553,6 @@ object MultimodalQueries {
         transform(col("es"), e => e.getField("sig")).as("sigs"),
         flatten(transform(col("es"), e => e.getField("embedding"))).as("embs"))
 
-  /** Inverse of [[packIngest]]: a packed per-bucket row back to flat
-    * (doc_id, bucket, sig, embedding) rows. Generate preserves the child's
-    * outputPartitioning, so unpacking a bucket-partitioned packed frame
-    * stays exchange-free into a re-pack. */
-  private[graft] def unpackIngest(
-      packed: org.apache.spark.sql.DataFrame,
-      dim: Int = 64): org.apache.spark.sql.DataFrame =
-    packed
-      .select(col("bucket"), col("sigs"), col("embs"),
-        posexplode(col("ids")).as(Seq("i", "doc_id")))
-      .select(col("doc_id"), col("bucket"),
-        get(col("sigs"), col("i")).as("sig"),
-        slice(col("embs"), col("i") * lit(dim) + lit(1), lit(dim)).as("embedding"))
-
   /** Fold flat delta rows into a packed ledger — ONE delta-sized pack
     * shuffle plus ONE co-partitioned full-outer join, merging each touched
     * bucket's parallel arrays id-asc AT THE ARRAY LEVEL (re-zip to entry

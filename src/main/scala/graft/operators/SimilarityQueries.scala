@@ -154,7 +154,7 @@ object SimilarityQueries {
   }
 
   /** Cosine via the native codegen'd Catalyst expression — bit-identical to
-    * the fold-based dsl.dot/l2norm formulation the DuckDB oracles mirror
+    * the fold-based dot/norm formulation the DuckDB oracles mirror
     * (see graft.functions.CosineSimilarity's numeric contract). */
   private def cosine(aEmb: Column, bEmb: Column): Column =
     graft.functions.CosineSimilarity(aEmb, bEmb)

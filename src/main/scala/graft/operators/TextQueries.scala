@@ -307,34 +307,8 @@ object TextQueries {
     ngramJaccardPairsFrom(inv, sizes)
   }
 
-  /** DELTA-ONLY near-dup drops — q125's standing-index economics lifted to
-    * pair FORMATION for the incremental funnels (q215/q216): which members
-    * of `deltaIds` pair (exact 5-gram Jaccard ≥ 0.5) with any member of
-    * `refIds` (either id order — the frozen store/ledger reference) or with
-    * a LOWER-id member of `deltaIds` (the within-batch earlier-member
-    * rule). The memoized corpus postings stream map-side restricted to
-    * ref ∪ delta; the DELTA side is the natural build side (bounded by the
-    * ingest, never the corpus — the q90 asymmetry, fuzzy form), but the
-    * choice is left to AQE rather than a broadcast() hint: a hint never
-    * degrades, so a bulk backfill (a delta at 10% of the corpus) would die
-    * at the broadcast limit instead of falling back to a shuffle join.
-    * CurationPlanSpec's no-corpus-build-side audit still pins the
-    * dangerous direction. The candidate-pair aggregation is bounded by
-    * |delta| × near-dup fan-in.
-    * Nothing here depends on the full-corpus pair artifact, so the nightly
-    * chain exercises the exact mechanism a production incremental run pays:
-    * delta-sized work beyond the standing index. Exact semantics (every
-    * pair sharing ≥ 1 shingle is counted), proven by q215/q216 still
-    * hash-matching their from-text DuckDB oracle. Docs under 5 tokens have
-    * no postings and can never drop — the oracle's `ntok >= 5` guard. */
-  private[operators] def deltaNearDupDrops(
-      t: graft.Tables,
-      refIds: org.apache.spark.sql.DataFrame,
-      deltaIds: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    deltaNearDupDropsFromRefInv(t, refPostings(t, refIds), deltaIds)
-
   /** The memoized corpus postings restricted to a reference id set — the
-    * ref side of [[deltaNearDupDropsFromRefInv]]. Callers whose reference
+    * ref side of [[deltaNearDupDrops]]. Callers whose reference
     * is SLICE-INVARIANT (q216's frozen store across generations) compute
     * this once and checkpoint it instead of re-restricting per slice. */
   private[operators] def refPostings(
@@ -342,33 +316,6 @@ object TextQueries {
       refIds: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     corpusPostings(t)._1.join(refIds, Seq("doc_id"), "left_semi")
 
-  /** [[deltaNearDupDrops]] with the reference postings PRE-RESTRICTED
-    * (`refInv` = [[refPostings]] of the ref set, possibly checkpointed /
-    * unioned by the caller). */
-  private[operators] def deltaNearDupDropsFromRefInv(
-      t: graft.Tables,
-      refInv: org.apache.spark.sql.DataFrame,
-      deltaIds: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val (inv, _) = corpusPostings(t)
-    deltaNearDupDropsFromInvs(t, refInv, inv.join(deltaIds, Seq("doc_id"), "left_semi"))
-  }
-
-  /** [[deltaNearDupDropsFromRefInv]] with BOTH sides pre-restricted: the
-    * delta postings arrive as a frame (typically a slice-scale checkpoint
-    * the caller also appends to its standing admitted-postings artifact —
-    * [[graft.operators.CurationQueries.curationStep]]'s shape), so one
-    * corpus-postings scan serves both the near-dup join and the append,
-    * instead of each step re-restricting the corpus index per use. */
-  private[operators] def deltaNearDupDropsFromInvs(
-      t: graft.Tables,
-      refInv: org.apache.spark.sql.DataFrame,
-      deltaInv: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    deltaNearDupDropsFromInvsWith(corpusPostings(t)._2, refInv, deltaInv)
-
-  /** [[deltaNearDupDropsFromInvs]] with the per-doc set SIZES injectable —
-    * the serve path passes the at-rest sizes table so the whole delta
-    * near-dup computation runs without the session postings memo (which
-    * would rebuild from text). */
   /** Row bound under which a MATERIALIZED delta frame broadcasts as the
     * pair join's build side (~16 B/posting → ~160 MB at the bound, far
     * under the broadcast hard limit; on a cluster, re-probed by every
@@ -385,7 +332,29 @@ object TextQueries {
     * for, now enforced on truth instead of estimates. */
   private[operators] val DeltaBroadcastRows = 10000000L
 
-  private[operators] def deltaNearDupDropsFromInvsWith(
+  /** DELTA-ONLY near-dup drops — q125's standing-index economics lifted to
+    * pair FORMATION for the incremental funnels (q215/q216): the ids of
+    * `deltaInv`'s docs that pair (exact 5-gram Jaccard ≥ 0.5, set sizes
+    * from `sizes`) with any doc of `refInv` (either id order — the frozen
+    * store/ledger reference) or with a LOWER-id doc of `deltaInv` (the
+    * within-batch earlier-member rule). Both sides arrive as restrictions
+    * of the standing corpus postings: the caller checkpoints the delta
+    * side and also appends it to its admitted postings, so one corpus
+    * postings scan serves both. The ref ∪ delta postings stream map-side;
+    * the DELTA side is the natural build side (bounded by the ingest,
+    * never the corpus — the q90 asymmetry, fuzzy form). It broadcasts when
+    * `broadcastDelta` (the caller's truth-sized decision against
+    * [[DeltaBroadcastRows]]); otherwise the planner chooses, so a bulk
+    * backfill falls back to a shuffle join instead of dying at the
+    * broadcast limit.
+    * CurationPlanSpec's no-corpus-build-side audit pins the dangerous
+    * direction. The candidate-pair aggregation is bounded by |delta| ×
+    * near-dup fan-in. Nothing here depends on the full-corpus pair
+    * artifact. Exact semantics (every pair sharing ≥ 1 shingle is
+    * counted), proven by q215/q216 still hash-matching their from-text
+    * DuckDB oracle. Docs under 5 tokens have no postings and can never
+    * drop — the oracle's `ntok >= 5` guard. */
+  private[operators] def deltaNearDupDrops(
       sizes: org.apache.spark.sql.DataFrame,
       refInv: org.apache.spark.sql.DataFrame,
       deltaInv: org.apache.spark.sql.DataFrame,

@@ -37,10 +37,6 @@ object JsonlSource {
       .option("mode", "DROPMALFORMED")
       .json(path: _*)
 
-  /** Exploration only — runs a full inference pass first. Never at scale. */
-  def readJsonlInferSchema(spark: SparkSession, path: String*): DataFrame =
-    spark.read.json(path: _*)
-
   /** Write as JSONL (interchange/egress). */
   def writeJsonl(df: DataFrame, path: String, mode: String = "overwrite"): Unit =
     df.write.mode(mode).json(path)

@@ -1,8 +1,10 @@
 package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -32,6 +34,26 @@ class BenchOneSpec extends SharedSparkSpec {
         assert(r.rows > 0 && r.execute > 0, r)
       }
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("a query run's line counts the jobs an independent listener saw") {
+    val started = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+    }
+    // q215 starts jobs while it is built, some of them from its overlap pool.
+    val names = Seq("q04_join_multiway", "q215_curation_incremental")
+    names.foreach(BenchOne.runs(spark, _, sf001, 1).foreach(_ => ()))  // compile once
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for (name <- names; r <- BenchOne.runs(spark, name, sf001, 2)) {
+        ListenerBusDrain(spark.sparkContext)
+        val seen = started.getAndSet(0)
+        assert(r.jobs == seen && seen > 0, s"$r: the listener saw $seen jobs")
+        assert(r.line.contains(s" codegen compiles, $seen jobs; construct="), r.line)
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("a rows: stream counts every row of its table") {

@@ -1,13 +1,18 @@
 package graft.functions
 
 import graft.{SharedSparkSpec, Tables}
-import graft.dsl.{dot, l2norm}
+import graft.dsl.{foldSum, l2norm}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** The native codegen'd expression must be bit-for-bit identical to the
   * fold-based formulation that the DuckDB oracles mirror — otherwise
   * swapping it into oracle-checked queries would shift rounded values. */
 class CosineSimilaritySpec extends SharedSparkSpec {
+
+  /** The oracles' dot product: a left fold from 0.0 in index order. */
+  private def dot(a: Column, b: Column): Column =
+    foldSum(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")))
 
   test("native cosine == fold-based cosine, bit-exact, over all pairs of first 50") {
     val e = new Tables(spark, sf001).embeddings.filter(col("vec_id") < 50)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SharedSparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The load-bearing claim behind q216 sharing q215's oracle: folding
@@ -102,5 +103,55 @@ class CurationStepProps extends SharedSparkSpec {
       assert(q215Clean == oneShot.size.toLong,
         s"seed=$seed: q215 decontaminate=$q215Clean != fold ${oneShot.size}")
     }
+  }
+
+  test("q216's overlapped schedule gives the sequential fold's frames, slice for slice") {
+    val t = graft.Tables.forPath(spark, sf001)
+    val in = CurationQueries.CurationInputs.live(t)
+    val isBatch = col("doc_id") % 10 === 0
+    val bounds = Some(CurationQueries.batchDeltaBounds(in.raw, in.sizes, isBatch))
+    def ids(df: DataFrame): Set[Long] = df.collect().map(_.getLong(0)).toSet
+    def rowSets(f: CurationQueries.SliceFrames): Seq[Set[Long]] =
+      Seq(f.raw, f.quality, f.exact, f.nearDup, f.clean).map(ids)
+    for (k <- Seq(1, 2, 3, 5)) {
+      // The schedule takes each slice's metadata rows, the fold its ids.
+      val gens = CurationQueries.generations(in.raw.filter(isBatch), k)
+      val slices = (1 to k).map(g => gens.filter(col("gen") === g))
+      var st = CurationQueries.FunnelState.frozenFrom(in)
+      val folded = slices.map { slice =>
+        val (next, frames) =
+          CurationQueries.curationStepFrom(in, slice.select("doc_id"), st, bounds)
+        st = next
+        rowSets(frames)
+      }
+      val scheduled = CurationQueries.curationSchedule(in, slices, bounds.get).map(rowSets)
+      assert(scheduled.length == k)
+      for (((s, f), g) <- scheduled.zip(folded).zipWithIndex)
+        assert(s == f, s"k=$k slice ${g + 1}: scheduled $s != folded $f")
+      assert(folded.map(_.last.size).sum > 0, s"k=$k: degenerate fixture, nothing survived")
+    }
+  }
+
+  test("the grouped per-key min equals the semi-join form on duplicate digests") {
+    def semiJoinMin(keyed: DataFrame): DataFrame =
+      keyed.join(keyed.groupBy("key").agg(min(col("doc_id")).as("doc_id")),
+        Seq("doc_id"), "left_semi")
+    def rowsOf(df: DataFrame): Seq[(Long, Seq[Byte])] =
+      df.select("doc_id", "key").collect()
+        .map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq)).toSeq.sortBy(_._1)
+    // Planted: three docs share digest a, two share c.
+    val planted = Seq((5L, "a"), (3L, "a"), (9L, "a"), (4L, "b"), (7L, "c"), (2L, "c"),
+      (8L, "d")).toDF("doc_id", "k")
+      .select(col("doc_id"), unhex(sha2(col("k"), 256)).as("key"))
+    assert(rowsOf(CurationQueries.perKeyMin(planted)).map(_._1) == Seq(2L, 3L, 4L, 8L))
+    // A randomized corpus's planted exact duplicates, keyed as the funnels key them.
+    val dir = tmpDir("curation_keymin")
+    buildCorpus(7L).toDF("doc_id", "lang", "source", "text")
+      .write.parquet(s"$dir/documents.parquet")
+    val corpus = CurationQueries.docMeta(new graft.Tables(spark, dir)).select("doc_id", "key")
+    assert(corpus.select("key").distinct().count() < corpus.count(),
+      "the corpus has no duplicate digests")
+    for (keyed <- Seq(planted, corpus))
+      assert(rowsOf(CurationQueries.perKeyMin(keyed)) == rowsOf(semiJoinMin(keyed)))
   }
 }

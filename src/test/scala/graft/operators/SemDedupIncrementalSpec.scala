@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   */
 class SemDedupIncrementalSpec extends SharedSparkSpec {
 
-  /** dsl.dot/l2norm fold order — bit-identical to CosineSimilarity. */
+  /** The oracles' cosine fold order — bit-identical to CosineSimilarity. */
   private def cos(a: Array[Double], b: Array[Double]): Double = {
     var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
     while (i < a.length) {

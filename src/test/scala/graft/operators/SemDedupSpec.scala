@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   */
 class SemDedupSpec extends SharedSparkSpec {
 
-  /** Same fold order as dsl.dot/l2norm (ascending index, left fold) so the
+  /** Same fold order as the oracles' cosine (ascending index, left fold) so the
     * doubles are bit-identical to the engine's CosineSimilarity. */
   private def cos(a: Array[Double], b: Array[Double]): Double = {
     var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0

@@ -66,6 +66,7 @@ Env: BUDGET_GATE_NO_RERUN=1 disables the rerun step (pure comparison);
 import json
 import os
 import re
+import shutil
 import statistics
 import subprocess
 import sys
@@ -161,7 +162,8 @@ def compile_or_exit(tag):
 
 def cold_pass(tag, sf_dir, passdir):
     """One whole-suite cold-only Bench pass in a fresh JVM with `passdir`
-    as its cwd; returns its BENCH_DETAIL.json."""
+    as its cwd; returns its BENCH_DETAIL.json. The caller removes
+    `passdir`."""
     os.makedirs(passdir, exist_ok=True)
     add_opens = subprocess.run(
         ["bash", "-c", '. "$0"; echo $ADD_OPENS', os.path.join(ROOT, "tools", "add_opens.sh")],
@@ -176,7 +178,7 @@ def cold_pass(tag, sf_dir, passdir):
             env={**os.environ, "SPARK_GRAFT_SF_DIR": sf_dir, "SPARK_GRAFT_CPUS": "32",
                  "SPARK_GRAFT_COLD_ONLY": "1"}).returncode
     if rc != 0:
-        print(f"[{tag}] cold pass failed (exit {rc}), log {log}:")
+        print(f"[{tag}] cold pass failed (exit {rc}); the end of its log:")
         print("\n".join(open(log).read().splitlines()[-5:]))
         sys.exit(1)
     return os.path.join(passdir, "BENCH_DETAIL.json")
@@ -249,12 +251,17 @@ def make(args):
             json.dump(budget, f, indent=1, sort_keys=True)
 
     if n > 0:
+        # The pass dirs hold each pass's log, BENCH_DETAIL.json and layout
+        # tables (tens of MB at sf0.01): removed however the passes end.
         tmp = tempfile.mkdtemp(prefix="cold_budget.")
-        passes = []
-        for i in range(1, n + 1):
-            print(f"[budget_make] pass {i}/{n} (fresh JVM, cold-only, scratch cwd {tmp}/run_{i}) ...")
-            passes.append(cold_pass("budget_make", sf_dir, f"{tmp}/run_{i}"))
-        budget = merge(sf_dir, passes)
+        try:
+            passes = []
+            for i in range(1, n + 1):
+                print(f"[budget_make] pass {i}/{n} (fresh JVM, cold-only, scratch cwd {tmp}/run_{i}) ...")
+                passes.append(cold_pass("budget_make", sf_dir, f"{tmp}/run_{i}"))
+            budget = merge(sf_dir, passes)
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
         write(budget)
     else:
         budget = json.load(open(out))
@@ -274,12 +281,14 @@ def gate(args):
         sf_dir = src
         tmp = tempfile.mkdtemp(prefix="budget_gate.")
         print(f"[budget_gate] cold pass (fresh JVM, scratch cwd {tmp}) ...")
-        detail_path = cold_pass("budget_gate", sf_dir, tmp)
+        try:
+            detail = json.load(open(cold_pass("budget_gate", sf_dir, tmp)))
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
     else:
-        detail_path = src
+        detail = json.load(open(src))
         sf_dir = os.environ.get("BUDGET_GATE_SF", "/root/testdata/sf0.1")
     no_rerun = os.environ.get("BUDGET_GATE_NO_RERUN") == "1"
-    detail = json.load(open(detail_path))
     budget = json.load(open(budget_path))
     if int(detail.get("failed", 0)) != 0:
         print(f"[budget_gate] FAIL: bench pass had failures: {detail.get('errors')}")
