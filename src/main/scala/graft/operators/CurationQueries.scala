@@ -389,14 +389,8 @@ object CurationQueries {
     Artifacts.forget(t, "curlayout")
     CurationInputs.dropServed(t)
     familySpec.foreach { case (_, tag, _) =>
-      val tbl = graft.sources.LayoutWriter.deterministicName(tag, t.dir, width)
-      spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      // External registrations leave files + stamp behind; clear them or
-      // the next build would re-register the appended family as fresh.
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.sessionState.conf.warehousePath, tbl.toLowerCase)
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+      graft.sources.LayoutWriter.dropLayout(
+        spark, graft.sources.LayoutWriter.deterministicName(tag, t.dir, width))
     }
   }
 

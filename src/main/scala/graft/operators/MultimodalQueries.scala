@@ -888,49 +888,29 @@ object MultimodalQueries {
         .select(col("doc_id"), col("out_w"), col("out_h"), col("thumb_sum")))
   }
 
-  /** The decode→embed pass over a documents slice: synthesized 16×16 PNG
-    * through the REAL decoder (q136's path), embedded at the
-    * partition-level encoder boundary ([[Multimodal.embedFeatures]] — stub
-    * model, real plumbing). Map-only; media bytes never leave the scan
-    * partition. Callers that want less than the corpus filter the DOCUMENTS
-    * side first — the mapPartitions is opaque to Catalyst, so a filter
-    * above it cannot save any decode work. */
-  private def embedDocSlice(
-      t: graft.Tables,
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val spark = t.spark
-    import spark.implicits._
-    import Multimodal._
-    implicit val mEnc = Encoders.product[MediaRecord]
-    // Repartition BEFORE the codec boundary: decode cost is per-ROW, not
-    // per-byte, and a compressed text corpus can land in one scan split
-    // (sf1x documents is a single 1.8 MB zstd file → ONE task decoding the
-    // whole corpus while 31 cores idle — and every downstream consumer of
-    // the checkpoint inherits that width). An expensive map stage must set
-    // its own parallelism, not ride file-count luck.
-    val pixels = docs.select(col("doc_id"), col("source"), col("text"))
-      .repartition(spark.sessionState.conf.numShufflePartitions)
-      .as[(Long, String, String)]
-      .mapPartitions(_.flatMap { case (id, src, text) =>
-        val png = encodePngGray(padBytes(text, 256), 16, 16)
-        decodePngPixels(png).collect { case (_, _, _, 1, px) =>
-          MediaRecord(id, src, px)
-        }
-      })
-    embedFeatures(pixels).toDF
-  }
+  /** One decoded media modality — the single parameter of the media
+    * near-dup family: the one-shot audits (q218 image / q219 audio / q223
+    * video), the nightly ingest (q221/q225/q226), the continuous form
+    * (q222) and the cross-modal sides (q220/q224/q231/q232) all run one
+    * pipeline over this value. `payload` synthesizes a document's media
+    * from its text and runs it through the modality's REAL decoder,
+    * returning the decoded bytes the encoder embeds (None = the decoder
+    * rejected the payload, and the doc is not embedded). `tag` and `short`
+    * are the two name stems of the modality's session artifacts and
+    * at-rest tables: `${tag}emb` (decode-once embeddings), `${tag}near`
+    * (one-shot model), `${tag}inc`/`${tag}storepack`/... (ingest), and
+    * `${short}nearidx` (near-dup index) / `${short}emb` (embedding
+    * table). */
+  private[graft] final case class Modality(
+      tag: String, short: String, payload: String => Option[Array[Byte]])
 
-  /** Decoded-pixel media embeddings `(doc_id, embedding)` for the whole
-    * corpus, decoded ONCE per (session, dir) and held as a localCheckpoint
-    * (the corpusPostings discipline, `TextQueries.corpusPostings`): q218's
-    * index build, candidate-verification fetch, and final audit all read
-    * this frame, and without the checkpoint each reader would re-run the
-    * full-corpus PNG decode — at 100 TB, decode dominates media-pipeline
-    * cost, so paying it once is the whole game. 64 floats + id per row is
-    * id-scale (~0.3 KB/doc), far smaller than the media it replaces. */
-  private[graft] def mediaPixelEmbeddings(t: graft.Tables): org.apache.spark.sql.DataFrame =
-    Artifacts.get(t, "mediaemb")(
-      embedDocSlice(t, t.documents).localCheckpoint())
+  /** IMAGE: a 16×16 grayscale PNG of the first 256 space-padded text bytes
+    * through the REAL PNG decoder to raw pixels ([[Multimodal.decodePngPixels]]
+    * — q136's path). */
+  private[graft] val image: Modality = Modality("media", "img", text =>
+    Multimodal.decodePngPixels(
+      Multimodal.encodePngGray(Multimodal.padBytes(text, 256), 16, 16))
+      .collect { case (_, _, _, 1, px) => px })
 
   /** q219's payload length: the synthetic WAV covers 512 text bytes (256
     * s16 samples) where q218's image covers 256 — a recording outlasts a
@@ -939,36 +919,12 @@ object MultimodalQueries {
     * byte 256 are not same-AUDIO). */
   private[graft] val AudioPayloadBytes = 512
 
-  /** The audio decode→embed pass over a documents slice: synthesized WAV
+  /** AUDIO: a mono PCM-16 WAV of the first [[AudioPayloadBytes]] text bytes
     * through the REAL RIFF/PCM sample decode ([[Multimodal.decodeWavSamples]]
-    * — q109's validation walk surfacing the payload), embedded at the same
-    * encoder boundary as q218. Map-only; audio bytes never leave the scan
-    * partition. Same filter-the-documents-side-first contract as
-    * [[embedDocSlice]]. */
-  private def audioEmbedDocSlice(
-      t: graft.Tables,
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val spark = t.spark
-    import spark.implicits._
-    import Multimodal._
-    implicit val mEnc = Encoders.product[MediaRecord]
-    // Same pre-codec repartition as [[embedDocSlice]] — decode parallelism
-    // must not ride the scan's split count.
-    val pcm = docs.select(col("doc_id"), col("source"), col("text"))
-      .repartition(spark.sessionState.conf.numShufflePartitions)
-      .as[(Long, String, String)]
-      .mapPartitions(_.flatMap { case (id, src, text) =>
-        val wav = encodeWavMono(padBytes(text, AudioPayloadBytes), 8000)
-        decodeWavSamples(wav).map(MediaRecord(id, src, _))
-      })
-    embedFeatures(pcm).toDF
-  }
-
-  /** Decoded-sample audio embeddings, decoded once per (session, dir) —
-    * [[mediaPixelEmbeddings]]'s audio twin, same checkpoint economics. */
-  private[graft] def audioSampleEmbeddings(t: graft.Tables): org.apache.spark.sql.DataFrame =
-    Artifacts.get(t, "audioemb")(
-      audioEmbedDocSlice(t, t.documents).localCheckpoint())
+    * — q109's validation walk surfacing the payload). */
+  private[graft] val audio: Modality = Modality("audio", "aud", text =>
+    Multimodal.decodeWavSamples(Multimodal.encodeWavMono(
+      Multimodal.padBytes(text, AudioPayloadBytes), 8000)))
 
   /** q223's frame geometry: q135's exact container (4 frames, frame f's
     * 256 pixels = text bytes from offset 16·f) sampled at stride 2, so the
@@ -981,38 +937,61 @@ object MultimodalQueries {
   private[graft] val VideoFrameSpan = 16
   private[graft] val VideoStride = 2
 
-  /** The video decode→embed pass over a documents slice: q135's exact
-    * synthesis (4-frame GVID of real PNGs) through the REAL container walk
-    * + per-frame PNG decode surfacing sampled pixels
-    * ([[Multimodal.decodeVideoSampledPixels]]), embedded at the shared
-    * encoder boundary. Map-only; video bytes never leave the scan
-    * partition. Same pre-codec repartition and filter-the-documents-side
-    * contract as [[embedDocSlice]]. */
-  private def videoEmbedDocSlice(
-      t: graft.Tables,
+  /** VIDEO: q135's exact synthesis (a [[VideoFrames]]-frame GVID of real
+    * PNGs) through the REAL container walk + per-frame PNG decode,
+    * surfacing every [[VideoStride]]-th frame's pixels
+    * ([[Multimodal.decodeVideoSampledPixels]]). */
+  private[graft] val video: Modality = Modality("video", "vid", { text =>
+    val frames = (0 until VideoFrames).map(f => Multimodal.encodePngGray(
+      Multimodal.padBytes(text.drop(VideoFrameSpan * f), 256), 16, 16))
+    Multimodal.decodeVideoSampledPixels(Multimodal.encodeVideo(frames), VideoStride)
+  })
+
+  /** A modality's decode→embed pass over a documents slice: each doc's
+    * synthesized media through the modality's REAL decoder
+    * ([[Modality]]'s `payload`), embedded at the partition-level encoder
+    * boundary ([[Multimodal.embedFeatures]] — stub model, real plumbing).
+    * Map-only; media bytes never leave the scan partition. Callers that
+    * want less than the corpus filter the DOCUMENTS side first — the
+    * mapPartitions is opaque to Catalyst, so a filter above it cannot save
+    * any decode work. */
+  private def embedSlice(
+      t: graft.Tables, m: Modality,
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val spark = t.spark
     import spark.implicits._
     import Multimodal._
     implicit val mEnc = Encoders.product[MediaRecord]
-    val px = docs.select(col("doc_id"), col("source"), col("text"))
+    val payload = m.payload
+    // Repartition BEFORE the codec boundary: decode cost is per-ROW, not
+    // per-byte, and a compressed text corpus can land in one scan split
+    // (sf1x documents is a single 1.8 MB zstd file → ONE task decoding the
+    // whole corpus while 31 cores idle — and every downstream consumer of
+    // the checkpoint inherits that width). An expensive map stage must set
+    // its own parallelism, not ride file-count luck.
+    val media = docs.select(col("doc_id"), col("source"), col("text"))
       .repartition(spark.sessionState.conf.numShufflePartitions)
       .as[(Long, String, String)]
       .mapPartitions(_.flatMap { case (id, src, text) =>
-        val frames = (0 until VideoFrames).map(f =>
-          encodePngGray(padBytes(text.drop(VideoFrameSpan * f), 256), 16, 16))
-        decodeVideoSampledPixels(encodeVideo(frames), VideoStride)
-          .map(MediaRecord(id, src, _))
+        payload(text).map(MediaRecord(id, src, _))
       })
-    embedFeatures(px).toDF
+    embedFeatures(media).toDF
   }
 
-  /** Decoded sampled-frame video embeddings, decoded once per (session,
-    * dir) — [[mediaPixelEmbeddings]]'s video twin, same checkpoint
-    * economics. */
-  private[graft] def videoFrameEmbeddings(t: graft.Tables): org.apache.spark.sql.DataFrame =
-    Artifacts.get(t, "videoemb")(
-      videoEmbedDocSlice(t, t.documents).localCheckpoint())
+  /** A modality's decoded embeddings `(doc_id, embedding)` for the whole
+    * corpus, decoded ONCE per (session, dir) and held as a localCheckpoint
+    * (the corpusPostings discipline, `TextQueries.corpusPostings`): the
+    * index build, candidate-verification fetch, and final audit all read
+    * this frame, and without the checkpoint each reader would re-run the
+    * full-corpus decode — at 100 TB, decode dominates media-pipeline
+    * cost, so paying it once is the whole game. 64 floats + id per row is
+    * id-scale (~0.3 KB/doc), far smaller than the media it replaces.
+    * `Artifacts.built(t, s"${m.tag}emb")` tells a spec whether the session
+    * paid this corpus-scale decode. */
+  private[graft] def embeddingsOf(
+      t: graft.Tables, m: Modality): org.apache.spark.sql.DataFrame =
+    Artifacts.get(t, s"${m.tag}emb")(
+      embedSlice(t, m, t.documents).localCheckpoint())
 
   /** q218's operating point: exact-cosine near-dup threshold and the
     * sign-sketch prefilter slack. The prefilter is a 64-bit hyperplane sign
@@ -1151,7 +1130,9 @@ object MultimodalQueries {
     * cheaper than superstep scheduling. Both paths share the seed rule
     * (first k by id), d2 fold order, and tie-breaks, so they agree to
     * centroid ulps and to EXACT bucket assignments (CoarseTrainRoutingSpec
-    * pins both on real decoded media vectors). */
+    * pins both on real decoded media vectors). A local sample smaller than
+    * `k` (a corpus under [[mediaCoarseK]]'s floor of 8) trains one
+    * centroid per vector, and an empty one gets the [[originModel]]. */
   private[graft] def trainCoarseFrom(
       sample: org.apache.spark.sql.DataFrame, k: Int,
       forceDistributed: Boolean = false): graft.functions.KMeansTrainer.Trained =
@@ -1159,54 +1140,55 @@ object MultimodalQueries {
       graft.functions.KMeansTrainer.train(
         sample.select(col("doc_id").as("vec_id"), col("embedding")), k, 15, 1e-4)
     } else {
-      val spark = sample.sparkSession
-      import spark.implicits._
-      val local = sample.as[(Long, Seq[Float])].collect().sortBy(_._1)
-        .map { case (id, v) => (id, v.map(_.toDouble).toArray) }.toSeq
-      graft.functions.KMeansTrainer.trainLocal(local, k, 15, 1e-4)
+      val local = collectSample(sample)
+      if (local.isEmpty) originModel
+      else graft.functions.KMeansTrainer.trainLocal(
+        local, math.min(k, local.size), 15, 1e-4)
     }
 
-  /** Coarse quantizer trained on a deterministic sample of a modality's
-    * decoded-feature vectors — q108's train-once recipe (the
-    * embeddings-table models live in a different vector space and cannot be
-    * reused). The sample is taken by filtering the DOCUMENTS side BEFORE
-    * the decode mapPartitions (32 docs per centroid, min 256) — the opaque
-    * decode means a post-decode filter would pay a full-corpus decode just
-    * to keep the sample rows. Training routes through [[trainCoarseFrom]]:
-    * at scale the sample frame is trained distributed, never collected. */
-  private def trainCoarseModel(
-      t: graft.Tables,
-      embedSlice: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
-      : graft.functions.KMeansTrainer.Trained = {
-    val k = mediaCoarseK(t.documents.count())
-    val sampleLimit = math.max(256L, 32L * k)
-    trainCoarseFrom(embedSlice(t.documents.filter(col("doc_id") < sampleLimit)), k)
+  /** A driver-sized `(doc_id, embedding)` sample, id-ascending, as the
+    * local trainers take it. */
+  private def collectSample(
+      sample: org.apache.spark.sql.DataFrame): Seq[(Long, Array[Double])] = {
+    val spark = sample.sparkSession
+    import spark.implicits._
+    sample.as[(Long, Seq[Float])].collect().sortBy(_._1)
+      .map { case (id, v) => (id, v.map(_.toDouble).toArray) }.toSeq
   }
 
-  /** [[trainCoarseModel]] on the image-feature space, memoized per
-    * (session, dir). */
-  private[graft] def mediaNearDupModel(
-      t: graft.Tables): graft.functions.KMeansTrainer.Trained =
-    Artifacts.get(t, "medianear")(
-      trainCoarseModel(t, embedDocSlice(t, _)))
+  /** The model of an EMPTY training sample (an empty corpus or store): one
+    * centroid at the origin of the encoder's 64-dim space, so every vector
+    * lands in bucket 0 and the serving kernels get a well-formed model. */
+  private val originModel: graft.functions.KMeansTrainer.Trained =
+    graft.functions.KMeansTrainer.Trained(
+      IndexedSeq(new Array[Double](64)), IndexedSeq(0L), IndexedSeq(0.0), 0)
 
-  /** [[trainCoarseModel]] on the audio-feature space, memoized per
-    * (session, dir). */
-  private[graft] def audioNearDupModel(
-      t: graft.Tables): graft.functions.KMeansTrainer.Trained =
-    Artifacts.get(t, "audionear")(
-      trainCoarseModel(t, audioEmbedDocSlice(t, _)))
+  /** Coarse quantizer trained on a deterministic sample of a modality's
+    * decoded-feature vectors over `docs` — q108's train-once recipe (the
+    * embeddings-table models live in a different vector space and cannot be
+    * reused), k = [[mediaCoarseK]] of the docs' count. The sample is taken
+    * by filtering the DOCUMENTS side BEFORE the decode mapPartitions (32
+    * docs per centroid, min 256) — the opaque decode means a post-decode
+    * filter would pay a full-corpus decode just to keep the sample rows.
+    * Training routes through [[trainCoarseFrom]]: at scale the sample
+    * frame is trained distributed, never collected. */
+  private def trainCoarseModel(
+      t: graft.Tables, m: Modality,
+      docs: org.apache.spark.sql.DataFrame): graft.functions.KMeansTrainer.Trained = {
+    val k = mediaCoarseK(docs.count())
+    val sampleLimit = math.max(256L, 32L * k)
+    trainCoarseFrom(embedSlice(t, m, docs.filter(col("doc_id") < sampleLimit)), k)
+  }
 
-  /** [[trainCoarseModel]] on the video-feature space, memoized per
-    * (session, dir). */
-  private[graft] def videoNearDupModel(
-      t: graft.Tables): graft.functions.KMeansTrainer.Trained =
-    Artifacts.get(t, "videonear")(
-      trainCoarseModel(t, videoEmbedDocSlice(t, _)))
+  /** The one-shot family's coarse model: [[trainCoarseModel]] over the
+    * whole corpus, memoized per (session, dir, modality). */
+  private[graft] def nearDupModelOf(
+      t: graft.Tables, m: Modality): graft.functions.KMeansTrainer.Trained =
+    Artifacts.get(t, s"${m.tag}near")(trainCoarseModel(t, m, t.documents))
 
   /** The STANDING near-dup index of a decoded modality: (doc_id, bucket,
     * sig, sig2) under the trained coarse model — 28-byte rows, the one-shot
-    * family's analogue of q221's [[mediaStoreIndex]], memoized per
+    * family's analogue of q221's [[storeIndexOf]], memoized per
     * (session, dir, modality) and checkpointed. The assignment pass is
     * O(N·k·dim) with k ∝ √N — an N^1.5 term that was silently re-paid on
     * EVERY evaluation (twice per audit: once in the pair pipeline, once in
@@ -1218,31 +1200,17 @@ object MultimodalQueries {
     * q94's convention, exactly like the incremental store index) — so the
     * served queries read it as an ExistingRDD, and per-run work starts at
     * the candidate join. */
-  private def nearDupIndex(
-      t: graft.Tables, tag: String,
-      emb: => org.apache.spark.sql.DataFrame,
-      km: => graft.functions.KMeansTrainer.Trained): org.apache.spark.sql.DataFrame =
-    Artifacts.get(t, tag)({
+  private[graft] def nearDupIndexOf(
+      t: graft.Tables, m: Modality): org.apache.spark.sql.DataFrame =
+    Artifacts.get(t, s"${m.short}nearidx")({
       import graft.functions.{KMeansTrainer, HyperplaneSignature}
-      val m = km
-      emb.select(col("doc_id"),
-        KMeansTrainer.coarseBucket(col("embedding"), m).as("bucket"),
+      val km = nearDupModelOf(t, m)
+      embeddingsOf(t, m).select(col("doc_id"),
+        KMeansTrainer.coarseBucket(col("embedding"), km).as("bucket"),
         HyperplaneSignature(col("embedding"), mediaSignPlanes, 64).as("sig"),
         HyperplaneSignature(col("embedding"), mediaSignPlanes2, 64).as("sig2"))
         .localCheckpoint()
     })
-
-  /** [[nearDupIndex]] of the image modality. */
-  private[graft] def mediaNearDupIndex(t: graft.Tables): org.apache.spark.sql.DataFrame =
-    nearDupIndex(t, "imgnearidx", mediaPixelEmbeddings(t), mediaNearDupModel(t))
-
-  /** [[nearDupIndex]] of the audio modality. */
-  private[graft] def audioNearDupIndex(t: graft.Tables): org.apache.spark.sql.DataFrame =
-    nearDupIndex(t, "audnearidx", audioSampleEmbeddings(t), audioNearDupModel(t))
-
-  /** [[nearDupIndex]] of the video modality. */
-  private[graft] def videoNearDupIndex(t: graft.Tables): org.apache.spark.sql.DataFrame =
-    nearDupIndex(t, "vidnearidx", videoFrameEmbeddings(t), videoNearDupModel(t))
 
   /** Deterministic at-rest table name keyed on (tag, data dir, bucket
     * width): same artifact → same name, so re-runs and fresh sessions
@@ -1257,45 +1225,43 @@ object MultimodalQueries {
 
   /** A modality's standing near-dup index AT REST — the (doc_id, bucket,
     * sig, sig2) rows (28-byte parquet rows: an id, a bucket, the 128-bit
-    * sketch as two longs) written ONCE as a `bucket`-bucketed,
-    * bucket-sorted parquet table (q94/q145's layout mechanism) next to the
-    * data, under a DETERMINISTIC name ([[layoutName]]) so every rebuild
-    * overwrites the same table. The session localCheckpoint
-    * ([[nearDupIndex]]) dies with the session, so every new session
-    * re-paid decode + train + assign (the video index alone is
-    * ~107 s/session at sf10x; at 100 TB it is the whole media pipeline's
-    * build cost) — this is the at-rest complement a production pipeline
-    * serves from instead (rebuilt-and-overwritten per session here because
-    * the fixture dirs are regenerated in place between runs; a production
-    * table would be maintained incrementally, q221's discipline). Bucket
-    * count = the session shuffle width, so the within-block candidate
-    * self-join is BOTH exchange-free (v1 bucketing reports
-    * hashpartitioning(bucket)) and full-width for its Σn_c²
+    * sketch as two longs) written as a `bucket`-bucketed, bucket-sorted
+    * parquet table (q94/q145's layout mechanism) next to the data, under a
+    * DETERMINISTIC name ([[layoutName]]) so every rebuild overwrites the
+    * same table. The session localCheckpoint ([[nearDupIndexOf]]) dies
+    * with the session, so every new session re-paid decode + train +
+    * assign (the video index alone is ~107 s/session at sf10x; at 100 TB
+    * it is the whole media pipeline's build cost) — this is the at-rest
+    * complement a production pipeline serves from instead. Reuse is
+    * [[graft.sources.LayoutWriter.serveOrWriteBucketed]]'s with a source
+    * dir, in EVERY mode: a table whose `_graft_src_fp` stamp matches the
+    * data dir's current fingerprint is re-registered, not rebuilt — also
+    * with the serving flags off, and also by a later JVM in the same
+    * warehouse (the stamp covers the source files, not the code that
+    * wrote the table). Only a missing or stale table is built and
+    * overwritten. Bucket count = the session shuffle width, so the
+    * within-block candidate self-join is BOTH exchange-free (v1 bucketing
+    * reports hashpartitioning(bucket)) and full-width for its Σn_c²
     * Hamming-condition compute — the explicit-repartition width pin
     * becomes a property of the layout itself. */
-  private[graft] def nearDupIndexTable(
-      t: graft.Tables, tag: String,
-      idx: => org.apache.spark.sql.DataFrame): String =
-    Artifacts.get(t, s"$tag#layout")({
+  private[graft] def nearDupIndexTableOf(t: graft.Tables, m: Modality): String =
+    standingTable(t, s"${m.short}nearidx", "layout", Seq("bucket"))(nearDupIndexOf(t, m))
+
+  /** A session's standing layout table: `df` written at shuffle width as a
+    * `bucketCols`-bucketed table named [[layoutName]] of `tag` — or, when a
+    * source-fingerprint-fresh one already stands, re-registered without
+    * forcing `df` ([[graft.sources.LayoutWriter.serveOrWriteBucketed]]) —
+    * memoized per (session, dir) as `tag#kind`. Returns the table name. */
+  private def standingTable(
+      t: graft.Tables, tag: String, kind: String, bucketCols: Seq[String])(
+      df: => org.apache.spark.sql.DataFrame): String =
+    Artifacts.get(t, s"$tag#$kind")({
       val width = t.spark.sessionState.conf.numShufflePartitions
       val tbl = layoutName(tag, t.dir, width)
       graft.sources.LayoutWriter.serveOrWriteBucketed(
-        t.spark, idx, tbl, Seq("bucket"), width, Some(t.dir))
+        t.spark, df, tbl, bucketCols, width, Some(t.dir))
       tbl
     })
-
-  /** [[nearDupIndexTable]] of the image modality (q228's serve source). */
-  private[graft] def mediaNearDupIndexTable(t: graft.Tables): String =
-    nearDupIndexTable(t, "imgnearidx", mediaNearDupIndex(t))
-
-  /** [[nearDupIndexTable]] of the audio modality. */
-  private[graft] def audioNearDupIndexTable(t: graft.Tables): String =
-    nearDupIndexTable(t, "audnearidx", audioNearDupIndex(t))
-
-  /** [[nearDupIndexTable]] of the video modality (the named sf10x
-    * rebuild cost). */
-  private[graft] def videoNearDupIndexTable(t: graft.Tables): String =
-    nearDupIndexTable(t, "vidnearidx", videoNearDupIndex(t))
 
   /** The docs a min-id-wins near-dup dedup would drop from a decoded
     * modality: members with a lower-id neighbor at exact cosine ≥
@@ -1305,7 +1271,7 @@ object MultimodalQueries {
     * vectors or media bytes — see [[MediaHammingSlack128]] for why sign
     * bits and not PQ-SDC here, and for the 64→128-bit admission math) → exact cosine on embeddings fetched for
     * CANDIDATE ids only (q24's verification economics in vector space).
-    * Takes the modality's standing [[nearDupIndex]]; `emb` is read for the
+    * Takes the modality's standing [[nearDupIndexOf]]; `emb` is read for the
     * candidate-restricted verification fetch only. Shared by q218 (image),
     * q219 (audio) and q223 (video). */
   private def nearDupDroppedFrom(
@@ -1319,7 +1285,7 @@ object MultimodalQueries {
     // re-applies per run because a checkpoint read (ExistingRDD) reports no
     // Catalyst partitioning; the 28-byte-row shuffle is noise next to the
     // Hamming-condition compute it spreads. An AT-REST index
-    // ([[nearDupIndexTable]]) already reports hashpartitioning(bucket) at
+    // ([[nearDupIndexTableOf]]) already reports hashpartitioning(bucket) at
     // shuffle width from its bucketing — `prePartitioned` skips the no-op
     // exchange so the layout serves exchange-FREE.
     val assigned = if (prePartitioned) idx else idx.repartition(
@@ -1343,20 +1309,11 @@ object MultimodalQueries {
       .distinct()
   }
 
-  /** [[nearDupDroppedFrom]] on the image modality — exposed for
-    * MediaNearDupSpec's parity assertions. */
-  private[graft] def mediaNearDupDropped(t: graft.Tables): org.apache.spark.sql.DataFrame =
-    nearDupDroppedFrom(mediaPixelEmbeddings(t), mediaNearDupIndex(t))
-
-  /** [[nearDupDroppedFrom]] on the audio modality — exposed for
-    * AudioNearDupSpec's parity assertions. */
-  private[graft] def audioNearDupDropped(t: graft.Tables): org.apache.spark.sql.DataFrame =
-    nearDupDroppedFrom(audioSampleEmbeddings(t), audioNearDupIndex(t))
-
-  /** [[nearDupDroppedFrom]] on the video modality — exposed for
-    * VideoNearDupSpec's parity assertions. */
-  private[graft] def videoNearDupDropped(t: graft.Tables): org.apache.spark.sql.DataFrame =
-    nearDupDroppedFrom(videoFrameEmbeddings(t), videoNearDupIndex(t))
+  /** [[nearDupDroppedFrom]] of a modality's live session index — exposed
+    * for the per-modality near-dup specs' parity assertions. */
+  private[graft] def nearDupDroppedOf(
+      t: graft.Tables, m: Modality): org.apache.spark.sql.DataFrame =
+    nearDupDroppedFrom(embeddingsOf(t, m), nearDupIndexOf(t, m))
 
   /** The per-bucket near-dup audit (q154's shape): media count and members
     * a min-id-wins dedup would drop — q218/q219/q223's shared report body.
@@ -1390,8 +1347,20 @@ object MultimodalQueries {
     * corpora, sign-sketch prefilter admissibility, the decode-once plan,
     * and the no-cartesian plan. */
   val q218 = EngineQuery("q218_media_neardup", None) { t =>
-    nearDupAudit(mediaNearDupIndex(t), mediaNearDupDropped(t))
+    nearDupAudit(nearDupIndexOf(t, image), nearDupDroppedOf(t, image))
   }
+
+  /** A one-shot near-dup audit with its serve/live choice — q219 and
+    * q223's body. With SPARK_GRAFT_SERVE_LAYOUTS=1 the audit answers from
+    * the at-rest index + embedding tables with ZERO decode
+    * ([[nearDupServedOf]], the q228 upgrade; AudioNearDupSpec and
+    * VideoNearDupSpec pin served ≡ live and the storage-only plan);
+    * default = the live session build, so driver gates and budgets are
+    * unchanged. */
+  private def nearDupAuditFor(
+      t: graft.Tables, m: Modality): org.apache.spark.sql.DataFrame =
+    if (graft.sources.LayoutWriter.servingLayouts) nearDupServedOf(t, m)
+    else nearDupAudit(nearDupIndexOf(t, m), nearDupDroppedOf(t, m))
 
   /** AUDIO near-dup — q218's pipeline over the WAV sample bridge (the last
     * multimodal-dedup corner: q109 already decodes WAV, q218 covers only
@@ -1408,23 +1377,7 @@ object MultimodalQueries {
     * AudioNearDupSpec pins parity vs a driver-side reference on planted
     * same-audio corpora, prefilter admissibility, the decode-once plan,
     * and the no-cartesian plan. */
-  val q219 = EngineQuery("q219_audio_neardup", None) { t =>
-    // Serve-mode dual (round 16): with SPARK_GRAFT_SERVE_LAYOUTS=1 the
-    // audit answers from the at-rest index + audemb tables with ZERO
-    // decode (the q228 upgrade extended to audio — AudioNearDupSpec pins
-    // served ≡ live and the storage-only plan); default = the live
-    // session build, so driver gates and budgets are unchanged.
-    if (graft.sources.LayoutWriter.servingLayouts) audioNearDupServed(t)
-    else nearDupAudit(audioNearDupIndex(t), audioNearDupDropped(t))
-  }
-
-  /** q219's audit served from the at-rest audio index + embedding tables
-    * ([[nearDupAuditServed]] — q228's storage-only shape on the audio
-    * modality). */
-  private[graft] def audioNearDupServed(t: graft.Tables): org.apache.spark.sql.DataFrame =
-    nearDupAuditServed(
-      t.spark.table(embTableOf(t, "audemb", audioSampleEmbeddings(t))),
-      t.spark.table(audioNearDupIndexTable(t)))
+  val q219 = EngineQuery("q219_audio_neardup", None)(nearDupAuditFor(_, audio))
 
   /** VIDEO near-dup — the third modality twin (q218 image / q219 audio /
     * q223 video, completing the brief's media coverage): each doc
@@ -1445,22 +1398,10 @@ object MultimodalQueries {
     * parity vs a driver-side reference on planted same-video corpora,
     * both nesting facts, the decode-once plan, and the no-cartesian
     * plan. */
-  val q223 = EngineQuery("q223_video_neardup", None) { t =>
-    // Serve-mode dual, like q219 — the video index rebuild is the media
-    // family's named worst case (~107 s/session at sf10x), so its
-    // zero-decode serve is the one that matters most.
-    if (graft.sources.LayoutWriter.servingLayouts) videoNearDupServed(t)
-    else nearDupAudit(videoNearDupIndex(t), videoNearDupDropped(t))
-  }
-
-  /** q223's audit served from the at-rest video index + embedding tables. */
-  private[graft] def videoNearDupServed(t: graft.Tables): org.apache.spark.sql.DataFrame =
-    nearDupAuditServed(
-      t.spark.table(embTableOf(t, "videmb", videoFrameEmbeddings(t))),
-      t.spark.table(videoNearDupIndexTable(t)))
+  val q223 = EngineQuery("q223_video_neardup", None)(nearDupAuditFor(_, video))
 
   /** q218's near-dup audit served from the AT-REST index layout
-    * ([[nearDupIndexTable]]) — the media member of the stored-artifact
+    * ([[nearDupIndexTableOf]]) — the media member of the stored-artifact
     * family (q144 postings, q145 bands, q146 IVF-PQ codes): the
     * (doc_id, bucket, sig, sig2) table — 28-byte parquet rows, the 128-bit
     * sketch as two longs — serves the whole near-dup family instead of
@@ -1475,15 +1416,18 @@ object MultimodalQueries {
     * case, video, plus the exchange-free bucketed scan and the build-once
     * memo); no SQL oracle for the same reason q218 has none (trained
     * quantizer + real codec). */
-  val q228 = EngineQuery("q228_media_index_layout", None) { t =>
-    // Both the index AND the verify-fetch embeddings serve from at-rest
-    // tables (round 15): a SPARK_GRAFT_SERVE_LAYOUTS=1 session runs this
-    // audit with zero decode — the index scan, the candidate join, and the
-    // doc_id-bucketed embedding fetch are all storage reads.
+  val q228 = EngineQuery("q228_media_index_layout", None)(nearDupServedOf(_, image))
+
+  /** A modality's near-dup audit served from its at-rest tables — q228's
+    * body and the serve branch of [[nearDupAuditFor]]. Both the index AND
+    * the verify-fetch embeddings serve from storage (round 15): a
+    * SPARK_GRAFT_SERVE_LAYOUTS=1 session runs this audit with zero decode
+    * — the index scan, the candidate join, and the doc_id-bucketed
+    * embedding fetch are all storage reads. */
+  private[graft] def nearDupServedOf(
+      t: graft.Tables, m: Modality): org.apache.spark.sql.DataFrame =
     nearDupAuditServed(
-      t.spark.table(embTableOf(t, "imgemb", mediaPixelEmbeddings(t))),
-      t.spark.table(mediaNearDupIndexTable(t)))
-  }
+      t.spark.table(embTableOf(t, m)), t.spark.table(nearDupIndexTableOf(t, m)))
 
   /** The audit pipeline served from a STORED index frame — q228's body,
     * shared with MediaLayoutSpec's per-modality round-trip assertions so
@@ -1593,29 +1537,37 @@ object MultimodalQueries {
           .localCheckpoint(),
         k1, k2, 15, 1e-4)
     } else {
-      val spark = sample.sparkSession
-      import spark.implicits._
-      val local = sample.as[(Long, Seq[Float])].collect().sortBy(_._1)
-        .map { case (id, v) => (id, v.map(_.toDouble).toArray) }.toSeq
-      graft.functions.KMeansTrainer.trainTwoLevelLocal(local, k1, k2, 15, 1e-4)
+      // Small samples clamp like [[trainCoarseFrom]]: k1 to the row count,
+      // and an empty sample is one origin cell with one origin child.
+      val local = collectSample(sample)
+      if (local.isEmpty)
+        graft.functions.KMeansTrainer.Trained2(originModel, IndexedSeq(originModel), k2, 0)
+      else graft.functions.KMeansTrainer.trainTwoLevelLocal(
+        local, math.min(k1, local.size), k2, 15, 1e-4)
     }
+
+  /** A two-level cross-modal quantizer over `docs`' IMAGE vectors: k1 × k2
+    * from [[crossModalFineK]] of the docs' count, trained on the same
+    * pre-decode sample recipe as [[trainCoarseModel]] at 32 docs per FINE
+    * centroid. */
+  private def trainFineModel(
+      t: graft.Tables,
+      docs: org.apache.spark.sql.DataFrame): graft.functions.KMeansTrainer.Trained2 = {
+    val (k1, k2) = crossModalFineK(docs.count())
+    val sampleLimit = math.max(256L, 32L * k1 * k2)
+    trainFineFrom(embedSlice(t, image, docs.filter(col("doc_id") < sampleLimit)), k1, k2)
+  }
 
   /** The cross-modal family's OWN trained quantizer (round-13 advice): a
     * two-level model over the image-feature space with k ∝ N fine cells of
     * ~[[CrossModalFineCell]] expected size, replacing the flat k = √N
-    * [[mediaNearDupModel]] in q220/q231's blocking. Same pre-decode sample
-    * recipe as [[trainCoarseModel]] at 32 docs per FINE centroid — the
-    * sample is ⌈N/8⌉-sized, so it always trains distributed at scale
-    * (F ≥ 128 ⇔ N ≥ 32 k docs). Memoized per (session, dir). */
+    * one-shot image model in q220/q231's blocking ([[trainFineModel]] over
+    * the corpus — the sample is ⌈N/8⌉-sized, so it always trains
+    * distributed at scale: F ≥ 128 ⇔ N ≥ 32 k docs). Memoized per
+    * (session, dir). */
   private[graft] def crossModalFineModel(
       t: graft.Tables): graft.functions.KMeansTrainer.Trained2 =
-    Artifacts.get(t, "xmfine")({
-      val (k1, k2) = crossModalFineK(t.documents.count())
-      val sampleLimit = math.max(256L, 32L * k1 * k2)
-      trainFineFrom(
-        embedDocSlice(t, t.documents.filter(col("doc_id") < sampleLimit)),
-        k1, k2)
-    })
+    Artifacts.get(t, "xmfine")(trainFineModel(t, t.documents))
 
 
   /** The 256-bit cross-modal sketch columns over an `embedding` column. */
@@ -1652,7 +1604,7 @@ object MultimodalQueries {
         flatten(transform(col("es"), e => e.getField("embedding"))).as("embs"))
 
   /** q220's IMAGE-side flat index rows: (img_id, bucket, 4-long sketch,
-    * embedding) under the cross-modal FINE model — the [[nearDupIndex]]
+    * embedding) under the cross-modal FINE model — the [[nearDupIndexOf]]
     * discipline at the cross-modal operating point (256-bit sketch,
     * [[crossModalPlaneSets]]), with `bucket` a k ∝ N fine cell id
     * ([[crossModalFineModel]]) so the probe-side pair population is linear
@@ -1660,7 +1612,7 @@ object MultimodalQueries {
     * O(N·√F·dim) map-only work. */
   private[graft] def crossModalImageFlat(t: graft.Tables): org.apache.spark.sql.DataFrame = {
     import graft.functions.KMeansTrainer
-    mediaPixelEmbeddings(t).select(col("doc_id").as("img_id") +:
+    embeddingsOf(t, image).select(col("doc_id").as("img_id") +:
       KMeansTrainer.fineBucket(col("embedding"), crossModalFineModel(t))
         .as("bucket") +: (crossModalSigCols :+ col("embedding")): _*)
   }
@@ -1755,11 +1707,11 @@ object MultimodalQueries {
           t.spark, prbTbl, Seq("qid"), width, Some(t.dir))
     })
     if (useServed)
-      servedProbesFrom(t, t.spark.table(prbTbl), audioSampleEmbeddings(t))
+      servedProbesFrom(t, t.spark.table(prbTbl), embeddingsOf(t, audio))
     else Artifacts.get(t, "xmaudprobes")({
       import graft.functions.KMeansTrainer
       cacheStanding(
-        audioSampleEmbeddings(t).select(col("doc_id").as("qid") +:
+        embeddingsOf(t, audio).select(col("doc_id").as("qid") +:
           explode(KMeansTrainer.fineProbeBuckets(
             col("embedding"), crossModalFineModel(t),
             CrossModalL1Probes, CrossModalFineProbes))
@@ -1846,7 +1798,7 @@ object MultimodalQueries {
       idx: org.apache.spark.sql.DataFrame,
       prePartitioned: Boolean): org.apache.spark.sql.DataFrame =
     crossModalAuditFrom(t, probes, idx, prePartitioned,
-      mediaPixelEmbeddings(t), audioSampleEmbeddings(t))
+      embeddingsOf(t, image), embeddingsOf(t, audio))
 
   /** [[crossModalAuditFrom]] with the ALIGNMENT sides injectable: the live
     * forms pass the session's decode-once checkpoints; q232 passes the
@@ -1949,7 +1901,7 @@ object MultimodalQueries {
   private[graft] def crossModalAudioProbesPacked(
       t: graft.Tables): org.apache.spark.sql.DataFrame = {
     import graft.functions.KMeansTrainer
-    audioSampleEmbeddings(t).select(col("doc_id").as("qid") +:
+    embeddingsOf(t, audio).select(col("doc_id").as("qid") +:
       KMeansTrainer.fineProbeBuckets(
         col("embedding"), crossModalFineModel(t),
         CrossModalL1Probes, CrossModalFineProbes).as("buckets") +:
@@ -2107,8 +2059,7 @@ object MultimodalQueries {
     // Query vectors come from the session decode checkpoint (q231's
     // alignment reads it anyway); q232 is the fully-at-rest form.
     crossModalAuditFrom(t,
-      servedProbesFrom(t, t.spark.table(prbTbl),
-        audioSampleEmbeddings(t)),
+      servedProbesFrom(t, t.spark.table(prbTbl), embeddingsOf(t, audio)),
       t.spark.table(idxTbl), prePartitioned = true)
   }
 
@@ -2124,22 +2075,13 @@ object MultimodalQueries {
     * verify fetch — runs exchange-free on the embedding side. At 100 TB
     * this is exactly the "vector column next to the corpus" a production
     * pipeline maintains instead of re-running its encoders per session. */
-  private[graft] def embTableOf(
-      t: graft.Tables, tag: String,
-      emb: => org.apache.spark.sql.DataFrame): String =
-    Artifacts.get(t, s"$tag#embtbl")({
-      val width = t.spark.sessionState.conf.numShufflePartitions
-      val tbl = layoutName(tag, t.dir, width)
-      graft.sources.LayoutWriter.serveOrWriteBucketed(
-        t.spark, emb, tbl, Seq("doc_id"), width, Some(t.dir))
-      tbl
-    })
+  private[graft] def embTableOf(t: graft.Tables, m: Modality): String =
+    standingTable(t, s"${m.short}emb", "embtbl", Seq("doc_id"))(embeddingsOf(t, m))
 
   /** [[embTableOf]] of the image and audio modalities — q232's alignment
     * sides; the image table doubles as q228's serve-side verify source. */
   private[graft] def crossModalEmbTables(t: graft.Tables): (String, String) =
-    (embTableOf(t, "imgemb", mediaPixelEmbeddings(t)),
-      embTableOf(t, "audemb", audioSampleEmbeddings(t)))
+    (embTableOf(t, image), embTableOf(t, audio))
 
   /** q220's audit served ENTIRELY from at-rest artifacts — the zero-decode
     * session: retrieval from q231's packed index + probe tables, alignment
@@ -2171,7 +2113,7 @@ object MultimodalQueries {
 
   /** q224's standing STORE-side retrieval index: (img_id, bucket, 4-long
     * sketch) for store docs (doc_id % 10 ≠ 0) under the FROZEN store-trained
-    * quantizer ([[mediaIncrementalModel]] — the incremental family never
+    * quantizer ([[crossModalStoreFineModel]] — the incremental family never
     * retrains per delta, because retraining re-buckets the standing index).
     * This is [[crossModalImageIndex]]'s incremental twin: built once,
     * checkpointed in [[packXModal]]'s per-bucket packed form, maintained
@@ -2182,7 +2124,7 @@ object MultimodalQueries {
       import graft.functions.KMeansTrainer
       val m2 = crossModalStoreFineModel(t)
       cacheStanding(packXModal(
-        mediaPixelEmbeddings(t).filter(col("doc_id") % 10 =!= 0)
+        embeddingsOf(t, image).filter(col("doc_id") % 10 =!= 0)
           .select(col("doc_id").as("img_id") +:
             KMeansTrainer.fineBucket(col("embedding"), m2).as("bucket") +:
             (crossModalSigCols :+ col("embedding")): _*)))
@@ -2196,13 +2138,8 @@ object MultimodalQueries {
     * (session, dir). */
   private[graft] def crossModalStoreFineModel(
       t: graft.Tables): graft.functions.KMeansTrainer.Trained2 =
-    Artifacts.get(t, "xmstorefine")({
-      val store = t.documents.filter(col("doc_id") % 10 =!= 0)
-      val (k1, k2) = crossModalFineK(store.count())
-      val sampleLimit = math.max(256L, 32L * k1 * k2)
-      trainFineFrom(
-        embedDocSlice(t, store.filter(col("doc_id") < sampleLimit)), k1, k2)
-    })
+    Artifacts.get(t, "xmstorefine")(
+      trainFineModel(t, t.documents.filter(col("doc_id") % 10 =!= 0)))
 
   /** Tonight's batch as a cross-modal probe frame under the frozen store
     * model: (qid, probed bucket, 4-long sketch, query embedding), one row
@@ -2212,7 +2149,7 @@ object MultimodalQueries {
   private[graft] def crossModalBatchProbes(t: graft.Tables): org.apache.spark.sql.DataFrame = {
     import graft.functions.KMeansTrainer
     val m2 = crossModalStoreFineModel(t)
-    audioSampleEmbeddings(t).filter(col("doc_id") % 10 === 0)
+    embeddingsOf(t, audio).filter(col("doc_id") % 10 === 0)
       .select(col("doc_id").as("qid") +:
         explode(KMeansTrainer.fineProbeBuckets(
           col("embedding"), m2, CrossModalL1Probes, CrossModalFineProbes))
@@ -2254,7 +2191,7 @@ object MultimodalQueries {
     * planted match/miss outcomes, accounting, the decode-once plan, and the
     * no-cartesian plan. */
   val q224 = EngineQuery("q224_crossmodal_incremental", None) { t =>
-    val batch = audioSampleEmbeddings(t).filter(col("doc_id") % 10 === 0)
+    val batch = embeddingsOf(t, audio).filter(col("doc_id") % 10 === 0)
       .select("doc_id")
     orderedByAll(
       batch
@@ -2269,31 +2206,6 @@ object MultimodalQueries {
             col("top_cos") < CrossModalAlignT, 1L).otherwise(0L)).as("n_miss")))
   }
 
-  /** A decoded modality's handles for the incremental-ingest family: the
-    * memo tag, the filter-before-decode embed pass (model training), and
-    * the session decode-once embedding checkpoint. ONE ingest pipeline
-    * (model / store index / batch assignment / decision step / audit)
-    * serves all three modalities through this descriptor — shared code,
-    * not three copies. */
-  private[graft] final case class IngestModality(
-      tag: String,
-      embedSlice: (graft.Tables, org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame,
-      embeddings: graft.Tables => org.apache.spark.sql.DataFrame,
-      /** SPEC probe: did this session pay the CORPUS-scale decode? (the
-        * decode-once checkpoint cache filled) — never a control-flow
-        * check, per [[graft.Artifacts.built]]. */
-      corpusDecoded: graft.Tables => Boolean)
-
-  private[graft] lazy val imageIngest: IngestModality =
-    IngestModality("media", embedDocSlice, mediaPixelEmbeddings,
-      t => Artifacts.built(t, "mediaemb"))
-  private[graft] lazy val audioIngest: IngestModality =
-    IngestModality("audio", audioEmbedDocSlice, audioSampleEmbeddings,
-      t => Artifacts.built(t, "audioemb"))
-  private[graft] lazy val videoIngest: IngestModality =
-    IngestModality("video", videoEmbedDocSlice, videoFrameEmbeddings,
-      t => Artifacts.built(t, "videoemb"))
-
   /** A modality's frozen STORE-side ledger at rest, PACKED: [[packIngest]]
     * of the store's (doc_id, bucket, sig, embedding) rows — one row per
     * coarse bucket (ids ascending, id-major sig words, id-major vectors,
@@ -2303,14 +2215,8 @@ object MultimodalQueries {
     * convention (they live where a production IVF index keeps them), so a
     * serve session re-pays neither decode + train + assign NOR the
     * store-scale pack. */
-  private[graft] def storePackTableOf(t: graft.Tables, m: IngestModality): String =
-    Artifacts.get(t, s"${m.tag}storepack#layout")({
-      val width = t.spark.sessionState.conf.numShufflePartitions
-      val tbl = layoutName(s"${m.tag}storepack", t.dir, width)
-      graft.sources.LayoutWriter.serveOrWriteBucketed(
-        t.spark, storePackedOf(t, m), tbl, Seq("bucket"), width, Some(t.dir))
-      tbl
-    })
+  private[graft] def storePackTableOf(t: graft.Tables, m: Modality): String =
+    standingTable(t, s"${m.tag}storepack", "layout", Seq("bucket"))(storePackedOf(t, m))
 
   /** Tonight's batch under the frozen model, AT REST: the batch's
     * (doc_id, bucket, sig, embedding) probe rows bucket-bucketed like the
@@ -2321,15 +2227,8 @@ object MultimodalQueries {
     * q222's ledger appends, plus the vector column the corpus maintains
     * anyway), which is exactly what a serve session replays the audit
     * from without touching media bytes. */
-  private[graft] def batchProbeTableOf(t: graft.Tables, m: IngestModality): String =
-    Artifacts.get(t, s"${m.tag}batchprb#layout")({
-      val width = t.spark.sessionState.conf.numShufflePartitions
-      val tbl = layoutName(s"${m.tag}batchprb", t.dir, width)
-      graft.sources.LayoutWriter.serveOrWriteBucketed(
-        t.spark, batchFlatOf(t, m), tbl,
-        Seq("bucket"), width, Some(t.dir))
-      tbl
-    })
+  private[graft] def batchProbeTableOf(t: graft.Tables, m: Modality): String =
+    standingTable(t, s"${m.tag}batchprb", "layout", Seq("bucket"))(batchFlatOf(t, m))
 
   /** Provenance of one nightly fold of admitted arrivals into the packed
     * at-rest store ledger: which hash files the fold rewrote vs left in
@@ -2363,7 +2262,7 @@ object MultimodalQueries {
     * the session's cached packed frame, which would otherwise keep
     * serving the pre-fold ledger (the drop-hook discipline). */
   private[graft] def foldAdmittedIntoStorePack(
-      t: graft.Tables, m: IngestModality,
+      t: graft.Tables, m: Modality,
       admittedIds: org.apache.spark.sql.DataFrame): LedgerFoldStats = {
     val admittedFlat = batchFlatOf(t, m)
       .join(admittedIds, Seq("doc_id"), "left_semi")
@@ -2415,7 +2314,7 @@ object MultimodalQueries {
     * touching the at-rest tables: the "fresh session against a standing
     * warehouse" simulation ([[dropCrossModalSession]]'s ingest twin), and
     * the dir-turnover eviction hook for long sessions. */
-  private[graft] def dropIngestSession(t: graft.Tables, m: IngestModality): Unit = {
+  private[graft] def dropIngestSession(t: graft.Tables, m: Modality): Unit = {
     Artifacts.forget(t, s"${m.tag}emb")
     Artifacts.forget(t, s"${m.tag}batchflat")
     Artifacts.forget(t, s"${m.tag}inc")
@@ -2432,20 +2331,13 @@ object MultimodalQueries {
     * session cache entries. The restore hook for specs that FOLD into the
     * shared deterministic table (the suite JVM shares one session), and
     * the dir-turnover eviction for long sessions. */
-  private[graft] def dropStorePackArtifacts(t: graft.Tables, m: IngestModality): Unit = {
+  private[graft] def dropStorePackArtifacts(t: graft.Tables, m: Modality): Unit = {
     val width = t.spark.sessionState.conf.numShufflePartitions
-    val tbl = layoutName(s"${m.tag}storepack", t.dir, width)
     Artifacts.forget(t, s"${m.tag}storepack#layout")
     Artifacts.forget[org.apache.spark.sql.DataFrame](t, s"${m.tag}storepack")
       .foreach(_.unpersist())
-    t.spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    // An externally-registered table's files (and the freshness marker)
-    // survive DROP TABLE — left in place they would re-register the folded
-    // ledger as "fresh" for the pristine-store builders that come after.
-    val loc = new org.apache.hadoop.fs.Path(
-      t.spark.sessionState.conf.warehousePath, tbl.toLowerCase)
-    val fs = loc.getFileSystem(t.spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
+    graft.sources.LayoutWriter.dropLayout(
+      t.spark, layoutName(s"${m.tag}storepack", t.dir, width))
   }
 
   /** The FROZEN store-trained coarse quantizer for a modality's nightly
@@ -2453,23 +2345,13 @@ object MultimodalQueries {
     * (doc_id % 10 ≠ 0 — q90/q125's split convention), and never retrained
     * per delta — production does not retrain a quantizer per nightly
     * batch, because retraining re-buckets the entire standing index.
-    * Same pre-decode sample recipe and [[trainCoarseFrom]] routing as
-    * [[trainCoarseModel]], k ∝ √(store size). Memoized per
+    * This is [[trainCoarseModel]] over the store, k ∝ √(store size).
+    * Memoized per
     * (session, dir, modality). */
   private[graft] def incrementalModelOf(
-      t: graft.Tables, m: IngestModality): graft.functions.KMeansTrainer.Trained =
-    Artifacts.get(t, s"${m.tag}inc")({
-      val store = t.documents.filter(col("doc_id") % 10 =!= 0)
-      val k = mediaCoarseK(store.count())
-      val sampleLimit = math.max(256L, 32L * k)
-      trainCoarseFrom(m.embedSlice(t, store.filter(col("doc_id") < sampleLimit)), k)
-    })
-
-  /** [[incrementalModelOf]] on the image modality (q221/q222's quantizer,
-    * also the frozen model of q224's cross-modal store index). */
-  private[graft] def mediaIncrementalModel(
-      t: graft.Tables): graft.functions.KMeansTrainer.Trained =
-    incrementalModelOf(t, imageIngest)
+      t: graft.Tables, m: Modality): graft.functions.KMeansTrainer.Trained =
+    Artifacts.get(t, s"${m.tag}inc")(
+      trainCoarseModel(t, m, t.documents.filter(col("doc_id") % 10 =!= 0)))
 
   /** The frozen store-side index of a modality: (doc_id, bucket, sig) for
     * every store doc under the store-trained model — the standing artifact
@@ -2482,20 +2364,9 @@ object MultimodalQueries {
     * the nightly candidate join co-locates; 20-byte rows — never vectors
     * or media bytes. */
   private[graft] def storeIndexOf(
-      t: graft.Tables, m: IngestModality): org.apache.spark.sql.DataFrame =
-    Artifacts.get(t, s"${m.tag}storeidx")({
-      import graft.functions.{KMeansTrainer, HyperplaneSignature}
-      val km = incrementalModelOf(t, m)
-      m.embeddings(t).filter(col("doc_id") % 10 =!= 0)
-        .select(col("doc_id"),
-          KMeansTrainer.coarseBucket(col("embedding"), km).as("bucket"),
-          HyperplaneSignature(col("embedding"), mediaSignPlanes, 64).as("sig"))
-        .localCheckpoint()
-    })
-
-  /** [[storeIndexOf]] on the image modality. */
-  private[graft] def mediaStoreIndex(t: graft.Tables): org.apache.spark.sql.DataFrame =
-    storeIndexOf(t, imageIngest)
+      t: graft.Tables, m: Modality): org.apache.spark.sql.DataFrame =
+    Artifacts.get(t, s"${m.tag}storeidx")(
+      storeFlatOf(t, m).drop("embedding").localCheckpoint())
 
   /** Assignment projection shared by both ingest sides: (doc_id, bucket,
     * sig, embedding) under the modality's frozen model — map-only over
@@ -2504,7 +2375,7 @@ object MultimodalQueries {
     * fused decision scans vectors in place instead of fetching them per
     * candidate. */
   private def assignFlat(
-      t: graft.Tables, m: IngestModality,
+      t: graft.Tables, m: Modality,
       emb: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     import graft.functions.{KMeansTrainer, HyperplaneSignature}
     val km = incrementalModelOf(t, m)
@@ -2518,11 +2389,11 @@ object MultimodalQueries {
     * checkpoint. Only the ledger BUILD paths pay this; a live nightly
     * session with a fingerprint-fresh at-rest ledger never calls it. */
   private[graft] def storeFlatOf(
-      t: graft.Tables, m: IngestModality): org.apache.spark.sql.DataFrame =
-    assignFlat(t, m, m.embeddings(t).filter(col("doc_id") % 10 =!= 0))
+      t: graft.Tables, m: Modality): org.apache.spark.sql.DataFrame =
+    assignFlat(t, m, embeddingsOf(t, m).filter(col("doc_id") % 10 =!= 0))
 
-  /** Tonight's BATCH flat rows, decoded DELTA-ONLY ([[IngestModality
-    * .embedSlice]] over the batch docs, never the corpus checkpoint) and
+  /** Tonight's BATCH flat rows, decoded DELTA-ONLY ([[embedSlice]] over
+    * the batch docs, never the corpus checkpoint) and
     * checkpointed per (session, dir, modality). This is what makes the
     * live nightly forms' cost arrival-bounded: the batch must decode
     * fresh by nature, but it is delta-sized — and with the store side
@@ -2530,10 +2401,10 @@ object MultimodalQueries {
     * branch), NOTHING corpus-scale is decoded, trained or packed on the
     * live path (spec-pinned by MediaIngestReuseSpec). */
   private[graft] def batchFlatOf(
-      t: graft.Tables, m: IngestModality): org.apache.spark.sql.DataFrame =
+      t: graft.Tables, m: Modality): org.apache.spark.sql.DataFrame =
     Artifacts.get(t, s"${m.tag}batchflat")(
       assignFlat(t, m,
-        m.embedSlice(t, t.documents.filter(col("doc_id") % 10 === 0)))
+        embedSlice(t, m, t.documents.filter(col("doc_id") % 10 === 0)))
         .localCheckpoint())
 
   /** Pack flat ingest rows into ONE row per coarse bucket — ids ascending,
@@ -2610,7 +2481,7 @@ object MultimodalQueries {
     * hashpartitioning(bucket) the session build would. Absent/stale →
     * the session build, unchanged. */
   private[graft] def storePackedOf(
-      t: graft.Tables, m: IngestModality): org.apache.spark.sql.DataFrame =
+      t: graft.Tables, m: Modality): org.apache.spark.sql.DataFrame =
     Artifacts.get(t, s"${m.tag}storepack")({
       val width = t.spark.sessionState.conf.numShufflePartitions
       val tbl = layoutName(s"${m.tag}storepack", t.dir, width)
@@ -2642,7 +2513,7 @@ object MultimodalQueries {
     * grows per slice, and MediaStreamSpec's q222 ≡ q221 pin doubles as a
     * cross-implementation check of the fused rule.) */
   private[graft] def incrementalDroppedOf(
-      t: graft.Tables, m: IngestModality): org.apache.spark.sql.DataFrame =
+      t: graft.Tables, m: Modality): org.apache.spark.sql.DataFrame =
     fusedIngestRejected(t, batchProbeOf(t, m), storePackedOf(t, m))
 
   /** The nightly batch's probe frame (doc_id, bucket, sig, embedding) —
@@ -2652,7 +2523,7 @@ object MultimodalQueries {
     * packed bucket, so coalescing these byte-tiny partitions serializes
     * the kernel compute. */
   private def batchProbeOf(
-      t: graft.Tables, m: IngestModality): org.apache.spark.sql.DataFrame =
+      t: graft.Tables, m: Modality): org.apache.spark.sql.DataFrame =
     batchFlatOf(t, m)
       .repartition(
         t.spark.sessionState.conf.numShufflePartitions, col("bucket"))
@@ -2708,34 +2579,17 @@ object MultimodalQueries {
       .select("doc_id")
   }
 
-  /** [[incrementalDroppedOf]] on the image modality — q221's rejected set,
-    * exposed for MediaIncrementalSpec/MediaStreamSpec. */
-  private[graft] def mediaIncrementalDropped(
-      t: graft.Tables): org.apache.spark.sql.DataFrame =
-    incrementalDroppedOf(t, imageIngest)
-
   /** The batch slice's (doc_id, bucket, sig) under a modality's frozen
     * model — map-only over the decode-once checkpoint (in production, over
     * the night's freshly decoded delta). */
   private[graft] def batchAssignedOf(
-      t: graft.Tables, m: IngestModality,
+      t: graft.Tables, m: Modality,
       sliceIds: Option[org.apache.spark.sql.DataFrame] = None)
       : org.apache.spark.sql.DataFrame = {
-    import graft.functions.{KMeansTrainer, HyperplaneSignature}
-    val km = incrementalModelOf(t, m)
-    val base = m.embeddings(t).filter(col("doc_id") % 10 === 0)
+    val base = embeddingsOf(t, m).filter(col("doc_id") % 10 === 0)
     val sliced = sliceIds.fold(base)(ids => base.join(ids, Seq("doc_id"), "left_semi"))
-    sliced.select(col("doc_id"),
-      KMeansTrainer.coarseBucket(col("embedding"), km).as("bucket"),
-      HyperplaneSignature(col("embedding"), mediaSignPlanes, 64).as("sig"))
+    assignFlat(t, m, sliced).drop("embedding")
   }
-
-  /** [[batchAssignedOf]] on the image modality. */
-  private[graft] def batchAssigned(
-      t: graft.Tables,
-      sliceIds: Option[org.apache.spark.sql.DataFrame] = None)
-      : org.apache.spark.sql.DataFrame =
-    batchAssignedOf(t, imageIngest, sliceIds)
 
   /** One ingest decision step in JOIN-ROW form — q222's continuous unit
     * of work (its ledger GROWS per slice: (bucket, sig) rows without
@@ -2751,10 +2605,10 @@ object MultimodalQueries {
     * q222 ≡ q221 pin makes the two implementations of the identical rule
     * check each other. */
   private[graft] def ingestStepOf(
-      t: graft.Tables, m: IngestModality,
+      t: graft.Tables, m: Modality,
       ledger: org.apache.spark.sql.DataFrame,
       slice: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val emb = m.embeddings(t)
+    val emb = embeddingsOf(t, m)
     // Slice-sized; feeds both joins. The bucket repartition pins the pair
     // joins' width (q220's AQE lesson — byte-tiny shuffles, Σ-pair
     // compute): pinning the slice side forces the co-partitioned ledger
@@ -2784,24 +2638,26 @@ object MultimodalQueries {
       .distinct()
   }
 
-  /** [[ingestStepOf]] on the image modality — q222's unit of work, also
-    * driven from a real foreachBatch sink by MediaStreamSpec. */
-  private[graft] def mediaIngestStep(
-      t: graft.Tables,
-      ledger: org.apache.spark.sql.DataFrame,
-      slice: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    ingestStepOf(t, imageIngest, ledger, slice)
-
   /** A modality's nightly-ingest audit (q221/q225/q226's shared body):
     * per frozen-model bucket, batch arrivals, rejected, admitted. One
     * probe frame feeds both the arrival counts and the fused decision —
     * the batch's assignment pass runs once. */
   private def ingestAudit(
-      t: graft.Tables, m: IngestModality): org.apache.spark.sql.DataFrame = {
+      t: graft.Tables, m: Modality): org.apache.spark.sql.DataFrame = {
     val probe = batchProbeOf(t, m)
     ingestAuditFrom(probe.select("doc_id", "bucket"),
       fusedIngestRejected(t, probe, storePackedOf(t, m)))
   }
+
+  /** A nightly-ingest audit with its serve/live choice — q221/q225/q226's
+    * body. Serve mode ([[ingestAuditServed]]): the frozen store index,
+    * batch assignments and embeddings all read from at-rest tables — zero
+    * decode, zero training. Default = the live nightly build
+    * ([[ingestAudit]]). */
+  private def ingestAuditFor(
+      t: graft.Tables, m: Modality): org.apache.spark.sql.DataFrame =
+    if (graft.sources.LayoutWriter.servingLayouts) ingestAuditServed(t, m)
+    else ingestAudit(t, m)
 
   /** The per-bucket ingest report over an arbitrary (batch index, rejected
     * set) pair — shared by the live nightly forms (q221/q225/q226), the
@@ -2829,7 +2685,7 @@ object MultimodalQueries {
     * decision is [[fusedIngestRejected]], shared verbatim with the live
     * form, so the serve cannot drift. */
   private[graft] def ingestAuditServed(
-      t: graft.Tables, m: IngestModality): org.apache.spark.sql.DataFrame = {
+      t: graft.Tables, m: Modality): org.apache.spark.sql.DataFrame = {
     // Both standing scans pin in the session cache behind their bucketed
     // table reads (round 17 — the serve dual's warm path re-scanned the
     // data-scale packed ledger per run, measured 49–50 s vs the live
@@ -2850,28 +2706,21 @@ object MultimodalQueries {
   /** INCREMENTAL media near-dup — the nightly-ingest form of q218 (the
     * family convention: q90 exact / q125 fuzzy / q183 minhash / q185
     * semdedup all have incremental twins; this is the trained-block vector
-    * twin). Yesterday's corpus is a frozen store ([[mediaStoreIndex]]: the
+    * twin). Yesterday's corpus is a frozen store ([[storeIndexOf]]: the
     * store-trained quantizer + per-doc bucket and sign signature, built
     * once); tonight's batch (doc_id ≡ 0 mod 10) is decoded, bucketed and
     * signed delta-only, admitted unless a store member or an earlier batch
     * member sits at exact cosine ≥ [[MediaNearDupT]] in its block
-    * ([[mediaIncrementalDropped]]). Output is the per-bucket ingest audit:
+    * ([[incrementalDroppedOf]]). Output is the per-bucket ingest audit:
     * batch arrivals, admitted, rejected. No SQL oracle (codec + trained
     * quantizer); MediaIncrementalSpec pins the rejected set against a
     * single-node mirror of the exact rule on planted (store-dup,
     * batch-internal-dup, unique) corpora and the real corpus, audit
     * accounting, the decode-once plan, and the no-cartesian plan. */
-  val q221 = EngineQuery("q221_media_neardup_incremental", None) { t =>
-    // Serve-mode dual ([[ingestAuditServed]]): the frozen store index,
-    // batch assignments and embeddings all read from at-rest tables —
-    // zero decode, zero training. Default = the live nightly build.
-    if (graft.sources.LayoutWriter.servingLayouts)
-      ingestAuditServed(t, imageIngest)
-    else ingestAudit(t, imageIngest)
-  }
+  val q221 = EngineQuery("q221_media_neardup_incremental", None)(ingestAuditFor(_, image))
 
   /** AUDIO nightly ingest — q221 on the WAV sample bridge, through the
-    * SAME parametrized pipeline ([[IngestModality]]: one model-train /
+    * SAME parametrized pipeline ([[Modality]]: one model-train /
     * store-index / batch-assign / decision-step / audit implementation
     * serves all three modalities). The audio span is 512 text bytes, so
     * the ingest's dup structure genuinely differs from the image form: an
@@ -2880,11 +2729,7 @@ object MultimodalQueries {
     * asserts the asymmetry). No SQL oracle (codec + trained quantizer);
     * the family spec pins rejected-set parity vs the single-node mirror on
     * planted and real corpora, plus decode-once and cartesian-free. */
-  val q225 = EngineQuery("q225_audio_neardup_incremental", None) { t =>
-    if (graft.sources.LayoutWriter.servingLayouts)
-      ingestAuditServed(t, audioIngest)
-    else ingestAudit(t, audioIngest)
-  }
+  val q225 = EngineQuery("q225_audio_neardup_incremental", None)(ingestAuditFor(_, audio))
 
   /** VIDEO nightly ingest — q221 on the sampled-frame bridge (span
     * [0,256)∪[32,288)), completing the (modality × form) matrix's nightly
@@ -2894,17 +2739,13 @@ object MultimodalQueries {
     * image modality (q222/MediaStreamSpec) and transfers because the step
     * function is the same parametrized [[ingestStepOf]] for every
     * modality. Same spec coverage as q225. */
-  val q226 = EngineQuery("q226_video_neardup_incremental", None) { t =>
-    if (graft.sources.LayoutWriter.servingLayouts)
-      ingestAuditServed(t, videoIngest)
-    else ingestAudit(t, videoIngest)
-  }
+  val q226 = EngineQuery("q226_video_neardup_incremental", None)(ingestAuditFor(_, video))
 
   /** CONTINUOUS media ingest — the third member of the media triple
     * (one-shot q218 / nightly q221 / continuous q222), the q216 convention
     * on the vector index: the batch arrives as id-ordered micro-batches
     * (the engine's window-free [[CurationQueries.generations]] slicer),
-    * each slice is decided by [[mediaIngestStep]] against the frozen store
+    * each slice is decided by [[ingestStepOf]] against the frozen store
     * index PLUS a sequentially maintained ledger of every PROCESSED batch
     * member — processed, not admitted: the earlier-member rule counts
     * lower-id members regardless of their own fate, which is exactly what
@@ -2921,7 +2762,7 @@ object MultimodalQueries {
     // fused (round 17 — the board's last join-row Hamming population
     // closed), so the per-generation ledger packs (doc_id, sig, embedding)
     // per bucket, q231's vectors-live-in-the-index convention.
-    val batchFlat = batchFlatOf(t, imageIngest)
+    val batchFlat = batchFlatOf(t, image)
     val sliced = CurationQueries.generations(batchFlat, 3)
       .localCheckpoint(eager = false)
     // The neighbor set a slice checks is store ∪ processed-batch; BOTH
@@ -2939,7 +2780,7 @@ object MultimodalQueries {
     // remains the independent cross-implementation check — MediaStreamSpec
     // drives it from a real foreachBatch pipeline and pins
     // stream ≡ q222 ≡ q221.
-    val storePacked = storePackedOf(t, imageIngest)
+    val storePacked = storePackedOf(t, image)
     // Lazy checkpoints: each generation's ledger/decision frame still
     // materializes exactly once and cuts lineage for everything after it,
     // but WITHOUT a per-generation job barrier — the three generations'
@@ -2985,10 +2826,10 @@ object MultimodalQueries {
     // 32-core audit write and fold 4× the files of the 8-core one).
     val width = graft.sources.LayoutWriter.auditBuckets(spark)
     val tbl = layoutName("mediafoldprb", t.dir, width)
-    val storeFlat = storeFlatOf(t, imageIngest).localCheckpoint(eager = false)
+    val storeFlat = storeFlatOf(t, image).localCheckpoint(eager = false)
     graft.sources.LayoutWriter.writeBucketed(
       packIngest(storeFlat), tbl, Seq("bucket"), width, "overwrite")
-    val batch = batchFlatOf(t, imageIngest)
+    val batch = batchFlatOf(t, image)
     val rejected = fusedIngestRejected(t,
       batch.repartition(width, col("bucket")), spark.table(tbl))
     val admittedFlat = batch.join(rejected, Seq("doc_id"), "left_anti")

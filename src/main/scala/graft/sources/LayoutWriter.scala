@@ -222,6 +222,18 @@ object LayoutWriter {
     new org.apache.hadoop.fs.Path(
       spark.sessionState.conf.warehousePath, table.toLowerCase)
 
+  /** Drop a layout table and everything it left in the warehouse: the
+    * catalog entry, its data files and its freshness stamp. An externally
+    * registered table ([[registerIfFresh]]) keeps its files and stamp
+    * through DROP TABLE, and left in place they would re-register a
+    * modified (appended, folded) table as fresh for the next builder. */
+  def dropLayout(spark: org.apache.spark.sql.SparkSession, table: String): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    val loc = defaultTableLocation(spark, table)
+    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(loc)) fs.delete(loc, true)
+  }
+
   /** SERVE-or-build for a deterministic-named bucketed layout — the
     * cross-session at-rest story the layout queries (q228/q230/q231) are
     * measured on. When `SPARK_GRAFT_SERVE_LAYOUTS=1` and the table's data
@@ -242,10 +254,12 @@ object LayoutWriter {
     * the exact upstream build the layout exists to skip. */
   /** Whether this session serves at-rest layouts (`SPARK_GRAFT_SERVE_LAYOUTS=1`;
     * system property so a spec can flip it in-process — JVM env is immutable
-    * after launch). Queries with a live/served dual (q219/q221/q223/q225/q226)
-    * branch on this: flag off = the live session build (the safe default on
-    * fixture dirs regenerated in place), flag on = answer from the standing
-    * at-rest artifacts, building them only if absent. */
+    * after launch). The queries with a live/served dual branch on this in
+    * one place per family — `MultimodalQueries.nearDupAuditFor` (q219/q223),
+    * `MultimodalQueries.ingestAuditFor` (q221/q225/q226) and two curation
+    * branches in `CurationQueries`: flag off = the live session build (the
+    * safe default on fixture dirs regenerated in place), flag on = answer
+    * from the standing at-rest artifacts, building them only if absent. */
   def servingLayouts: Boolean =
     onOffFlag("SPARK_GRAFT_SERVE_LAYOUTS", "spark.graft.serveLayouts")
 

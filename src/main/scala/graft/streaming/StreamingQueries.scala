@@ -375,9 +375,17 @@ object StreamingQueries {
 
   /** Streaming twin of q141 over a staged file source — the processor on
     * its production surface (RocksDB-backed state, Update mode). The
-    * caller's session must set the RocksDB state-store provider. */
+    * caller's session must set the RocksDB state-store provider.
+    *
+    * No-data micro-batches are off for the session: a processing-time
+    * `transformWithState` operator asks for another batch after every
+    * batch, so with them on a `Trigger.AvailableNow` run never ends — it
+    * keeps running empty batches after the last file. TTL semantics hold
+    * without them: an expired value already reads as absent, and its
+    * state rows are evicted in the next batch that carries data. */
   def funnelStream(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     val raw = spark.read.parquet(s"$sfDir/events.parquet").schema
     val streamDir = java.nio.file.Files.createTempDirectory("graft_funnel")
     java.nio.file.Files.copy(

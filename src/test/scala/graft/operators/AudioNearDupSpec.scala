@@ -29,7 +29,7 @@ class AudioNearDupSpec extends SharedSparkSpec {
     BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   private def collectEmb(t: graft.Tables): Array[(Long, Array[Double])] =
-    MultimodalQueries.audioSampleEmbeddings(t)
+    MultimodalQueries.embeddingsOf(t, MultimodalQueries.audio)
       .as[(Long, Seq[Float])].collect()
       .map { case (id, v) => (id, v.map(_.toDouble).toArray) }
       .sortBy(_._1)
@@ -37,7 +37,7 @@ class AudioNearDupSpec extends SharedSparkSpec {
   /** Single-node reference of q219's rule: trained-block the vectors, drop
     * every member with a lower-id block-mate at exact cosine ≥ T. */
   private def localDropped(t: graft.Tables): Set[Long] = {
-    val km = MultimodalQueries.audioNearDupModel(t)
+    val km = MultimodalQueries.nearDupModelOf(t, MultimodalQueries.audio)
     val T = MultimodalQueries.MediaNearDupT
     collectEmb(t).groupBy { case (_, v) =>
       graft.functions.KMeansTrainer.assignLocal(v, km)
@@ -73,7 +73,7 @@ class AudioNearDupSpec extends SharedSparkSpec {
     val t = new graft.Tables(spark, dir)
 
     val expect = localDropped(t)
-    val engine = MultimodalQueries.audioNearDupDropped(t)
+    val engine = MultimodalQueries.nearDupDroppedOf(t, MultimodalQueries.audio)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(engine == expect, s"engine=$engine local=$expect")
     assert(Set(102L, 111L).subsetOf(engine),
@@ -87,7 +87,7 @@ class AudioNearDupSpec extends SharedSparkSpec {
 
     // Sign-sketch prefilter admissibility: every true within-block pair's
     // signature Hamming distance is inside the slack.
-    val km = MultimodalQueries.audioNearDupModel(t)
+    val km = MultimodalQueries.nearDupModelOf(t, MultimodalQueries.audio)
     val emb = collectEmb(t)
     val byBlock = emb.groupBy { case (_, v) =>
       graft.functions.KMeansTrainer.assignLocal(v, km)
@@ -120,7 +120,7 @@ class AudioNearDupSpec extends SharedSparkSpec {
       "bucket sizes must partition the audio corpus")
     assert(rows.map(_._3).sum == localDropped(t).size.toLong,
       "audit drop counts must sum to the dropped set")
-    val engine = MultimodalQueries.audioNearDupDropped(t)
+    val engine = MultimodalQueries.nearDupDroppedOf(t, MultimodalQueries.audio)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(engine == localDropped(t), "sf0.001 parity vs local reference")
   }
@@ -133,7 +133,7 @@ class AudioNearDupSpec extends SharedSparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
     val live = rows(MultimodalQueries.q219.run(spark, sf001))
-    val served = MultimodalQueries.audioNearDupServed(t)
+    val served = MultimodalQueries.nearDupServedOf(t, MultimodalQueries.audio)
     assert(rows(served) == live)
     assert(live.nonEmpty)
     // Storage-only plan: no raw-text documents scan anywhere; the index
@@ -145,8 +145,7 @@ class AudioNearDupSpec extends SharedSparkSpec {
       l.contains("FileScan parquet") && l.contains("documents.parquet"))
     assert(textScans == 0, s"served q219 plan scans documents:\n${plan.take(1500)}")
     assert(plan.contains("Bucketed: true"), "audit side must read the bucketed layout")
-    val embTbl = MultimodalQueries.embTableOf(
-      t, "audemb", MultimodalQueries.audioSampleEmbeddings(t))
+    val embTbl = MultimodalQueries.embTableOf(t, MultimodalQueries.audio)
     assert(spark.sql(s"DESCRIBE EXTENDED $embTbl").collect()
       .exists(r => r.getString(0).contains("Num Buckets")),
       "audio embedding table must be bucketed")

@@ -38,7 +38,7 @@ class CoarseTrainRoutingSpec extends SharedSparkSpec {
     // Same (doc_id, embedding) rows the production sample sees: the decode
     // is per-doc deterministic, so filtering the decode-once corpus
     // checkpoint equals decoding the filtered documents slice.
-    val emb = MultimodalQueries.mediaPixelEmbeddings(t)
+    val emb = MultimodalQueries.embeddingsOf(t, MultimodalQueries.image)
     val sample = emb.filter(col("doc_id") < sampleLimit)
     assert(!MultimodalQueries.coarseTrainsDistributed(k)) // sf0.001 sits below the crossover…
     val local = MultimodalQueries.trainCoarseFrom(sample, k) // …so this IS the local path

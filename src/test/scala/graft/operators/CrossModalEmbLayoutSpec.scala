@@ -31,9 +31,9 @@ class CrossModalEmbLayoutSpec extends SharedSparkSpec {
         .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
         .sortBy(_._1).toSeq
     assert(embRows(spark.table(imgTbl))
-      == embRows(MultimodalQueries.mediaPixelEmbeddings(t)))
+      == embRows(MultimodalQueries.embeddingsOf(t, MultimodalQueries.image)))
     assert(embRows(spark.table(audTbl))
-      == embRows(MultimodalQueries.audioSampleEmbeddings(t)))
+      == embRows(MultimodalQueries.embeddingsOf(t, MultimodalQueries.audio)))
   }
 
   test("alignment join runs off the doc_id bucketing — no exchange on doc_id") {

@@ -38,9 +38,9 @@ class CrossModalIncrementalSpec extends SharedSparkSpec {
   private def localTop1(t: graft.Tables): Map[Long, (Long, Double)] = {
     import graft.functions.KMeansTrainer
     val m2 = MultimodalQueries.crossModalStoreFineModel(t)
-    val img = collect(MultimodalQueries.mediaPixelEmbeddings(t))
+    val img = collect(MultimodalQueries.embeddingsOf(t, MultimodalQueries.image))
       .filter(_._1 % 10 != 0)
-    val aud = collect(MultimodalQueries.audioSampleEmbeddings(t))
+    val aud = collect(MultimodalQueries.embeddingsOf(t, MultimodalQueries.audio))
       .filter(_._1 % 10 == 0)
     val imgById = img.toMap
     val sigOf = img.map { case (id, v) =>

@@ -55,7 +55,7 @@ class CrossModalLayoutSpec extends SharedSparkSpec {
         .sortBy(x => (x._1, x._2)).toSeq
     assert(prbRows(MultimodalQueries.servedProbesFrom(
         t, spark.table(prbTbl),
-        MultimodalQueries.audioSampleEmbeddings(t)))
+        MultimodalQueries.embeddingsOf(t, MultimodalQueries.audio)))
       == prbRows(MultimodalQueries.crossModalAudioProbes(t)))
   }
 
@@ -72,7 +72,7 @@ class CrossModalLayoutSpec extends SharedSparkSpec {
     try {
       spark.conf.set(key, "-1")
       val vj = spark.table(prbTbl)
-        .join(MultimodalQueries.audioSampleEmbeddings(t)
+        .join(MultimodalQueries.embeddingsOf(t, MultimodalQueries.audio)
           .select(col("doc_id").as("qid"), col("embedding"))
           .hint("shuffle_hash"), Seq("qid"))
         .queryExecution.executedPlan.toString
@@ -86,7 +86,7 @@ class CrossModalLayoutSpec extends SharedSparkSpec {
         "vector join re-shuffled the qid-bucketed probe table:\n" + vj.take(1500))
       val served = MultimodalQueries.servedProbesFrom(
         t, spark.table(prbTbl),
-        MultimodalQueries.audioSampleEmbeddings(t))
+        MultimodalQueries.embeddingsOf(t, MultimodalQueries.audio))
       val cjExec = served.join(spark.table(idxTbl).hint("shuffle_hash"), Seq("bucket"))
         .queryExecution.executedPlan
       val cj = cjExec.toString

@@ -39,8 +39,8 @@ class CrossModalSpec extends SharedSparkSpec {
   private def localAudit(t: graft.Tables): Map[String, (Long, Long, Long, Long, Long)] = {
     import graft.functions.KMeansTrainer
     val m2 = MultimodalQueries.crossModalFineModel(t)
-    val img = collect(MultimodalQueries.mediaPixelEmbeddings(t))
-    val aud = collect(MultimodalQueries.audioSampleEmbeddings(t))
+    val img = collect(MultimodalQueries.embeddingsOf(t, MultimodalQueries.image))
+    val aud = collect(MultimodalQueries.embeddingsOf(t, MultimodalQueries.audio))
     val imgById = img.toMap
     val sigOf = img.map { case (id, v) =>
       id -> MultimodalQueries.crossModalSignLocal(v) }.toMap
@@ -124,8 +124,8 @@ class CrossModalSpec extends SharedSparkSpec {
     // n_top1_dup (its top-1 image is the min-id twin at aligned cosine,
     // whether the pair is identical to byte 512 or only to byte 256).
     // Verify via the local mirror's per-doc rows for precision.
-    val img = collect(MultimodalQueries.mediaPixelEmbeddings(t)).toMap
-    val aud = collect(MultimodalQueries.audioSampleEmbeddings(t)).toMap
+    val img = collect(MultimodalQueries.embeddingsOf(t, MultimodalQueries.image)).toMap
+    val aud = collect(MultimodalQueries.embeddingsOf(t, MultimodalQueries.audio)).toMap
     for ((lo, hi) <- Seq((101L, 102L), (120L, 121L))) {
       assert(img(lo).sameElements(img(hi)), s"images of $lo/$hi must be identical")
       val c = round4(cos(aud(hi), img(lo)))

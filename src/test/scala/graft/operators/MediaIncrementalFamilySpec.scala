@@ -4,7 +4,7 @@ import graft.SharedSparkSpec
 import org.apache.spark.sql.functions._
 
 /** q225 (audio) and q226 (video) nightly ingest — q221's rule through the
-  * SAME parametrized pipeline ([[MultimodalQueries.IngestModality]]). Pins
+  * SAME parametrized pipeline ([[MultimodalQueries.Modality]]). Pins
   * (1) FULL parity of each modality's rejected set against a single-node
   * mirror of the exact rule (store-trained blocks, sign-sketch Hamming
   * prefilter, exact round4-cosine, store-or-lower-id-batch neighbor) on a
@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   */
 class MediaIncrementalFamilySpec extends SharedSparkSpec {
   import spark.implicits._
-  import MultimodalQueries.{IngestModality, audioIngest, videoIngest, imageIngest}
+  import MultimodalQueries.{Modality, audio, video, image}
 
   private def cos(a: Array[Double], b: Array[Double]): Double = {
     var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
@@ -31,13 +31,13 @@ class MediaIncrementalFamilySpec extends SharedSparkSpec {
   private def round4(x: Double): Double =
     BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  private def collectEmb(t: graft.Tables, m: IngestModality): Array[(Long, Array[Double])] =
-    m.embeddings(t).as[(Long, Seq[Float])].collect()
+  private def collectEmb(t: graft.Tables, m: Modality): Array[(Long, Array[Double])] =
+    MultimodalQueries.embeddingsOf(t, m).as[(Long, Seq[Float])].collect()
       .map { case (id, v) => (id, v.map(_.toDouble).toArray) }
       .sortBy(_._1)
 
   /** Single-node mirror of the nightly rejection rule for one modality. */
-  private def localRejected(t: graft.Tables, m: IngestModality): Set[Long] = {
+  private def localRejected(t: graft.Tables, m: Modality): Set[Long] = {
     import graft.functions.KMeansTrainer
     val km = MultimodalQueries.incrementalModelOf(t, m)
     val emb = collectEmb(t, m)
@@ -61,7 +61,7 @@ class MediaIncrementalFamilySpec extends SharedSparkSpec {
     }.toSet
   }
 
-  private def engineRejected(t: graft.Tables, m: IngestModality): Set[Long] =
+  private def engineRejected(t: graft.Tables, m: Modality): Set[Long] =
     MultimodalQueries.incrementalDroppedOf(t, m)
       .select("doc_id").collect().map(_.getLong(0)).toSet
 
@@ -86,9 +86,9 @@ class MediaIncrementalFamilySpec extends SharedSparkSpec {
       .write.parquet(s"$dir/documents.parquet")
     val t = new graft.Tables(spark, dir)
 
-    val rej = Seq(imageIngest, audioIngest, videoIngest)
+    val rej = Seq(image, audio, video)
       .map(m => m.tag -> engineRejected(t, m)).toMap
-    for (m <- Seq(imageIngest, audioIngest, videoIngest))
+    for (m <- Seq(image, audio, video))
       assert(rej(m.tag) == localRejected(t, m),
         s"${m.tag}: engine=${rej(m.tag)} local=${localRejected(t, m)}")
 
@@ -108,8 +108,8 @@ class MediaIncrementalFamilySpec extends SharedSparkSpec {
 
   test("q225/q226: real sf0.001 — parity, accounting, decode-once, no cartesian") {
     val t = graft.Tables.forPath(spark, sf001)
-    for ((q, m) <- Seq((MultimodalQueries.q225, audioIngest),
-                       (MultimodalQueries.q226, videoIngest))) {
+    for ((q, m) <- Seq((MultimodalQueries.q225, audio),
+                       (MultimodalQueries.q226, video))) {
       val audit = q.run(spark, sf001)
       val plan = audit.queryExecution.executedPlan.toString
       assert(!plan.contains("CartesianProduct"), s"${q.name}: cartesian in plan")
@@ -141,9 +141,9 @@ class MediaIncrementalFamilySpec extends SharedSparkSpec {
     val t = graft.Tables.forPath(spark, sf001)
     def auditRows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    for ((q, m) <- Seq((MultimodalQueries.q221, imageIngest),
-                       (MultimodalQueries.q225, audioIngest),
-                       (MultimodalQueries.q226, videoIngest))) {
+    for ((q, m) <- Seq((MultimodalQueries.q221, image),
+                       (MultimodalQueries.q225, audio),
+                       (MultimodalQueries.q226, video))) {
       val live = auditRows(q.run(spark, sf001))
       val served = MultimodalQueries.ingestAuditServed(t, m)
       assert(auditRows(served) == live, s"${q.name}: served != live")

@@ -28,7 +28,7 @@ class MediaIncrementalSpec extends SharedSparkSpec {
     BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   private def collectEmb(t: graft.Tables): Array[(Long, Array[Double])] =
-    MultimodalQueries.mediaPixelEmbeddings(t)
+    MultimodalQueries.embeddingsOf(t, MultimodalQueries.image)
       .as[(Long, Seq[Float])].collect()
       .map { case (id, v) => (id, v.map(_.toDouble).toArray) }
       .sortBy(_._1)
@@ -36,7 +36,7 @@ class MediaIncrementalSpec extends SharedSparkSpec {
   /** Single-node mirror of q221's rejection rule. */
   private def localRejected(t: graft.Tables): Set[Long] = {
     import graft.functions.KMeansTrainer
-    val km = MultimodalQueries.mediaIncrementalModel(t)
+    val km = MultimodalQueries.incrementalModelOf(t, MultimodalQueries.image)
     val emb = collectEmb(t)
     val sigOf = emb.map { case (id, v) => id -> MultimodalQueries.mediaSignLocal(v) }.toMap
     val bucketOf = emb.map { case (id, v) => id -> KMeansTrainer.assignLocal(v, km) }.toMap
@@ -77,7 +77,7 @@ class MediaIncrementalSpec extends SharedSparkSpec {
     val t = new graft.Tables(spark, dir)
 
     val expect = localRejected(t)
-    val engine = MultimodalQueries.mediaIncrementalDropped(t)
+    val engine = MultimodalQueries.incrementalDroppedOf(t, MultimodalQueries.image)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(engine == expect, s"engine=$engine local=$expect")
     assert(Set(70L, 140L).subsetOf(engine), s"planted dups not rejected: $engine")
@@ -96,7 +96,7 @@ class MediaIncrementalSpec extends SharedSparkSpec {
     assert(textScans == 0,
       s"q221 plan re-decodes raw text $textScans time(s); the batch must come from the checkpoint")
 
-    val engine = MultimodalQueries.mediaIncrementalDropped(t)
+    val engine = MultimodalQueries.incrementalDroppedOf(t, MultimodalQueries.image)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     val expect = localRejected(t)
     assert(engine == expect, s"sf0.001 parity: engine=$engine local=$expect")

@@ -16,26 +16,26 @@ class MediaIngestReuseSpec extends SharedSparkSpec {
 
   test("live q221 with a fresh at-rest ledger: zero corpus decode, audit equality") {
     val t = new graft.Tables(spark, sf001)
-    dropStorePackArtifacts(t, imageIngest)
+    dropStorePackArtifacts(t, image)
     try {
       // Live baseline with NO standing table: the full session build.
       val live = q221.run(spark, sf001).collect().toSeq
       // Materialize + stamp the at-rest ledger, then evict every ingest
       // session memo so the next run chooses its source fresh.
-      storePackTableOf(t, imageIngest)
-      dropIngestSession(t, imageIngest)
-      assert(!imageIngest.corpusDecoded(t), "eviction failed")
+      storePackTableOf(t, image)
+      dropIngestSession(t, image)
+      assert(!graft.Artifacts.built(t, s"${image.tag}emb"), "eviction failed")
       val reused = q221.run(spark, sf001).collect().toSeq
       assert(reused == live, "ledger-reusing live run diverged from the live audit")
       // The store side came from rest: the corpus-scale decode checkpoint
       // was never (re)built — the only decode this run paid is the batch
       // delta, which is fresh by nature.
-      assert(!imageIngest.corpusDecoded(t),
+      assert(!graft.Artifacts.built(t, s"${image.tag}emb"),
         "a live run with a fresh at-rest ledger must not decode the corpus")
       // And it really is storage-backed: the table is registered here.
       val width = spark.sessionState.conf.numShufflePartitions
       assert(spark.catalog.tableExists(
-        layoutName(s"${imageIngest.tag}storepack", t.dir, width)))
-    } finally dropStorePackArtifacts(t, imageIngest)
+        layoutName(s"${image.tag}storepack", t.dir, width)))
+    } finally dropStorePackArtifacts(t, image)
   }
 }

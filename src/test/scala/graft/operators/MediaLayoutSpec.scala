@@ -26,10 +26,10 @@ class MediaLayoutSpec extends SharedSparkSpec {
 
   test("video near-dup served from its at-rest index equals the live form") {
     val t = new graft.Tables(spark, sf001)
-    val idx = spark.table(MultimodalQueries.videoNearDupIndexTable(t))
+    val idx = spark.table(MultimodalQueries.nearDupIndexTableOf(t, MultimodalQueries.video))
     val live = MultimodalQueries.q223.run(spark, sf001)
     val served = MultimodalQueries.nearDupAuditServed(
-      MultimodalQueries.videoFrameEmbeddings(t), idx)
+      MultimodalQueries.embeddingsOf(t, MultimodalQueries.video), idx)
     assert(rows(served) == rows(live))
   }
 
@@ -37,7 +37,7 @@ class MediaLayoutSpec extends SharedSparkSpec {
     // Under the broadcast threshold the planner would broadcast (equally
     // shuffle-free); pin the 100 TB shape — an index too big to broadcast.
     val t = new graft.Tables(spark, sf001)
-    val idx = spark.table(MultimodalQueries.mediaNearDupIndexTable(t))
+    val idx = spark.table(MultimodalQueries.nearDupIndexTableOf(t, MultimodalQueries.image))
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.get(key)
     try {
@@ -53,8 +53,8 @@ class MediaLayoutSpec extends SharedSparkSpec {
 
   test("media index layout builds once per (session, dir)") {
     val t = new graft.Tables(spark, sf001)
-    assert(MultimodalQueries.mediaNearDupIndexTable(t)
-      == MultimodalQueries.mediaNearDupIndexTable(t))
+    assert(MultimodalQueries.nearDupIndexTableOf(t, MultimodalQueries.image)
+      == MultimodalQueries.nearDupIndexTableOf(t, MultimodalQueries.image))
   }
 
   test("the served plan reads the layout, never documents text") {
@@ -72,8 +72,7 @@ class MediaLayoutSpec extends SharedSparkSpec {
       l.contains("FileScan parquet") && l.contains("documents.parquet"))
     assert(textScans == 0, s"served layout plan scans documents:\n${plan.take(1500)}")
     assert(plan.contains("Bucketed: true"), "audit side must read the bucketed layout")
-    val embTbl = MultimodalQueries.embTableOf(
-      t, "imgemb", MultimodalQueries.mediaPixelEmbeddings(t))
+    val embTbl = MultimodalQueries.embTableOf(t, MultimodalQueries.image)
     val embPlan = spark.table(embTbl).queryExecution.executedPlan.toString
     assert(embPlan.contains("graft_imgemb"),
       "verify fetch must read the at-rest embedding table")

@@ -33,19 +33,19 @@ class MediaLedgerFoldSpec extends SharedSparkSpec {
 
   test("single-bucket fold: row-for-row merge, untouched files byte-identical") {
     val tt = t
-    dropStorePackArtifacts(tt, imageIngest)
+    dropStorePackArtifacts(tt, image)
     try {
-      val tbl = storePackTableOf(tt, imageIngest)
+      val tbl = storePackTableOf(tt, image)
       val before = spark.table(tbl).inputFiles.map(f => f -> md5(f)).toMap
       // Admit the batch docs of ONE coarse bucket (the busiest), so some
       // hash files are provably untouched (width 4 in the test session).
-      val batchFlat = batchFlatOf(tt, imageIngest)
+      val batchFlat = batchFlatOf(tt, image)
       val oneBucket = batchFlat.groupBy("bucket").count()
         .orderBy(col("count").desc, col("bucket")).limit(1).select("bucket")
       val admitted = batchFlat
         .join(oneBucket, Seq("bucket"), "left_semi").select("doc_id")
       assert(admitted.count() > 0, "degenerate fixture: empty bucket")
-      val stats = foldAdmittedIntoStorePack(tt, imageIngest, admitted)
+      val stats = foldAdmittedIntoStorePack(tt, image, admitted)
       assert(stats.touchedHashFiles == 1,
         s"one coarse bucket lives in one hash file, got $stats")
       assert(stats.keptFiles > 0, s"no untouched files to pin: $stats")
@@ -56,20 +56,20 @@ class MediaLedgerFoldSpec extends SharedSparkSpec {
       keptNow.foreach(f => assert(md5(f) == before(f), s"rewritten kept file $f"))
       // (1) folded table == from-scratch pack of store ∪ admitted.
       val expect = packIngest(
-        storeFlatOf(tt, imageIngest).unionByName(
+        storeFlatOf(tt, image).unionByName(
           batchFlat.join(oneBucket, Seq("bucket"), "left_semi")
             .select("doc_id", "bucket", "sig", "embedding")))
       assert(packedRows(spark.table(tbl)) == packedRows(expect))
-    } finally dropStorePackArtifacts(t, imageIngest)
+    } finally dropStorePackArtifacts(t, image)
   }
 
   test("two-night cycle: night-two decisions == rebuilt-store run") {
     val tt = t
-    dropStorePackArtifacts(tt, imageIngest)
+    dropStorePackArtifacts(tt, image)
     try {
       val width = spark.sessionState.conf.numShufflePartitions
-      val tbl = storePackTableOf(tt, imageIngest)
-      val batchFlat = batchFlatOf(tt, imageIngest)
+      val tbl = storePackTableOf(tt, image)
+      val batchFlat = batchFlatOf(tt, image)
       val night1 = batchFlat.filter(col("doc_id") % 20 === 0)
       val night2 = batchFlat.filter(col("doc_id") % 20 === 10)
       assert(night1.count() > 0 && night2.count() > 0)
@@ -79,10 +79,10 @@ class MediaLedgerFoldSpec extends SharedSparkSpec {
         night1.repartition(width, col("bucket")), spark.table(tbl))
       val admitted1 = night1.select("doc_id")
         .join(rej1, Seq("doc_id"), "left_anti").localCheckpoint()
-      val stats = foldAdmittedIntoStorePack(tt, imageIngest, admitted1)
+      val stats = foldAdmittedIntoStorePack(tt, image, admitted1)
       assert(stats.touchedHashFiles > 0)
       // (1) again on the full fold: folded == from-scratch pack.
-      val storePlus = storeFlatOf(tt, imageIngest)
+      val storePlus = storeFlatOf(tt, image)
         .unionByName(night1.join(admitted1, Seq("doc_id"), "left_semi"))
         .localCheckpoint()
       assert(packedRows(spark.table(tbl)) == packedRows(packIngest(storePlus)))
@@ -98,6 +98,6 @@ class MediaLedgerFoldSpec extends SharedSparkSpec {
       // doc that near-dups a night-two doc, the maintained table rejects
       // it; at minimum the decision sets agree and the audit is non-empty.
       assert(night2.count() > viaMaintained.size || viaMaintained.nonEmpty)
-    } finally dropStorePackArtifacts(t, imageIngest)
+    } finally dropStorePackArtifacts(t, image)
   }
 }

@@ -29,7 +29,7 @@ class MediaNearDupSpec extends SharedSparkSpec {
     BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   private def collectEmb(t: graft.Tables): Array[(Long, Array[Double])] =
-    MultimodalQueries.mediaPixelEmbeddings(t)
+    MultimodalQueries.embeddingsOf(t, MultimodalQueries.image)
       .as[(Long, Seq[Float])].collect()
       .map { case (id, v) => (id, v.map(_.toDouble).toArray) }
       .sortBy(_._1)
@@ -37,7 +37,7 @@ class MediaNearDupSpec extends SharedSparkSpec {
   /** Single-node reference of q218's rule: trained-block the vectors, drop
     * every member with a lower-id block-mate at exact cosine ≥ T. */
   private def localDropped(t: graft.Tables): Set[Long] = {
-    val km = MultimodalQueries.mediaNearDupModel(t)
+    val km = MultimodalQueries.nearDupModelOf(t, MultimodalQueries.image)
     val T = MultimodalQueries.MediaNearDupT
     collectEmb(t).groupBy { case (_, v) =>
       graft.functions.KMeansTrainer.assignLocal(v, km)
@@ -71,7 +71,7 @@ class MediaNearDupSpec extends SharedSparkSpec {
     val t = new graft.Tables(spark, dir)
 
     val expect = localDropped(t)
-    val engine = MultimodalQueries.mediaNearDupDropped(t)
+    val engine = MultimodalQueries.nearDupDroppedOf(t, MultimodalQueries.image)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(engine == expect, s"engine=$engine local=$expect")
     // The planted groups must actually drop their non-minimal members
@@ -83,7 +83,7 @@ class MediaNearDupSpec extends SharedSparkSpec {
 
     // Sign-sketch prefilter admissibility on this corpus: every true
     // within-block pair's signature Hamming distance is inside the slack.
-    val km = MultimodalQueries.mediaNearDupModel(t)
+    val km = MultimodalQueries.nearDupModelOf(t, MultimodalQueries.image)
     val emb = collectEmb(t)
     val byBlock = emb.groupBy { case (_, v) =>
       graft.functions.KMeansTrainer.assignLocal(v, km)
@@ -109,7 +109,7 @@ class MediaNearDupSpec extends SharedSparkSpec {
     // the rule's own scope — is admitted at both gate SFs.
     for (sf <- Seq(sf001, sf001.replace("sf0.001", "sf0.01"))) {
       val t = graft.Tables.forPath(spark, sf)
-      val km = MultimodalQueries.mediaNearDupModel(t)
+      val km = MultimodalQueries.nearDupModelOf(t, MultimodalQueries.image)
       val byBlock = collectEmb(t).groupBy { case (_, v) =>
         graft.functions.KMeansTrainer.assignLocal(v, km)
       }
@@ -147,7 +147,7 @@ class MediaNearDupSpec extends SharedSparkSpec {
       "bucket sizes must partition the media corpus")
     assert(rows.map(_._3).sum == localDropped(t).size.toLong,
       "audit drop counts must sum to the dropped set")
-    val engine = MultimodalQueries.mediaNearDupDropped(t)
+    val engine = MultimodalQueries.nearDupDroppedOf(t, MultimodalQueries.image)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(engine == localDropped(t), "sf0.001 parity vs local reference")
   }

@@ -4,7 +4,7 @@ import graft.SharedSparkSpec
 import org.apache.spark.sql.functions._
 
 /** The load-bearing claim behind q222 sharing q221's audit: folding
-  * [[MultimodalQueries.mediaIngestStep]] over id-ordered slices of the
+  * [[MultimodalQueries.ingestStepOf]] over id-ordered slices of the
   * batch — ledger appended with every PROCESSED member after each slice —
   * produces a rejected set INDEPENDENT of how the batch is sliced
   * (1 slice ≡ q221's one-shot rule, k slices ≡ the continuous form).
@@ -44,16 +44,17 @@ class MediaStepProps extends SharedSparkSpec {
   private def rejectedWith(t: graft.Tables, slices: Int): Set[Long] = {
     val batchIds = t.documents.filter(col("doc_id") % 10 === 0)
       .select("doc_id").collect().map(_.getLong(0)).sorted
-    val store = MultimodalQueries.mediaStoreIndex(t)
+    val store = MultimodalQueries.storeIndexOf(t, MultimodalQueries.image)
     var batchLedger = store.limit(0).localCheckpoint()
     val out = scala.collection.mutable.Set.empty[Long]
     val chunks = batchIds
       .grouped(math.max(1, math.ceil(batchIds.length.toDouble / slices).toInt)).toSeq
     for (chunk <- chunks) {
       val slice = MultimodalQueries
-        .batchAssigned(t, Some(chunk.toSeq.toDF("doc_id"))).localCheckpoint()
+        .batchAssignedOf(t, MultimodalQueries.image, Some(chunk.toSeq.toDF("doc_id")))
+        .localCheckpoint()
       out ++= MultimodalQueries
-        .mediaIngestStep(t, store.unionByName(batchLedger), slice)
+        .ingestStepOf(t, MultimodalQueries.image, store.unionByName(batchLedger), slice)
         .collect().map(_.getLong(0))
       batchLedger = batchLedger.unionByName(slice).localCheckpoint()
     }
@@ -66,7 +67,7 @@ class MediaStepProps extends SharedSparkSpec {
       buildCorpus(seed).toDF("doc_id", "source", "text")
         .write.parquet(s"$dir/documents.parquet")
       val t = new graft.Tables(spark, dir)
-      val oneShot = MultimodalQueries.mediaIncrementalDropped(t)
+      val oneShot = MultimodalQueries.incrementalDroppedOf(t, MultimodalQueries.image)
         .collect().map(_.getLong(0)).toSet
       for (slices <- Seq(1, 2, 3, 5)) {
         val rej = rejectedWith(t, slices)
@@ -82,10 +83,10 @@ class MediaStepProps extends SharedSparkSpec {
     buildCorpus(3L).toDF("doc_id", "source", "text")
       .write.parquet(s"$dir/documents.parquet")
     val t = new graft.Tables(spark, dir)
-    val ledger = MultimodalQueries.mediaStoreIndex(t)
+    val ledger = MultimodalQueries.storeIndexOf(t, MultimodalQueries.image)
     val empty = MultimodalQueries
-      .batchAssigned(t, Some(Seq.empty[Long].toDF("doc_id")))
-    assert(MultimodalQueries.mediaIngestStep(t, ledger, empty).count() == 0L,
+      .batchAssignedOf(t, MultimodalQueries.image, Some(Seq.empty[Long].toDF("doc_id")))
+    assert(MultimodalQueries.ingestStepOf(t, MultimodalQueries.image, ledger, empty).count() == 0L,
       "an empty slice must reject nothing")
   }
 }

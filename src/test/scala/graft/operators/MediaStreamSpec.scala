@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.Trigger
 
 /** q222's contract driven by REAL structured streaming: the media batch
   * arrives as three id-ordered staged files, a foreachBatch sink runs each
-  * micro-batch through the SAME [[MultimodalQueries.mediaIngestStep]] the
+  * micro-batch through the SAME [[MultimodalQueries.ingestStepOf]] the
   * engine uses (frozen store index + sequentially maintained ledger), and
   * the accumulated rejected set must equal q221's one-shot batch decision
   * — stream ≡ continuous ≡ nightly. Also pins q222 ≡ q221 row-for-row
@@ -33,7 +33,7 @@ class MediaStreamSpec extends SharedSparkSpec {
     }
     // Frozen store + delta-side ledger accumulator (q222's shape: only
     // slice-scale frames re-checkpoint per micro-batch).
-    val store = MultimodalQueries.mediaStoreIndex(t)
+    val store = MultimodalQueries.storeIndexOf(t, MultimodalQueries.image)
     var batchLedger = store.limit(0).localCheckpoint()
     val rejected = scala.collection.mutable.Set.empty[Long]
     var processed = 0L
@@ -44,9 +44,10 @@ class MediaStreamSpec extends SharedSparkSpec {
       .writeStream
       .foreachBatch { (mb: org.apache.spark.sql.DataFrame, _: Long) =>
         val sliceIds = mb.select("doc_id").localCheckpoint()
-        val slice = MultimodalQueries.batchAssigned(t, Some(sliceIds)).localCheckpoint()
+        val slice = MultimodalQueries.batchAssignedOf(t, MultimodalQueries.image, Some(sliceIds))
+          .localCheckpoint()
         rejected ++= MultimodalQueries
-          .mediaIngestStep(t, store.unionByName(batchLedger), slice)
+          .ingestStepOf(t, MultimodalQueries.image, store.unionByName(batchLedger), slice)
           .collect().map(_.getLong(0))
         batchLedger = batchLedger.unionByName(slice).localCheckpoint()
         processed += slice.count()
@@ -57,7 +58,7 @@ class MediaStreamSpec extends SharedSparkSpec {
     assert(q.awaitTermination(180000), "stream did not finish within 180 s")
 
     // The stream's accumulated rejections equal the nightly one-shot rule...
-    val nightly = MultimodalQueries.mediaIncrementalDropped(t)
+    val nightly = MultimodalQueries.incrementalDroppedOf(t, MultimodalQueries.image)
       .collect().map(_.getLong(0)).toSet
     assert(rejected.toSet == nightly, s"stream=$rejected nightly=$nightly")
     assert(processed == t.documents.filter(col("doc_id") % 10 === 0).count(),

@@ -31,7 +31,7 @@ class VideoNearDupSpec extends SharedSparkSpec {
     BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   private def collectEmb(t: graft.Tables): Array[(Long, Array[Double])] =
-    MultimodalQueries.videoFrameEmbeddings(t)
+    MultimodalQueries.embeddingsOf(t, MultimodalQueries.video)
       .as[(Long, Seq[Float])].collect()
       .map { case (id, v) => (id, v.map(_.toDouble).toArray) }
       .sortBy(_._1)
@@ -39,7 +39,7 @@ class VideoNearDupSpec extends SharedSparkSpec {
   /** Single-node reference of q223's rule: trained-block the vectors, drop
     * every member with a lower-id block-mate at exact cosine ≥ T. */
   private def localDropped(t: graft.Tables): Set[Long] = {
-    val km = MultimodalQueries.videoNearDupModel(t)
+    val km = MultimodalQueries.nearDupModelOf(t, MultimodalQueries.video)
     val T = MultimodalQueries.MediaNearDupT
     collectEmb(t).groupBy { case (_, v) =>
       graft.functions.KMeansTrainer.assignLocal(v, km)
@@ -76,7 +76,7 @@ class VideoNearDupSpec extends SharedSparkSpec {
     val t = new graft.Tables(spark, dir)
 
     val expect = localDropped(t)
-    val engine = MultimodalQueries.videoNearDupDropped(t)
+    val engine = MultimodalQueries.nearDupDroppedOf(t, MultimodalQueries.video)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(engine == expect, s"engine=$engine local=$expect")
     assert(Set(102L, 111L).subsetOf(engine),
@@ -95,13 +95,13 @@ class VideoNearDupSpec extends SharedSparkSpec {
       "an image-span dup stays a video near-dup (the video window nests the image window)")
     // ...and the video-span pair (288) is NOT an audio dup: the audio
     // payload reads to byte 512 where the tails differ.
-    val aud = MultimodalQueries.audioNearDupDropped(t)
+    val aud = MultimodalQueries.nearDupDroppedOf(t, MultimodalQueries.audio)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(!aud.contains(102L),
       "a 288-byte-prefix (video-span) dup must not drop on the audio side")
 
     // Sign-sketch prefilter admissibility on the fixture.
-    val km = MultimodalQueries.videoNearDupModel(t)
+    val km = MultimodalQueries.nearDupModelOf(t, MultimodalQueries.video)
     val emb = collectEmb(t)
     val byBlock = emb.groupBy { case (_, v) =>
       graft.functions.KMeansTrainer.assignLocal(v, km)
@@ -134,7 +134,7 @@ class VideoNearDupSpec extends SharedSparkSpec {
       "bucket sizes must partition the video corpus")
     assert(rows.map(_._3).sum == localDropped(t).size.toLong,
       "audit drop counts must sum to the dropped set")
-    val engine = MultimodalQueries.videoNearDupDropped(t)
+    val engine = MultimodalQueries.nearDupDroppedOf(t, MultimodalQueries.video)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(engine == localDropped(t), "sf0.001 parity vs local reference")
   }
@@ -147,7 +147,7 @@ class VideoNearDupSpec extends SharedSparkSpec {
     def auditRows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
     val live = auditRows(MultimodalQueries.q223.run(spark, sf001))
-    val served = MultimodalQueries.videoNearDupServed(t)
+    val served = MultimodalQueries.nearDupServedOf(t, MultimodalQueries.video)
     assert(auditRows(served) == live)
     assert(live.nonEmpty)
     val plan = served.queryExecution.executedPlan.toString
@@ -155,8 +155,7 @@ class VideoNearDupSpec extends SharedSparkSpec {
       l.contains("FileScan parquet") && l.contains("documents.parquet"))
     assert(textScans == 0, s"served q223 plan scans documents:\n${plan.take(1500)}")
     assert(plan.contains("Bucketed: true"), "audit side must read the bucketed layout")
-    val embTbl = MultimodalQueries.embTableOf(
-      t, "videmb", MultimodalQueries.videoFrameEmbeddings(t))
+    val embTbl = MultimodalQueries.embTableOf(t, MultimodalQueries.video)
     assert(spark.sql(s"DESCRIBE EXTENDED $embTbl").collect()
       .exists(r => r.getString(0).contains("Num Buckets")),
       "video embedding table must be bucketed")

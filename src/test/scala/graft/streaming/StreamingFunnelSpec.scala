@@ -29,8 +29,9 @@ class StreamingFunnelSpec extends SharedSparkSpec {
       .outputMode("update")
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(120000)
+    val ended = q.awaitTermination(120000)
     q.stop()
+    assert(ended, "the AvailableNow stream must end once it has read every file")
 
     // update mode re-emits a user's snapshot each batch it appears in:
     // reduce to the FINAL stage per user (stages are monotone)
