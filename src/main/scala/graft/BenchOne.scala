@@ -28,7 +28,7 @@ import org.apache.spark.sql.execution.FormattedMode
   */
 object BenchOne {
   /** One timed run, in seconds. A `rows:` stream has no plan of its own:
-    * its phases and compiles stay 0. */
+    * its phases and compiles stay 0; its jobs are counted. */
   final case class Run(name: String, run: Int, secs: Double, rows: Long,
       construct: Double = 0, optimize: Double = 0, physical: Double = 0,
       execute: Double = 0, compiles: Long = 0, jobs: Long = 0) {
@@ -36,7 +36,7 @@ object BenchOne {
     // tools/sweep parse.
     def line: String =
       if (name.startsWith("rows:"))
-        f"$name run$run: $secs%.2fs ($rows rows, ${rows / secs}%.0f rows/s)"
+        f"$name run$run: $secs%.2fs ($rows rows, ${rows / secs}%.0f rows/s, $jobs jobs)"
       else
         f"$name run$run: $secs%.2fs ($rows rows, $compiles codegen compiles, $jobs jobs; " +
           f"construct=$construct%.2f optimize=$optimize%.2f physical=$physical%.2f " +
@@ -95,13 +95,18 @@ object BenchOne {
         (1 to n).iterator.map(i => timeQuery(spark, name, i, fn(spark, sfDir)))
     }
 
+  /** One run of a row stream, with the jobs it started (one per partition
+    * of the projection's plan). */
   private def timeRows(spark: SparkSession, name: String, i: Int,
       path: String, cols: Seq[String]): Run = {
-    val t0 = System.nanoTime()
-    val it = ParquetRowReader.fromPath(spark, path).getRows(cols)
-    var rows = 0L
-    while (it.hasNext) { it.next(); rows += 1 }
-    Run(name, i, (System.nanoTime() - t0) / 1e9, rows)
+    val (run, jobs) = JobCounter(spark.sparkContext) {
+      val t0 = System.nanoTime()
+      val it = ParquetRowReader.fromPath(spark, path).getRows(cols)
+      var rows = 0L
+      while (it.hasNext) { it.next(); rows += 1 }
+      Run(name, i, (System.nanoTime() - t0) / 1e9, rows)
+    }
+    run.copy(jobs = jobs)
   }
 
   /** One run of a query: build it, plan the `groupBy().count()` that

@@ -41,7 +41,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
   * or infinite still gets the lowest ids in scan order, as the local twins
   * do. Returns min(nprobe, reachable fine cells) entries. Parity twins:
   * [[KMeansTrainer.assignLocal]] (flat, nprobe = 1) and
-  * [[KMeansTrainer.probeLocal2]] (TwoLevelNearestCentroidsSpec pins
+  * [[KMeansTrainer.probeLocal2]] (NearestCentroidsSpec pins
   * interpreted == codegen == local for both model shapes). */
 case class NearestCentroids(
     child: Expression,

@@ -1,11 +1,19 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+
+import org.apache.spark.SimpleFutureAction
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{SpecializedGetters, UnsafeRow}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
-import scala.collection.MapFactory
+import scala.collection.{mutable, MapFactory}
 import scala.collection.immutable.{AbstractMap, VectorMap}
-import scala.jdk.CollectionConverters._
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
 
 /** Row-streaming parity module: the faithful — and corrected — port of the
   * reference's public API (SURVEY.md §7.2 phase 4).
@@ -22,6 +30,7 @@ import scala.jdk.CollectionConverters._
   *  - `get_rows_with_args(**kwargs)` expert knobs (reader.py:47-49):
   *    batch_size ↔ spark.sql.parquet.columnarReaderBatchSize,
   *    fragment_readahead ↔ spark.sql.files.openCostInBytes/maxPartitionNum,
+  *    batch_readahead ↔ the stream's partition readahead,
   *    use_threads ↔ master threads. [[ParquetRowReader.tuned]] scopes them
   *    per reader (child session), matching the reference's per-call scoping.
   *
@@ -34,33 +43,46 @@ import scala.jdk.CollectionConverters._
   * projection that names a column twice keeps one key holding the last
   * occurrence's value. Nested structs lower to such maps, arrays to `List`,
   * map columns to `Map` — the analogue of Arrow's `.as_py()` lowering
-  * (reader.py:64). The pivot is planned once per stream from the
-  * projection's schema: every row of the stream shares its column names
-  * and name→position index.
+  * (reader.py:64) — and every other value to the external type the
+  * session's `Row` encoder gives it. The pivot reads the executed plan's
+  * `InternalRow`s and is planned once per stream from the projection's
+  * schema: every row of the stream shares its column names and
+  * name→position index.
   *
-  * Memory contract: `getRows` streams via `toLocalIterator()` — one
-  * partition resident in the driver at a time, the direct analogue of the
-  * reference's one-batch-resident generator contract (README.md:47-55).
-  * At cluster scale, prefer [[foreachRows]] (distributed consumption) over
-  * driver-side iteration.
+  * Memory contract: `getRows` runs one job per partition of the
+  * projection's executed plan. Each job ships its partition's rows to the
+  * driver as compressed `UnsafeRow` bytes, and the stream yields the
+  * partitions strictly in order. While partition k is read, the jobs of at
+  * most `readahead` later partitions run, so at most `1 + readahead`
+  * partitions' encoded rows are resident in the driver — the analogue of
+  * the reference's bounded generator with `batch_readahead`
+  * (README.md:47-55, reader.py:95). `RowStreamContractSpec` pins the bound,
+  * the order and the failure path. At cluster scale, prefer [[foreachRows]]
+  * (distributed consumption) over driver-side iteration.
   */
-final class ParquetRowReader private (val df: DataFrame) {
+final class ParquetRowReader private (val df: DataFrame, readahead: Int) {
+  require(readahead >= 0, s"readahead must be >= 0, got $readahead")
+
+  private def project(columns: Seq[String]): DataFrame =
+    if (columns.isEmpty) df else df.select(columns.map(col): _*)
 
   /** All columns, lazily, one row-map at a time. */
   def getRows(): Iterator[Map[String, Any]] = getRows(Nil)
 
   /** Projected columns (pushed down to the parquet scan), lazily. */
   def getRows(columns: Seq[String]): Iterator[Map[String, Any]] = {
-    val proj = if (columns.isEmpty) df else df.select(columns.map(col): _*)
-    proj.toLocalIterator().asScala.map(new ParquetRowReader.RowPivot(proj.schema))
+    val proj = project(columns)
+    val pivot = ParquetRowReader.RowPivot(proj)
+    val rows = ParquetRowReader.withRows(proj, "getRows")(identity)
+    new ParquetRowReader.PartitionStream(rows, proj.schema.length, readahead).map(pivot)
   }
 
   /** Distributed consumption: run `f` over row-maps on the executors —
     * the 100 TB-scale replacement for driver-side iteration. */
   def foreachRows(columns: Seq[String])(f: Map[String, Any] => Unit): Unit = {
-    val proj = if (columns.isEmpty) df else df.select(columns.map(col): _*)
-    val pivot = new ParquetRowReader.RowPivot(proj.schema)
-    proj.foreachPartition { (it: Iterator[Row]) => it.map(pivot).foreach(f) }
+    val proj = project(columns)
+    val pivot = ParquetRowReader.RowPivot(proj)
+    ParquetRowReader.withRows(proj, "foreachRows")(_.foreachPartition(_.map(pivot).foreach(f)))
   }
 }
 
@@ -78,8 +100,10 @@ object ParquetRowReader {
     *    packs more fragments per task (more effective readahead), a higher
     *    one spreads them across tasks
     *  - `maxPartitionNum` bounds the total split count (the global
-    *    fragment-parallelism ceiling); `batch_readahead` itself has no
-    *    analogue — Spark pipelines batches inside whole-stage codegen
+    *    fragment-parallelism ceiling)
+    *  - `readahead` ↔ `batch_readahead` (reader.py:95): how many partitions
+    *    past the one being read `getRows` fetches meanwhile; 0 runs one
+    *    partition's job at a time
     *  - `use_threads=False` ↔ `master("local[1]")` — a session-level choice
     */
   final case class ScanTuning(
@@ -87,7 +111,8 @@ object ParquetRowReader {
       maxPartitionBytes: String = "128m",
       ignoreCorruptFiles: Boolean = false,
       openCostInBytes: Option[String] = None,
-      maxPartitionNum: Option[Int] = None)
+      maxPartitionNum: Option[Int] = None,
+      readahead: Int = 1)
 
   /** Build a reader with `tuning` scoped to THAT READER ONLY (A5 parity).
     * The reference scopes knobs per `get_rows_with_args` call; a shared
@@ -103,70 +128,190 @@ object ParquetRowReader {
     scoped.conf.set("spark.sql.files.ignoreCorruptFiles", tuning.ignoreCorruptFiles.toString)
     tuning.openCostInBytes.foreach(scoped.conf.set("spark.sql.files.openCostInBytes", _))
     tuning.maxPartitionNum.foreach(n => scoped.conf.set("spark.sql.files.maxPartitionNum", n.toString))
-    fromPath(scoped, path: _*)
+    new ParquetRowReader(scoped.read.parquet(path: _*), tuning.readahead)
   }
 
   /** Reference `from_path`: file, directory, or list — one logical table. */
   def fromPath(spark: SparkSession, path: String*): ParquetRowReader =
-    new ParquetRowReader(spark.read.parquet(path: _*))
+    fromDataFrame(spark.read.parquet(path: _*))
 
   /** Reference `from_dataset` with an imposed schema + tolerance options
     * (reference tests:392-398: explicit schema, exclude_invalid_files;
     * hidden "."/"_" files are skipped by Spark natively). */
   def fromPath(spark: SparkSession, path: String, schema: StructType): ParquetRowReader =
-    new ParquetRowReader(
+    fromDataFrame(
       spark.read.schema(schema)
         .option("ignoreCorruptFiles", "true")
         .parquet(path))
 
   /** Reference `ParquetReader(dataset)`: wrap a caller-built source. */
-  def fromDataFrame(df: DataFrame): ParquetRowReader = new ParquetRowReader(df)
+  def fromDataFrame(df: DataFrame, readahead: Int = ScanTuning().readahead): ParquetRowReader =
+    new ParquetRowReader(df, readahead)
 
-  /** The columnar→row pivot of one schema, planned once per stream: the
-    * distinct column names in order, the position each name reads (the last
-    * field of that name, as a dict assigned in field order keeps), and for
-    * each one the lowering its type needs — struct → row map (through the
-    * struct's own pivot), array → `List`, map → `Map`; every other type
-    * passes through as the `Row` holds it. */
-  private[sources] final class RowPivot(schema: StructType)
-      extends (Row => Map[String, Any]) with Serializable {
+  /** Plans `proj` under a new SQL execution named `name` (so a
+    * `QueryExecutionListener` sees one execution per stream, as for any
+    * Dataset action) and hands `use` the rows of its executed plan. */
+  private def withRows[T](proj: DataFrame, name: String)(use: RDD[InternalRow] => T): T = {
+    val qe = proj.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some(name)) {
+      qe.executedPlan.resetMetrics()
+      use(qe.executedPlan.execute())
+    }
+  }
+
+  /** The rows of `rdd`, one job per partition and partitions strictly in
+    * order. Each job encodes its partition as `SparkPlan.executeToIterator`
+    * does (size-prefixed `UnsafeRow` bytes, compressed with Spark's block
+    * codec); the stream decodes them lazily. The job of the partition being
+    * read and of at most `readahead` later ones are started, no others. A
+    * failed job raises when its partition is reached, after every job still
+    * in flight has been cancelled and has ended. */
+  private final class PartitionStream(rdd: RDD[InternalRow], numFields: Int, readahead: Int)
+      extends Iterator[InternalRow] {
+    private val numPartitions = rdd.getNumPartitions
+    private val inFlight = mutable.Queue.empty[SimpleFutureAction[Array[Byte]]]
+    private var submitted = 0
+    private var rows: Iterator[InternalRow] = Iterator.empty
+
+    private def submit(): Unit =
+      while (submitted < numPartitions && inFlight.size <= readahead) {
+        var bytes: Array[Byte] = null
+        inFlight += rdd.sparkContext.submitJob(rdd, PartitionStream.encode,
+          Seq(submitted), (_: Int, b: Array[Byte]) => bytes = b, bytes)
+        submitted += 1
+      }
+
+    private def cancelAll(): Unit = {
+      submitted = numPartitions
+      inFlight.foreach(_.cancel())
+      inFlight.foreach(job => Await.ready(job, Duration.Inf))
+      inFlight.clear()
+    }
+
+    def hasNext: Boolean = {
+      while (!rows.hasNext && (inFlight.nonEmpty || submitted < numPartitions)) {
+        submit()
+        val bytes =
+          try Await.result(inFlight.head, Duration.Inf)
+          catch { case e: Throwable => cancelAll(); throw e }
+        inFlight.dequeue()
+        rows = PartitionStream.decode(bytes, numFields)
+      }
+      rows.hasNext
+    }
+
+    def next(): InternalRow = if (hasNext) rows.next() else Iterator.empty.next()
+  }
+
+  private object PartitionStream {
+    /** One partition's rows as `SparkPlan.getByteArrayRdd` writes them:
+      * each row's size, then its bytes, then -1. Runs in the task. */
+    val encode: Iterator[InternalRow] => Array[Byte] = { rows =>
+      val bytes = new ByteArrayOutputStream()
+      val out = new DataOutputStream(GraftShims.ioCodec().compressedOutputStream(bytes))
+      val buffer = new Array[Byte](4 << 10)
+      rows.foreach { r =>
+        val row = r.asInstanceOf[UnsafeRow]
+        out.writeInt(row.getSizeInBytes)
+        row.writeToStream(out, buffer)
+      }
+      out.writeInt(-1)
+      out.close()
+      bytes.toByteArray
+    }
+
+    def decode(bytes: Array[Byte], numFields: Int): Iterator[InternalRow] =
+      new Iterator[InternalRow] {
+        private val in = new DataInputStream(
+          GraftShims.ioCodec().compressedInputStream(new ByteArrayInputStream(bytes)))
+        private var nextSize = readSize()
+
+        /** The next row's size, or -1 (the stream then closed) past the last. */
+        private def readSize(): Int = {
+          val n = in.readInt()
+          if (n < 0) in.close()
+          n
+        }
+
+        def hasNext: Boolean = nextSize >= 0
+
+        def next(): InternalRow = {
+          if (nextSize < 0) Iterator.empty.next()
+          val buf = new Array[Byte](nextSize)
+          in.readFully(buf)
+          val row = new UnsafeRow(numFields)
+          row.pointTo(buf, buf.length)
+          nextSize = readSize()
+          row
+        }
+      }
+  }
+
+  /** The `InternalRow` → row-map pivot of one schema, planned once per
+    * stream: the distinct column names in order, the position each name
+    * reads (the last field of that name, as a dict assigned in field order
+    * keeps), and for each one the reader its type needs — struct → row map
+    * (through the struct's own pivot), array → `List`, map → `Map`, and
+    * every other value (map keys included) through Spark's converter to
+    * the external type the `Row` encoder gives it. */
+  private[sources] final class RowPivot private (schema: StructType)
+      extends (InternalRow => Map[String, Any]) with Serializable {
     private val columns = new Columns(schema.fieldNames.distinct)
     private val source = columns.names.map(schema.fieldNames.lastIndexOf(_))
-    // null where the value passes through unchanged
-    private val lowerings: Array[Any => Any] =
-      source.map(i => RowPivot.lowering(schema(i).dataType))
+    private val readers = source.map(i => RowPivot.reader(schema(i).dataType))
 
-    def apply(r: Row): Map[String, Any] = {
+    def apply(r: InternalRow): Map[String, Any] = {
       val values = new Array[Any](source.length)
       var i = 0
       while (i < values.length) {
-        val v = r.get(source(i))
-        val lower = lowerings(i)
-        values(i) = if (v == null || lower == null) v else lower(v)
+        values(i) = readers(i)(r, source(i))
         i += 1
       }
       new RowMap(columns, values)
     }
   }
 
-  private object RowPivot {
-    def lowering(t: DataType): Any => Any = t match {
+  private[sources] object RowPivot {
+    /** The pivot of `proj`'s rows. The external types of dates and
+      * timestamps (`java.sql` or `java.time`) follow the datetime-Java8
+      * setting of `proj`'s session, as its `Row` encoder's do. */
+    def apply(proj: DataFrame): RowPivot =
+      GraftShims.withConfOf(proj.sparkSession)(new RowPivot(proj.schema))
+
+    private type Reader = (SpecializedGetters, Int) => Any
+
+    private def reader(t: DataType): Reader = t match {
       case s: StructType =>
         val pivot = new RowPivot(s)
-        v => pivot(v.asInstanceOf[Row])
+        (g, i) => if (g.isNullAt(i)) null else pivot(g.getStruct(i, s.length))
       case ArrayType(et, _) =>
-        val lower = elementLowering(et)
-        v => v.asInstanceOf[scala.collection.Seq[Any]].iterator.map(lower).toList
-      case MapType(_, vt, _) =>
-        val lower = elementLowering(vt)
-        v => v.asInstanceOf[scala.collection.Map[Any, Any]].iterator
-          .map { case (k, x) => k -> lower(x) }.toMap
-      case _ => null
+        val element = reader(et)
+        (g, i) =>
+          if (g.isNullAt(i)) null
+          else {
+            val a = g.getArray(i)
+            List.tabulate(a.numElements())(element(a, _))
+          }
+      case MapType(kt, vt, _) =>
+        val key = leaf(kt)
+        val value = reader(vt)
+        (g, i) =>
+          if (g.isNullAt(i)) null
+          else {
+            val m = g.getMap(i)
+            val (ks, vs) = (m.keyArray(), m.valueArray())
+            Iterator.tabulate(m.numElements())(j => key(ks, j) -> value(vs, j)).toMap
+          }
+      case _ => leaf(t)
     }
 
-    private def elementLowering(t: DataType): Any => Any = {
-      val lower = lowering(t)
-      if (lower == null) identity else x => if (x == null) null else lower(x)
+    private def leaf(t: DataType): Reader = {
+      val get = InternalRow.getAccessor(t)
+      val toScala = CatalystTypeConverters.createToScalaConverter(t)
+      (g, i) => {
+        val v = get(g, i)
+        if (v == null) null else toScala(v)
+      }
     }
   }
 

@@ -56,6 +56,24 @@ class BenchOneSpec extends SharedSparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("a rows: run's line counts the jobs an independent listener saw") {
+    val started = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+    }
+    val name = "rows:lineitem:l_orderkey,l_returnflag"
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      BenchOne.runs(spark, name, sf001, 2).foreach { r =>
+        ListenerBusDrain(spark.sparkContext)
+        val seen = started.getAndSet(0)
+        assert(r.jobs == seen && seen > 0, s"$r: the listener saw $seen jobs")
+        assert(r.line.endsWith(s" rows/s, $seen jobs)"), r.line)
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("a rows: stream counts every row of its table") {
     val Seq(r) = BenchOne.runs(spark, "rows:lineitem:l_orderkey,l_returnflag", sf001, 1).toSeq
     assert(r.rows == spark.read.parquet(s"$sf001/lineitem.parquet").count())

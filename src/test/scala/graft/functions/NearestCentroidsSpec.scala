@@ -3,17 +3,17 @@ package graft.functions
 import graft.SharedSparkSpec
 import org.apache.spark.sql.functions._
 
-/** [[NearestCentroids]] over two-level models (q220/q231's k ∝ N
-  * blocking) must equal its local parity twin [[KMeansTrainer.probeLocal2]]
-  * on randomized two-level models (including EMPTY and under-filled cells)
-  * across a (p1, nprobe) grid, with interpreted eval == codegen; at
+/** [[NearestCentroids]] over both model shapes. Over two-level models
+  * (q220/q231's k ∝ N blocking) it must equal its local parity twin
+  * [[KMeansTrainer.probeLocal2]] on randomized two-level models (including
+  * EMPTY and under-filled cells) across a (p1, nprobe) grid, with interpreted eval == codegen; at
   * p1 = nprobe = 1 it must reduce to [[KMeansTrainer.assignLocal2]]
   * whenever the nearest L1 cell is non-empty, and tie distances must keep
   * the LOWER fine id regardless of which probed L1 cell contributed the
   * entry. Over FLAT models (the one-cell lift behind coarseBucket and
   * probeBuckets) it must equal [[KMeansTrainer.assignLocal]] at nprobe = 1
   * and probeLocal2 on the lift, ties and nprobe > k included. */
-class TwoLevelNearestCentroidsSpec extends SharedSparkSpec {
+class NearestCentroidsSpec extends SharedSparkSpec {
   import KMeansTrainer.{Trained, Trained2}
 
   private val Dim = 4
